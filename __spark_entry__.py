@@ -14,6 +14,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from getml_community_spark.operators.textstats import _spread
+
 SF_DEFAULT = "/root/testdata/sf0.001"
 
 _PYFILES_SENT: set[int] = set()
@@ -64,25 +66,6 @@ def _load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 def _r(col, n=6):
     return F.round(col, n)
-
-
-def _spread(df: DataFrame) -> DataFrame:
-    """Spread a narrow (few-partition) input across the cluster before
-    heavy per-row/per-group compute (optimization guide §2.5 input skew
-    / §6 small files): the driver testdata ships ONE parquet file with
-    ONE row group per table, so split-size configs cannot parallelize
-    the scan and the whole first stage (codec UDFs, percentile partial
-    aggs, shingle pipelines) runs on a single core of local[32].
-    Round-robin repartition to defaultParallelism; metadata no-op when
-    the input already has enough partitions (the normal case at scale,
-    where tables are many files). Results are order-independent: every
-    contract query aggregates with order-insensitive exact arithmetic
-    (integer sums / quantized micro-units), and the driver gate sorts
-    rows before hashing."""
-    target = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
-        return df.repartition(target)
-    return df
 
 
 # Orders span 1995-2001 while events span 2024-01, so a window keyed on
@@ -2075,7 +2058,8 @@ def _md5_tokens_arrow():
     in C computes the identical ids (same lowercase hex digest, same
     first-15-hex-chars → int → mod 65536 arithmetic, same [^a-z0-9]+
     split on lowered ASCII text). Used by the token-axis contract
-    queries whose downstream consumes a MATERIALIZED tokens column."""
+    queries whose downstream consumes a MATERIALIZED tokens column.
+    NULL text yields NULL tokens, as in ``word_tokens_arrow``."""
     if not _MD5_TOKENS_UDF:
         import hashlib
         import re
@@ -2089,7 +2073,9 @@ def _md5_tokens_arrow():
             md5, split = hashlib.md5, rx.split
             return pd.Series(
                 [
-                    [
+                    None
+                    if x is None
+                    else [
                         int(md5(w.encode()).hexdigest()[:15], 16) % 65536
                         for w in split(x.lower())
                         if w

@@ -94,8 +94,12 @@ def fastprop_features(
 
     Feature columns are named ``{agg}__{value_col}__{condition}``. All
     features compute in ONE groupBy over the match frame (single
-    shuffle); the result left-joins back onto the population so rows
-    with no matches keep count=0 / sum=0.0 / NULL.
+    shuffle). The match is a LEFT join, so population rows with no
+    matches keep count=0 / sum=0.0 / NULL. Requires ``population_id``
+    to uniquely identify population rows, as ``asof_features`` does:
+    rows sharing an id collapse into ONE output row whose features
+    aggregate all their matches, and non-id population columns are
+    carried as ``first()`` per group.
     """
     for a in aggs:
         if a not in FASTPROP_AGGS:

@@ -242,8 +242,11 @@ def _spread(df: DataFrame) -> DataFrame:
     The heavy expressions in this module (higher-order array lambdas,
     n-gram transforms) are interpreted, not codegen, so a single-file
     parquet scan would run them on ONE core (measured: 23 s for the
-    decontamination query at sf0.1 vs ~2 s spread). Metadata no-op when
-    the input already has enough partitions — the normal case at scale.
+    decontamination query at sf0.1 vs ~2 s spread). The contract file
+    spreads its single-file table scans with it for the same reason
+    (codec UDFs, percentile partial aggs). Metadata no-op when the input
+    already has enough partitions — the normal case at scale. Callers
+    must not depend on row order: the round-robin shuffle changes it.
     """
     target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:

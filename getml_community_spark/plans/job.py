@@ -24,16 +24,38 @@ per day comes from the same shuffle as the rollup itself.
 from __future__ import annotations
 
 import time
+from collections.abc import Callable
+from functools import partial
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..checkpoint import JobState, LineageLog, SnapshotTable
 from ..functions.gorilla import compress_rollup
+from ..operators.distinct import hll_cascade, hll_rollup_from_raw
 from ..operators.gapfill import gapfill
+from ..operators.histquantile import hist_cascade, hist_rollup_from_raw
 from ..operators.rollup import TIER_SECONDS, rollup_cascade, rollup_from_raw
 from .rollup_spec import RollupSpec
 
 __all__ = ["RollupJob"]
+
+
+class _Family(NamedTuple):
+    """One tier family: a table per tier, the base-tier rollup from raw
+    input and the cascade to each coarser tier. ``prefix`` ("" core,
+    "hist_", "dist_") names the family's lineage/state tiers and its
+    ``_all_tables`` keys."""
+
+    prefix: str
+    tables: dict
+    from_raw: Callable[[DataFrame, str], DataFrame]
+    cascade: Callable[[DataFrame, str], DataFrame]
+
+
+def _days(table: SnapshotTable) -> set[str]:
+    """Day partitions committed to ``table`` (manifest read, no scan)."""
+    return {p.get("day") for p in table.partitions() if p.get("day")}
 
 
 class RollupJob:
@@ -50,26 +72,57 @@ class RollupJob:
         self.input_path = input_path
         self.out_root = out_root
         self.job_id = job_id
-        self.tables = {
-            tier: SnapshotTable(f"{out_root}/agg_{tier}", partition_by=["day"])
-            for tier in spec.tiers
-        }
-        self.hist_tables = (
-            {
-                tier: SnapshotTable(f"{out_root}/hist_{tier}", partition_by=["day"])
-                for tier in spec.tiers
+
+        def tier_tables(kind: str) -> dict:
+            return {
+                t: SnapshotTable(f"{out_root}/{kind}_{t}", partition_by=["day"])
+                for t in spec.tiers
             }
-            if spec.hist_bin_width
-            else {}
-        )
-        self.dist_tables = (
-            {
-                tier: SnapshotTable(f"{out_root}/dist_{tier}", partition_by=["day"])
-                for tier in spec.tiers
-            }
-            if spec.distinct_col
-            else {}
-        )
+
+        # THE family registry: rolling, reconcile, re-roll deletes,
+        # retention and compaction all walk it (a family forgotten in one
+        # of those loops silently corrupts re-rolls). Core comes first.
+        cols = {"source_col": spec.source_col, "ts_col": spec.ts_col}
+        self._families = [
+            _Family(
+                "",
+                tier_tables("agg"),
+                partial(rollup_from_raw, value_col=spec.value_col, **cols),
+                rollup_cascade,
+            )
+        ]
+        if spec.hist_bin_width:
+            self._families.append(
+                _Family(
+                    "hist_",
+                    tier_tables("hist"),
+                    partial(
+                        hist_rollup_from_raw,
+                        value_col=spec.value_col,
+                        bin_width=spec.hist_bin_width,
+                        **cols,
+                    ),
+                    hist_cascade,
+                )
+            )
+        if spec.distinct_col:
+            self._families.append(
+                _Family(
+                    "dist_",
+                    tier_tables("dist"),
+                    partial(
+                        hll_rollup_from_raw,
+                        distinct_col=spec.distinct_col,
+                        lg_k=spec.hll_lg_k,
+                        **cols,
+                    ),
+                    hll_cascade,
+                )
+            )
+        by_prefix = {f.prefix: f.tables for f in self._families}
+        self.tables = by_prefix[""]
+        self.hist_tables = by_prefix.get("hist_", {})
+        self.dist_tables = by_prefix.get("dist_", {})
         self.segments = SnapshotTable(f"{out_root}/segments", partition_by=["day"])
         self.lineage = LineageLog(f"{out_root}/lineage")
         self.state = JobState(f"{out_root}/state")
@@ -247,20 +300,39 @@ class RollupJob:
             .collect()
         }
 
-    def _done_days(self, tier: str) -> set[str]:
-        table = self.tables[tier]
-        return {p.get("day") for p in table.partitions() if p.get("day")}
-
     def _all_tables(self) -> dict:
-        """Every table family this spec maintains, keyed by display name
-        — THE single source of truth for reconcile/delete/retention/
-        compaction loops (a family forgotten in one of those silently
-        corrupts re-rolls)."""
+        """Every table this spec maintains, keyed by display name (the
+        family prefix + tier, and ``segments``)."""
         return {
-            **dict(self.tables),
-            **{f"hist_{t}": tbl for t, tbl in self.hist_tables.items()},
-            **{f"dist_{t}": tbl for t, tbl in self.dist_tables.items()},
+            **{
+                f.prefix + t: tbl
+                for f in self._families
+                for t, tbl in f.tables.items()
+            },
             "segments": self.segments,
+        }
+
+    def _lineage_row(
+        self,
+        tier: str,
+        partition_id: str,
+        snapshot_id: str,
+        rows_in: int,
+        rows_out: int,
+        wall_seconds: float,
+        bytes_compressed: int = 0,
+    ) -> dict:
+        return {
+            "job_id": self.job_id,
+            "spec_hash": self.spec.spec_hash(),
+            "tier": tier,
+            "partition_id": partition_id,
+            "snapshot_id": snapshot_id,
+            "rows_in": rows_in,
+            "rows_out": rows_out,
+            "bytes_compressed": bytes_compressed,
+            "wall_seconds": wall_seconds,
+            "committed_at": time.time(),
         }
 
     def _tier_required(self, tier: str, day: str, frontier: str) -> bool:
@@ -297,39 +369,19 @@ class RollupJob:
         family included (a deliberate, complete backfill), days the
         input has rotated out are preserved as-is (the new family just
         never covers them)."""
-        tier_days = {t: self._done_days(t) for t in self.spec.tiers}
-        hist_days = {
-            t: {p.get("day") for p in tbl.partitions() if p.get("day")}
-            for t, tbl in self.hist_tables.items()
-        }
-        dist_days = {
-            t: {p.get("day") for p in tbl.partitions() if p.get("day")}
-            for t, tbl in self.dist_tables.items()
-        }
-        seg_days = {
-            p.get("day") for p in self.segments.partitions() if p.get("day")
-        }
-        present: set[str] = set().union(
-            seg_days, *tier_days.values(), *hist_days.values(), *dist_days.values()
-        )
+        days = {name: _days(tbl) for name, tbl in self._all_tables().items()}
+        present: set[str] = set().union(*days.values())
         if not present:
             return set()
         frontier = max(present)
         complete = {
             d
             for d in present
-            if d in seg_days
+            if d in days["segments"]
             and all(
-                d in tier_days[t] or not self._tier_required(t, d, frontier)
-                for t in self.spec.tiers
-            )
-            and all(
-                d in hist_days[t] or not self._tier_required(t, d, frontier)
-                for t in self.hist_tables
-            )
-            and all(
-                d in dist_days[t] or not self._tier_required(t, d, frontier)
-                for t in self.dist_tables
+                d in days[f.prefix + t] or not self._tier_required(t, d, frontier)
+                for f in self._families
+                for t in f.tables
             )
         }
         partial = present - complete
@@ -341,64 +393,67 @@ class RollupJob:
         return complete
 
     # ------------------------------------------------------------ #
-    def _maintain_family(
+    def _roll_family(
         self,
-        prefix: str,
-        tables: dict,
-        base_df: DataFrame,
-        cascade_fn,
+        family: _Family,
+        sel: DataFrame,
         pending: list,
         in_stats: dict,
         in_snap: str,
         lineage_rows: list,
-    ) -> None:
-        """Cascade one auxiliary tier family (hist/dist) through every
-        tier: cache → per-day row counts → append → lineage → mark,
-        releasing each tier's cache as soon as the next is materialized
-        (a long-lived driver otherwise accumulates block-manager
-        storage across run() calls — round-5 review)."""
+        keep_base: bool = False,
+    ) -> tuple[DataFrame, dict, str]:
+        """Roll one tier family over the pending days — the base tier from
+        raw (ONE Spark job for all pending days), then each coarser tier
+        cascaded from the tier below, kept to the pending days. Per tier:
+        cache → per-day row counts → append → lineage → mark, releasing
+        each tier's cache once the next one is appended (a long-lived
+        Spark driver otherwise accumulates block-manager storage across
+        run() calls). ``keep_base`` leaves the base tier cached for the
+        caller to release.
+
+        Lineage ``rows_in`` is the input rows per day for the base tier
+        and the source tier's ``rows_out`` for a cascaded one;
+        ``wall_seconds`` is the tier's count + append wall. Returns the
+        base tier, its per-day row counts and its snapshot id."""
         spec_hash = self.spec.spec_hash()
-        base_tier = self.spec.tiers[0]
-        cur = base_df.withColumn("day", F.to_date("bucket_start"))
-        prev = None
+        rows_in = {d: s[0] for d, s in in_stats.items()}
+        lower = base = None
         for tier in self.spec.tiers:
-            if tier != base_tier:
-                cur = cascade_fn(cur.drop("day"), tier).withColumn(
+            if lower is None:
+                cur = family.from_raw(sel, tier).withColumn(
+                    "day", F.to_date("bucket_start")
+                )
+            else:
+                cur = family.cascade(lower.drop("day"), tier).withColumn(
                     "day", F.to_date("bucket_start")
                 ).where(F.col("day").isin(pending))
             cur = cur.cache()
-            out = {
+            t0 = time.perf_counter()
+            rows_out = {
                 str(r["day"]): r["rows"]
                 for r in cur.groupBy("day")
                 .agg(F.count(F.lit(1)).alias("rows"))
                 .collect()
             }
-            snap = tables[tier].append(cur)
+            snap = family.tables[tier].append(cur)
+            wall = time.perf_counter() - t0
+            name = family.prefix + tier
             lineage_rows += [
-                {
-                    "job_id": self.job_id,
-                    "spec_hash": spec_hash,
-                    "tier": f"{prefix}_{tier}",
-                    "partition_id": d,
-                    "snapshot_id": snap,
-                    "rows_in": in_stats.get(d, (0, 0))[0]
-                    if tier == base_tier
-                    else 0,
-                    "rows_out": out.get(d, 0),
-                    "bytes_compressed": 0,
-                    "wall_seconds": 0.0,
-                    "committed_at": time.time(),
-                }
+                self._lineage_row(
+                    name, d, snap, rows_in.get(d, 0), rows_out.get(d, 0), wall
+                )
                 for d in pending
             ]
-            self.state.mark(
-                spec_hash, in_snap, [(f"{prefix}_{tier}", d) for d in pending]
-            )
-            if prev is not None:
-                prev.unpersist()
-            prev = cur
-        if prev is not None:
-            prev.unpersist()
+            self.state.mark(spec_hash, in_snap, [(name, d) for d in pending])
+            if lower is None:
+                base = (cur, rows_out, snap)
+            elif lower is not base[0] or not keep_base:
+                lower.unpersist()
+            lower, rows_in = cur, rows_out
+        if lower is not base[0] or not keep_base:
+            lower.unpersist()
+        return base
 
     def run(self, max_partitions: int | None = None) -> dict:
         """Process up to ``max_partitions`` pending input days (None =
@@ -512,109 +567,16 @@ class RollupJob:
             )
         summary["tokens_processed"] = int(sum(t for _, t in in_stats.values()))
 
-        # ---- tier 0 from raw (one Spark job for ALL pending days) ----
-        base_tier = spec.tiers[0]
-        agg = rollup_from_raw(
-            sel, base_tier, spec.source_col, spec.ts_col, spec.value_col
-        ).withColumn("day", F.to_date("bucket_start"))
-        agg = agg.cache()
-        out_stats = {
-            str(r["day"]): r["rows"]
-            for r in agg.groupBy("day").agg(F.count(F.lit(1)).alias("rows")).collect()
-        }
-        snap = self.tables[base_tier].append(agg)
-        lineage_rows = [
-            {
-                "job_id": self.job_id,
-                "spec_hash": spec_hash,
-                "tier": base_tier,
-                "partition_id": d,
-                "snapshot_id": snap,
-                "rows_in": in_stats.get(d, (0, 0))[0],
-                "rows_out": out_stats.get(d, 0),
-                "bytes_compressed": 0,
-                "wall_seconds": 0.0,
-                "committed_at": time.time(),
-            }
-            for d in pending
-        ]
-        self.state.mark(spec_hash, in_snap, [(base_tier, d) for d in pending])
-
-        # ---- cascade tiers (from the tier below, pending days only) ----
-        lower = agg
-        for tier in spec.tiers[1:]:
-            rolled = rollup_cascade(lower.drop("day"), tier).withColumn(
-                "day", F.to_date("bucket_start")
-            )
-            rolled = rolled.where(F.col("day").isin(pending)).cache()
-            t_out = {
-                str(r["day"]): r["rows"]
-                for r in rolled.groupBy("day").agg(F.count(F.lit(1)).alias("rows")).collect()
-            }
-            tsnap = self.tables[tier].append(rolled)
-            lineage_rows += [
-                {
-                    "job_id": self.job_id,
-                    "spec_hash": spec_hash,
-                    "tier": tier,
-                    "partition_id": d,
-                    "snapshot_id": tsnap,
-                    "rows_in": out_stats.get(d, 0),
-                    "rows_out": t_out.get(d, 0),
-                    "bytes_compressed": 0,
-                    "wall_seconds": 0.0,
-                    "committed_at": time.time(),
-                }
-                for d in pending
-            ]
-            self.state.mark(spec_hash, in_snap, [(tier, d) for d in pending])
-            if lower is not agg:
-                lower.unpersist()
-            lower = rolled
-        if lower is not agg:
-            lower.unpersist()
-
-        # ---- auxiliary tier families (hist / dist), when configured ----
-        if self.hist_tables:
-            from ..operators.histquantile import hist_cascade, hist_rollup_from_raw
-
-            self._maintain_family(
-                "hist",
-                self.hist_tables,
-                hist_rollup_from_raw(
-                    sel,
-                    base_tier,
-                    value_col=spec.value_col,
-                    bin_width=spec.hist_bin_width,
-                    source_col=spec.source_col,
-                    ts_col=spec.ts_col,
-                ),
-                hist_cascade,
-                pending,
-                in_stats,
-                in_snap,
-                lineage_rows,
-            )
-        if self.dist_tables:
-            from ..operators.distinct import hll_cascade, hll_rollup_from_raw
-
-            self._maintain_family(
-                "dist",
-                self.dist_tables,
-                hll_rollup_from_raw(
-                    sel,
-                    base_tier,
-                    distinct_col=spec.distinct_col,
-                    source_col=spec.source_col,
-                    ts_col=spec.ts_col,
-                    lg_k=spec.hll_lg_k,
-                ),
-                hll_cascade,
-                pending,
-                in_stats,
-                in_snap,
-                lineage_rows,
-            )
+        # ---- every tier family: core first, then hist / dist ----
+        # the core base tier stays cached until its Gorilla segments
+        # are appended
+        lineage_rows: list = []
+        core, *aux = self._families
+        agg, base_rows, snap = self._roll_family(
+            core, sel, pending, in_stats, in_snap, lineage_rows, keep_base=True
+        )
+        for family in aux:
+            self._roll_family(family, sel, pending, in_stats, in_snap, lineage_rows)
 
         # ---- Gorilla compression of the configured tier ----
         segs = compress_rollup(
@@ -624,6 +586,7 @@ class RollupJob:
             source_col="source",
             with_stats=spec.segment_stats,
         ).cache()
+        t_seg = time.perf_counter()
         seg_stats = {
             str(r["day"]): (r["n"], r["b"])
             for r in segs.groupBy("day")
@@ -631,19 +594,17 @@ class RollupJob:
             .collect()
         }
         ssnap = self.segments.append(segs)
+        t_seg = time.perf_counter() - t_seg
         lineage_rows += [
-            {
-                "job_id": self.job_id,
-                "spec_hash": spec_hash,
-                "tier": f"segments[{spec.compress_tier}]",
-                "partition_id": d,
-                "snapshot_id": ssnap,
-                "rows_in": out_stats.get(d, 0),
-                "rows_out": seg_stats.get(d, (0, 0))[0],
-                "bytes_compressed": int(seg_stats.get(d, (0, 0))[1] or 0),
-                "wall_seconds": 0.0,
-                "committed_at": time.time(),
-            }
+            self._lineage_row(
+                f"segments[{spec.compress_tier}]",
+                d,
+                ssnap,
+                base_rows.get(d, 0),
+                seg_stats.get(d, (0, 0))[0],
+                t_seg,
+                int(seg_stats.get(d, (0, 0))[1] or 0),
+            )
             for d in pending
         ]
         self.lineage.append(lineage_rows)
@@ -655,7 +616,7 @@ class RollupJob:
         self.apply_retention()
 
         summary["wall_seconds"] = time.time() - t0
-        summary["snapshot_ids"] = {base_tier: snap, "segments": ssnap}
+        summary["snapshot_ids"] = {spec.tiers[0]: snap, "segments": ssnap}
         return summary
 
     # ------------------------------------------------------------ #
@@ -668,17 +629,13 @@ class RollupJob:
         for tier, keep_s in (self.spec.retention_seconds or {}).items():
             if keep_s is None or tier not in self.tables:
                 continue
-            days = sorted(self._done_days(tier))
+            days = _days(self.tables[tier])
             if not days:
                 continue
             newest = dt.date.fromisoformat(max(days))
             cutoff = newest - dt.timedelta(seconds=keep_s)
-            for table in [
-                self.tables[tier],
-                *([self.hist_tables[tier]] if tier in self.hist_tables else []),
-                *([self.dist_tables[tier]] if tier in self.dist_tables else []),
-            ]:
-                table.delete_partitions(
+            for family in self._families:
+                family.tables[tier].delete_partitions(
                     lambda p: p.get("day")
                     and dt.date.fromisoformat(p["day"]) < cutoff
                 )
@@ -694,23 +651,19 @@ class RollupJob:
         resume sees either the old or the new layout, both complete."""
         reports, rows = {}, []
         for name, table in self._all_tables().items():
-            t0 = time.time()
+            t0 = time.perf_counter()
             rep = table.compact_partitions(self.spark, min_files=min_files)
             reports[name] = rep
             if rep["partitions"]:
                 rows.append(
-                    {
-                        "job_id": self.job_id,
-                        "spec_hash": self.spec.spec_hash(),
-                        "tier": f"compact[{name}]",
-                        "partition_id": f"{rep['partitions']} partitions",
-                        "snapshot_id": rep["snapshot"],
-                        "rows_in": rep["files_before"],
-                        "rows_out": rep["files_after"],
-                        "bytes_compressed": 0,
-                        "wall_seconds": time.time() - t0,
-                        "committed_at": time.time(),
-                    }
+                    self._lineage_row(
+                        f"compact[{name}]",
+                        f"{rep['partitions']} partitions",
+                        rep["snapshot"],
+                        rep["files_before"],
+                        rep["files_after"],
+                        time.perf_counter() - t0,
+                    )
                 )
         self.lineage.append(rows)
         return reports
@@ -815,7 +768,7 @@ class RollupJob:
         if realtime:
             from ..operators.rollup import rollup_from_raw
 
-            done = self._done_days(tier)
+            done = _days(self.tables[tier])
             inp = self._input()
             ts_epoch = F.col(self.spec.ts_col).cast("timestamp").cast("long")
             head = inp.where(

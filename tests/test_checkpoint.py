@@ -61,25 +61,57 @@ def test_resume_equals_single_run(spark, corpus_path, tmp_path):
     assert (sa_["data"].map(bytes) == sb_["data"].map(bytes)).all()
 
 
-def test_lineage_reconciles(spark, corpus_path, tmp_path):
-    out = str(tmp_path / "lin")
-    job, _ = _run_full(spark, corpus_path, out)
+@pytest.fixture(scope="module")
+def all_families_job(spark, corpus_path, tmp_path_factory):
+    """One full run with the core, hist and dist tier families on."""
+    out = str(tmp_path_factory.mktemp("lin") / "lin")
+    spec = RollupSpec(hist_bin_width=16.0, distinct_col="doc_id")
+    job = RollupJob(spark, spec, corpus_path, out)
+    job.run()
+    return job
+
+
+def test_lineage_reconciles(spark, corpus_path, all_families_job):
+    job = all_families_job
     lin = job.lineage.read_pandas()
     # Σ rows_in over 1m lineage == input rows
     rows_in = lin[lin["tier"] == "1m"]["rows_in"].sum()
     n_input = spark.read.parquet(corpus_path).count()
     assert rows_in == n_input
-    # per-tier rows_out equals table row counts
-    for tier in ("1m", "1h", "1d"):
-        assert (
-            lin[lin["tier"] == tier]["rows_out"].sum()
-            == job.read_tier(tier).count()
-        )
+    for prefix in ("", "hist_", "dist_"):
+        per_day = {
+            t: lin[lin["tier"] == prefix + t].set_index("partition_id")
+            for t in job.spec.tiers
+        }
+        # per-tier rows_out equals table row counts
+        tables = job._all_tables()
+        for t in job.spec.tiers:
+            n_rows = tables[prefix + t].read(spark).count()
+            assert per_day[t]["rows_out"].sum() == n_rows, prefix + t
+        # every cascaded tier's rows_in per day is the rows_out of the
+        # tier it was rolled from (1d from 1h, not from 1m)
+        for finer, coarser in zip(job.spec.tiers, job.spec.tiers[1:]):
+            src, dst = per_day[finer], per_day[coarser]
+            assert (dst["rows_in"] == src["rows_out"].reindex(dst.index)).all(), (
+                prefix + coarser
+            )
+        # base tiers of every family read the input rows
+        assert per_day["1m"]["rows_in"].sum() == n_input, prefix
     # segment lineage: bytes_compressed recorded and positive overall
     seg = lin[lin["tier"].str.startswith("segments")]
     assert seg["bytes_compressed"].sum() > 0
     # every lineage row carries a snapshot id
     assert lin["snapshot_id"].notna().all()
+
+
+def test_run_lineage_records_wall_seconds(all_families_job):
+    """Every lineage row run() writes (each family's tiers and the
+    segments) carries the tier's measured count + append wall."""
+    lin = all_families_job.lineage.read_pandas()
+    tiers = set(lin["tier"])
+    assert {"1d", "hist_1d", "dist_1d"} <= tiers
+    assert any(t.startswith("segments") for t in tiers)
+    assert (lin["wall_seconds"] > 0).all(), lin[lin["wall_seconds"] <= 0]
 
 
 def test_retention_expires_partitions(spark, corpus_path, tmp_path):

@@ -113,3 +113,16 @@ def test_rows_only_queries_run(spark, name):
 def test_entry_smoke(spark):
     df = entrymod.entry(spark)
     assert df.count() > 0
+
+
+def test_md5_tokens_arrow_null_text(spark):
+    """NULL text tokenizes to NULL (word_tokens_arrow's contract) instead
+    of failing the task."""
+    docs = spark.createDataFrame(
+        [(1, "Hello, world"), (2, None)], "doc_id long, text string"
+    )
+    rows = dict(
+        docs.select("doc_id", entrymod._md5_tokens_arrow().alias("t")).collect()
+    )
+    assert rows[2] is None
+    assert len(rows[1]) == 2

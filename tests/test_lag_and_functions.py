@@ -306,6 +306,41 @@ def test_fastprop_same_units_condition(spark):
     assert pdf.loc[1, "count__v__all"] == 5
 
 
+def test_population_id_uniqueness_contract(spark):
+    """asof_features and fastprop_features require a unique
+    population_id: rows sharing an id collapse into ONE output row whose
+    features aggregate all their matches, and match-less rows keep
+    count=0 / sum=0.0."""
+    from getml_community_spark.operators.asof_join import asof_features
+    from getml_community_spark.operators.fastprop import fastprop_features
+
+    # pid 1 twice: windows (500, 1000] and (700, 1200] hold 5 + 5 matches
+    pop = spark.createDataFrame(
+        [(1, 100, 1000.0), (1, 100, 1200.0), (2, 100, 1100.0), (3, 999, 1000.0)],
+        ["pid", "k", "t_pop"],
+    )
+    peri = spark.createDataFrame(
+        [(100, float(t), t / 100.0) for t in range(0, 1500, 100)], ["k", "t", "v"]
+    )
+    kw = dict(
+        on="k", population_id="pid", pop_ts="t_pop", peri_ts="t",
+        horizon=0.0, memory=500.0,
+    )
+    asof = asof_features(pop, peri, value_col="v", include={"count", "sum"}, **kw)
+    fp = fastprop_features(pop, peri, value_cols=["v"], aggs=("count", "sum"), **kw)
+    for out, count, total in (
+        (asof, "count", "sum"),
+        (fp, "count__v__all", "sum__v__all"),
+    ):
+        pdf = out.toPandas()
+        assert sorted(pdf["pid"]) == [1, 2, 3]
+        pdf = pdf.set_index("pid")
+        assert pdf.loc[1, count] == 10
+        assert pdf.loc[1, total] == pytest.approx(6 + 7 + 8 + 9 + 10 + 8 + 9 + 10 + 11 + 12)
+        assert pdf.loc[3, count] == 0
+        assert pdf.loc[3, total] == 0.0
+
+
 def test_fastprop_pipeline_fit_transform_to_sql(spark):
     """The reference's Pipeline UX: fit (enumerate + sampled-R2 select),
     transform (new data, fitted features only), to_sql (portable SQL per
