@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from getml_community_spark.operators.textstats import _spread
+from getml_community_spark.operators.tokenize import SHINGLE, split_expr
 
 SF_DEFAULT = "/root/testdata/sf0.001"
 
@@ -193,17 +194,16 @@ def q_distinct_hll_1h(spark, sf):
 def q_exactsubstr_spans(spark, sf):
     """ExactSubstr duplicated-span detection (Lee et al. 2021,
     operators/dedup.duplicated_token_spans) over the documents table:
-    word-tokenize with the shared [^a-z0-9]+ split, flag maximal token
+    word-tokenize with the shared SHINGLE split, flag maximal token
     ranges whose every 10-gram occurs >= 2 times corpus-wide. The
     oracle replays window-hash counting + gaps-and-islands in DuckDB
     over the same gram strings."""
     from getml_community_spark.operators.dedup import duplicated_token_spans
-    from getml_community_spark.operators.textstats import word_tokens_arrow
+    from getml_community_spark.operators.tokenize import words_arrow
 
     docs = _spread(_load(spark, sf, "documents"))
-    # Arrow tokenizer (guide §4.2) — same [^a-z0-9]+ split class as the
-    # oracle, C-regex instead of the interpreted JVM split+filter
-    toks = word_tokens_arrow(F.col("text"), r"[^a-z0-9]+")
+    # Arrow tokenizer (guide §4.2) — same split class as the oracle
+    toks = words_arrow(F.col("text"), SHINGLE)
     df = docs.select("doc_id", toks.alias("tokens"))
     spans = duplicated_token_spans(df, k=10)
     return spans.select(
@@ -332,9 +332,11 @@ def q_battery_1h(spark, sf):
     buffer PER DISTINCT VALUE (≈ per event on continuous doubles —
     measured 4.9 s vs 2.9 s without the distinct at sf1-shape). The
     standalone distinct branch plans as two cheap codegen hash
-    aggregates; the join keys equal both aggs' grouping keys, so no
-    extra exchange. Values are identical: same clean() input, same
-    count_distinct arithmetic, inner join on the identical group set."""
+    aggregates. Values are identical: same clean() input, same
+    count_distinct arithmetic, inner join on the identical group set.
+    The join is null-safe on both keys: a plain equi-join would drop
+    the groups whose user_id or bucket is NULL, which the single-agg
+    battery keeps."""
     from getml_community_spark.operators.aggregates import battery, clean
 
     ev = _spread(_load(spark, sf, "events"))
@@ -354,12 +356,16 @@ def q_battery_1h(spark, sf):
         },
     )
     main = ev.groupBy(F.col("user_id"), bucket.alias("bucket_start")).agg(*aggs)
-    cd = ev.groupBy(F.col("user_id"), bucket.alias("bucket_start")).agg(
+    cd = ev.groupBy(F.col("user_id").alias("__u"), bucket.alias("__b")).agg(
         F.count_distinct(clean(F.col("value"))).cast("double").alias(
             "count_distinct"
         )
     )
-    out = main.join(cd, ["user_id", "bucket_start"])
+    out = main.join(
+        cd,
+        F.col("user_id").eqNullSafe(F.col("__u"))
+        & F.col("bucket_start").eqNullSafe(F.col("__b")),
+    )
     # column order must stay byte-identical to the single-agg battery's
     # emission order (driver gate is column-order sensitive):
     # count_distinct sits between stddev_pop and first
@@ -624,16 +630,14 @@ def q_word_features(spark, sf):
     WordIndex, fastprop/Aggregator.cpp:371-414): for the top-10
     vocabulary words, per source: number of documents containing the
     word."""
-    from getml_community_spark.operators.textstats import (
-        vocabulary,
-        word_tokens_arrow,
-    )
+    from getml_community_spark.operators.textstats import vocabulary
+    from getml_community_spark.operators.tokenize import words_arrow
 
     docs = _load(spark, sf, "documents")
     top = [r["word"] for r in vocabulary(docs, "text", min_df=1, max_size=10).collect()]
     tokens = _spread(docs).select(
         "source",
-        F.explode(F.array_distinct(word_tokens_arrow(F.col("text")))).alias("word"),
+        F.explode(F.array_distinct(words_arrow(F.col("text")))).alias("word"),
     )
     return (
         tokens.where(F.col("word").isin(top))
@@ -1479,14 +1483,14 @@ def q_pack_stats(spark, sf):
     from span algebra: a piece starting 0-based at p0 in its chunk
     contributes p0·Σlen + Σ j·len(w_j)."""
     from getml_community_spark.operators.packing import pack_sequences
-    from getml_community_spark.operators.textstats import word_tokens_arrow
+    from getml_community_spark.operators.tokenize import words_arrow
 
     docs = _spread(_load(spark, sf, "documents"))
     toks = docs.select(
         "doc_id",
         "source",
         F.transform(
-            word_tokens_arrow(F.col("text")), lambda w: F.length(w).cast("int")
+            words_arrow(F.col("text")), lambda w: F.length(w).cast("int")
         ).alias("tokens"),
     )
     packed = pack_sequences(toks, 128)
@@ -2030,65 +2034,18 @@ def q_minhash_dedup(spark, sf):
     ).select("doc_id", "source")
 
 
-def _md5_tokens_expr():
-    """Deterministic token-ID sequence derived from `text`: md5-60 word
-    hash (reproducible in DuckDB SQL, unlike xxhash64) mod a 65536
-    vocab. The testdata has no tokens column, so token-axis contract
-    queries tokenize with this shim — the operators themselves never
-    touch text (production input is the pre-tokenized table,
-    input_hint)."""
-    words = F.filter(
-        F.split(F.lower(F.col("text")), r"[^a-z0-9]+"), lambda w: w != ""
-    )
+def _md5_tokens_expr(text):
+    """JVM twin of ``tokenize.md5_token_ids_arrow`` (md5-60 word hash
+    mod a 65536 vocab), kept for its one caller, q_token_chunks: the
+    Arrow form is gate-identical there but measured slower (sf0.1, 4
+    cores: best 0.67-0.80 s vs 0.50-0.52 s)."""
     return F.transform(
-        words,
+        split_expr(text, SHINGLE),
         lambda w: (
             F.conv(F.substring(F.md5(w), 1, 15), 16, 10).cast("long")
             % F.lit(65536)
         ).cast("int"),
     )
-
-
-_MD5_TOKENS_UDF = []
-
-
-def _md5_tokens_arrow():
-    """Arrow-batched `_md5_tokens_expr` (optimization guide §4.2): the
-    JVM form runs an interpreted per-word md5+conv chain; hashlib.md5
-    in C computes the identical ids (same lowercase hex digest, same
-    first-15-hex-chars → int → mod 65536 arithmetic, same [^a-z0-9]+
-    split on lowered ASCII text). Used by the token-axis contract
-    queries whose downstream consumes a MATERIALIZED tokens column.
-    NULL text yields NULL tokens, as in ``word_tokens_arrow``."""
-    if not _MD5_TOKENS_UDF:
-        import hashlib
-        import re
-
-        import pandas as pd
-        from pyspark.sql.functions import pandas_udf
-
-        rx = re.compile(r"[^a-z0-9]+")
-
-        def _tok(s):
-            md5, split = hashlib.md5, rx.split
-            return pd.Series(
-                [
-                    None
-                    if x is None
-                    else [
-                        int(md5(w.encode()).hexdigest()[:15], 16) % 65536
-                        for w in split(x.lower())
-                        if w
-                    ]
-                    for x in s
-                ]
-            )
-
-        _tok.__annotations__ = {"s": pd.Series, "return": pd.Series}
-        _MD5_TOKENS_UDF.append(
-            pandas_udf(_tok, "array<int>").asNondeterministic()
-        )
-    return _MD5_TOKENS_UDF[0](F.col("text"))
 
 
 def q_token_neardup(spark, sf):
@@ -2098,12 +2055,13 @@ def q_token_neardup(spark, sf):
     Jaccard, so the oracle is all-pairs Jaccard over the same shingle
     sets in DuckDB (P(miss) for a true >=0.8 pair ~ 5e-8)."""
     from getml_community_spark.operators.dedup import token_minhash_pairs
+    from getml_community_spark.operators.tokenize import md5_token_ids_arrow
 
     # spread HERE, not just inside the operator: the exact-rescore
     # branch re-derives shingles from this frame, and a single-file scan
     # would run that (interpreted) pipeline on one core
     docs = _spread(_load(spark, sf, "documents"))
-    df = docs.select("doc_id", _md5_tokens_arrow().alias("tokens"))
+    df = docs.select("doc_id", md5_token_ids_arrow(F.col("text")).alias("tokens"))
     # max_bucket_size=None: uncapped — the oracle is all-pairs
     pairs = token_minhash_pairs(
         df, "tokens", "doc_id", shingle_n=8, max_bucket_size=None
@@ -2124,7 +2082,7 @@ def q_token_chunks(spark, sf):
     from getml_community_spark.operators.packing import chunk_tokens
 
     docs = _spread(_load(spark, sf, "documents"))
-    df = docs.select("doc_id", _md5_tokens_expr().alias("tokens"))
+    df = docs.select("doc_id", _md5_tokens_expr(F.col("text")).alias("tokens"))
     ch = chunk_tokens(df, size=64, stride=48, min_tokens=8)
     return ch.select(
         "doc_id",
@@ -2183,10 +2141,7 @@ def q_simhash_pairs(spark, sf):
     from getml_community_spark.operators.dedup import simhash_pairs
 
     docs = _load(spark, sf, "documents")
-    toks = F.filter(
-        F.split(F.lower(F.col("text")), r"[^a-z0-9]+"), lambda w: w != ""
-    )
-    docs = docs.where(F.size(toks) > 0)
+    docs = docs.where(F.size(split_expr(F.col("text"), SHINGLE)) > 0)
     # max_bucket_size=None: the oracle is uncapped all-pairs hamming —
     # the production cap default would break the "output EQUALS
     # all-pairs" claim at larger SFs.

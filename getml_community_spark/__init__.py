@@ -31,7 +31,10 @@ operators        rollup tiers (+ rollup_to_step/choose_tier), gap-fill,
                  token-budget/stratified sampling, sessionization,
                  seasonal decomposition, CUSUM change-points, SAX words,
                  LTTB/M4 downsampling, corpus cleaning, multimodal
-                 codecs (BMP/PNG/JPEG/WAV) + plumbing, skew tools
+                 codecs (BMP/PNG/JPEG/WAV) + plumbing, skew tools;
+                 tokenize — the one word split (JVM expression + Arrow
+                 UDF boundary, one NULL contract) every text operator
+                 uses
 functions        scalar expression surface, Gorilla numpy kernels, preprocessors
 sources          readers/writers (csv/parquet/json/orc/jdbc; snapshot tables)
 streaming        structured-streaming 1m tier (+ histogram tier, counter

@@ -110,10 +110,9 @@ def split_text_fields(df: DataFrame, col: str, id_col: str) -> DataFrame:
     """TextFieldSplitter: text → one row per word
     (src/engine/src/engine/TextFieldSplitter.cpp) — the input to the
     reference's Vocabulary/WordIndex (textmining/Vocabulary.hpp:31-46).
-    Splitting: non-alphanumeric separators, lower-cased."""
-    words = F.explode(
-        F.filter(
-            F.split(F.lower(F.col(col)), r"[^\p{L}\p{N}]+"), lambda w: w != ""
-        )
-    )
+    Splitting: non-alphanumeric separators (the unicode form of the
+    SHINGLE class), lower-cased."""
+    from ..operators.tokenize import SHINGLE, split_expr
+
+    words = F.explode(split_expr(F.col(col), SHINGLE, "unicode"))
     return df.select(F.col(id_col), words.alias("word"))

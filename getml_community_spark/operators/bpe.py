@@ -9,8 +9,8 @@ bounded by VOCABULARY size, not corpus size (Heaps' law — and a hard
 where the merge loop runs on (word, count) pairs — pure python over at
 most ``max_words`` entries, never over the corpus. Applying the
 trained merges is a broadcast of the (small) merge ranks into an
-Arrow-batched pandas UDF with a per-batch word cache: each DISTINCT
-word is segmented once per batch regardless of how often it repeats.
+Arrow-batched pandas UDF with a per-task word cache: each DISTINCT
+word is segmented once per task regardless of how often it repeats.
 
 Determinism: merge selection breaks count ties lexicographically on
 the pair, so the same corpus always yields the same merge table — the
@@ -20,6 +20,8 @@ property every reproducible-data-pipeline invariant here relies on.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
+
+from .tokenize import arrow_udf, words_arrow
 
 __all__ = ["train_bpe", "apply_bpe", "apply_bpe_ids", "bpe_vocab", "bpe_segment_word"]
 
@@ -115,14 +117,13 @@ def train_bpe(
     max_words: int = 100_000,
 ) -> list[tuple[str, str]]:
     """Train BPE merges over a corpus: ONE distributed word-count scan
-    (lower-cased ``[^a-z0-9']+`` split, the package tokenizer), the
-    top-``max_words`` words by (count desc, word asc) collected to the
-    driver — a BOUNDED collect, cap enforced — then the merge loop on
-    that table. Returns the ordered merge list."""
-    from .textstats import word_tokens
-
+    (the package's :data:`~.tokenize.WORD` split, the one
+    :func:`apply_bpe` uses), the top-``max_words`` words by (count
+    desc, word asc) collected to the driver — a BOUNDED collect, cap
+    enforced — then the merge loop on that table. Returns the ordered
+    merge list."""
     counts = (
-        df.select(F.explode(word_tokens(F.col(text_col))).alias("w"))
+        df.select(F.explode(words_arrow(F.col(text_col))).alias("w"))
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("c"))
         .orderBy(F.desc("c"), F.asc("w"))
@@ -130,6 +131,25 @@ def train_bpe(
         .collect()
     )
     return train_bpe_from_counts({r["w"]: r["c"] for r in counts}, num_merges)
+
+
+def _bpe_udf(merges: list[tuple[str, str]], encode, return_type: str):
+    """Arrow tokenizer UDF mapping each word to ``encode(pieces)``. The
+    per-word cache lives in the kernel, so each task segments each
+    DISTINCT word once regardless of how often it repeats."""
+    ranks = {tuple(p): i for i, p in enumerate(merges)}
+    cache: dict = {}
+
+    def seg(words):
+        out = []
+        for w in words:
+            got = cache.get(w)
+            if got is None:
+                got = cache[w] = encode(bpe_segment_word(w, ranks))
+            out.extend(got)
+        return out
+
+    return arrow_udf(seg, return_type)
 
 
 def apply_bpe(
@@ -140,36 +160,11 @@ def apply_bpe(
 ) -> DataFrame:
     """Tokenize ``text_col`` into BPE pieces (array<string>) with the
     trained merges. The merge-rank dict broadcasts inside an
-    Arrow-batched pandas UDF; a per-batch cache segments each distinct
+    Arrow-batched pandas UDF; a per-task cache segments each distinct
     word once. Map-only — zero shuffles; at 10^12 rows this pipelines
     with the scan like every other map-side curation pass."""
-    from pyspark.sql.functions import pandas_udf
-
-    ranks = {tuple(p): i for i, p in enumerate(merges)}
-
-    @pandas_udf("array<string>")
-    def _bpe(texts):
-        import re
-
-        tok = re.compile(r"[^a-z0-9']+")
-        cache: dict[str, list[str]] = {}
-
-        def seg(text):
-            if text is None:
-                return None
-            out = []
-            for w in tok.split(text.lower()):
-                if not w:
-                    continue
-                got = cache.get(w)
-                if got is None:
-                    got = cache[w] = bpe_segment_word(w, ranks)
-                out.extend(got)
-            return out
-
-        return texts.map(seg)
-
-    return df.withColumn(out_col, _bpe(F.col(text_col)))
+    udf = _bpe_udf(merges, lambda pieces: pieces, "array<string>")
+    return df.withColumn(out_col, udf(F.col(text_col)))
 
 
 def bpe_vocab(merges: list[tuple[str, str]]) -> dict[str, int]:
@@ -202,34 +197,8 @@ def apply_bpe_ids(
     outside the vocab (characters never seen in any merge — possible on
     unseen text) map to ``unk_id``. Same map-only Arrow-batched shape
     as :func:`apply_bpe`."""
-    from pyspark.sql.functions import pandas_udf
-
-    ranks = {tuple(p): i for i, p in enumerate(merges)}
     vocab = bpe_vocab(merges)
-
-    @pandas_udf("array<int>")
-    def _ids(texts):
-        import re
-
-        tok = re.compile(r"[^a-z0-9']+")
-        cache: dict[str, list[int]] = {}
-
-        def seg(text):
-            if text is None:
-                return None
-            out = []
-            for w in tok.split(text.lower()):
-                if not w:
-                    continue
-                got = cache.get(w)
-                if got is None:
-                    got = cache[w] = [
-                        vocab.get(p, unk_id)
-                        for p in bpe_segment_word(w, ranks)
-                    ]
-                out.extend(got)
-            return out
-
-        return texts.map(seg)
-
-    return df.withColumn(out_col, _ids(F.col(text_col)))
+    udf = _bpe_udf(
+        merges, lambda pieces: [vocab.get(p, unk_id) for p in pieces], "array<int>"
+    )
+    return df.withColumn(out_col, udf(F.col(text_col)))

@@ -1,9 +1,15 @@
 """Deduplication operators for training-data pipelines.
 
 Beyond the reference's surface (it has no dedup), but first-class for a
-100 TB corpus engine. All JVM-side expressions; the only shuffles are
-the ones the algorithms fundamentally need (hash-group on dedup key /
-band-bucket join for LSH).
+100 TB corpus engine. Text is tokenized through :mod:`.tokenize`, the
+Arrow boundary (verified-pair shingles, md5 simhash); the JVM split
+survives only where a word list feeds a pandas-UDF argument
+(:func:`shingles`, xxhash64 :func:`simhash`). The signature and
+fingerprint votes are vectorized pandas UDFs; the rest is JVM
+expressions. The only shuffles are the ones the algorithms
+fundamentally need (hash-group on dedup key / band-bucket join for
+LSH). NULL text is never a candidate: it has NULL shingles and
+fingerprints, and the pair operators drop it before banding.
 
 - exact_dedup:      hash-groupBy on content hash, keep one winner
 - minhash_lsh:      shingles → minhash signature → banded buckets →
@@ -24,6 +30,9 @@ barrier semantics, replicated blocks).
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
+
+from .textstats import _spread
+from .tokenize import SHINGLE, arrow_udf, md5_60, shingles_arrow, split_expr
 
 __all__ = [
     "exact_dedup",
@@ -95,15 +104,15 @@ def exact_dedup(
     )
 
 
-# Shingle split classes — pinned ASCII by default so the DuckDB oracle
-# (string_split_regex '[^a-z0-9]+') tokenizes identically (round-1
-# ADVICE: a Unicode class on one side silently diverges on non-ASCII).
-_SHINGLE_SPLIT = {"ascii": r"[^a-z0-9]+", "unicode": r"[^\p{L}\p{N}]+"}
-
-
 def shingles(text: Column, n: int = 5, charset: str = "ascii") -> Column:
     """Word n-gram shingle set (array<string>) — JVM-side: split, slide,
-    concat. Empty/short docs yield the whole-doc shingle.
+    concat. Empty/short docs yield the whole-doc shingle; NULL text
+    yields NULL. :func:`~.tokenize.shingles_arrow` is the Arrow twin.
+
+    Kept in the JVM for its callers: :func:`minhash_lsh_pairs`' text
+    path, where the set feeds the signature pandas UDF's argument, and
+    the :func:`ngram_jaccard` Column builder; also the
+    ``charset="unicode"`` route.
 
     Deliberately the PLAIN inline form, NOT the let-binding
     (element_at(transform(array(words), ...), 1)) textstats._let uses:
@@ -112,70 +121,20 @@ def shingles(text: Column, n: int = 5, charset: str = "ascii") -> Column:
     extraction intermittently fail on re-executed plans
     ([INTERNAL_ERROR] Cannot evaluate _sig(...) — reproduced on the
     second noop-write of the same query). Subexpression elimination
-    handles this class correctly for the `[^a-z0-9]+` split, so the
+    handles this class correctly for the SHINGLE split, so the
     per-element re-evaluation pathology the let-binding guards against
     does not occur here (measured: 0.4 s at sf0.1, same as let-bound)."""
-    words = F.filter(F.split(F.lower(text), _SHINGLE_SPLIT[charset]), lambda w: w != "")
+    words = split_expr(text, SHINGLE, charset)
     k = F.greatest(F.size(words) - F.lit(n - 1), F.lit(1))
     idx = F.sequence(F.lit(0), k - 1)
-    return F.array_distinct(
-        F.transform(idx, lambda i: F.concat_ws(" ", F.slice(words, i + 1, F.lit(n))))
+    return F.when(
+        text.isNotNull(),
+        F.array_distinct(
+            F.transform(
+                idx, lambda i: F.concat_ws(" ", F.slice(words, i + 1, F.lit(n)))
+            )
+        ),
     )
-
-
-_SHINGLE_UDFS: dict = {}
-
-
-def shingles_arrow(text, n: int = 5, charset: str = "ascii") -> Column:
-    """Arrow-batched :func:`shingles`: tokenize (C regex) + slide +
-    join + first-occurrence dedup in the Python worker (guide §4.2 —
-    the JVM split/transform/concat_ws pipeline is interpreted and
-    measured ~2.3 s alone at sf1-shape). Byte-identical on ASCII input:
-    same split class, ' '-joined n-grams, dict.fromkeys == the JVM
-    array_distinct first-occurrence order, and the same whole-doc
-    shingle for short docs (F.slice past the end == python slicing).
-
-    ONLY safe where the output lands in a materialized column (e.g.
-    the verified-pairs shingle checkpoint) — feeding it straight into
-    another pandas UDF's argument expression risks the PythonUDF
-    extraction failure documented on :func:`shingles`.
-    """
-    key = (n, charset)
-    udf = _SHINGLE_UDFS.get(key)
-    if udf is None:
-        import re
-
-        import pandas as pd
-        from pyspark.sql.functions import pandas_udf
-
-        if charset != "ascii":
-            # the JVM \p{L}\p{N} class has no exact Python-re analogue;
-            # non-ASCII corpora keep the JVM shingle pipeline
-            raise ValueError("shingles_arrow supports charset='ascii' only")
-        rx = re.compile(_SHINGLE_SPLIT["ascii"])
-
-        def _sh(s):
-            split = rx.split
-            out = []
-            for x in s:
-                if x is None:
-                    out.append(None)
-                    continue
-                w = [t for t in split(x.lower()) if t]
-                k = max(len(w) - (n - 1), 1)
-                out.append(
-                    list(
-                        dict.fromkeys(
-                            " ".join(w[i : i + n]) for i in range(k)
-                        )
-                    )
-                )
-            return pd.Series(out)
-
-        _sh.__annotations__ = {"s": pd.Series, "return": pd.Series}
-        udf = pandas_udf(_sh, "array<string>").asNondeterministic()
-        _SHINGLE_UDFS[key] = udf
-    return udf(text)
 
 
 def _hash_family(col: Column, seed: int) -> Column:
@@ -300,21 +259,18 @@ def minhash_lsh_pairs(
     """
     rows_per_band = num_hashes // bands
     # The shingle pipeline is interpreted (higher-order array functions
-    # don't codegen): spread a narrow input across the cluster first —
-    # metadata no-op when the corpus already has >= default parallelism
-    # partitions (the normal case at scale).
-    spark = df.sparkSession
-    target = spark.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
-        df = df.repartition(target)
+    # don't codegen): spread a narrow input across the cluster first.
+    df = _spread(df)
     # shingle_expr overrides the text-derived shingle set (e.g.
     # token_shingles over int-ID sequences) — the rest of the pipeline
-    # is payload-agnostic
-    sh = (
-        shingle_expr
-        if shingle_expr is not None
-        else shingles(F.col(text_col), shingle_n)
-    )
+    # is payload-agnostic. NULL text has NULL shingles: no signature,
+    # never a candidate — drop it before banding.
+    if shingle_expr is not None:
+        sh = shingle_expr
+        df = df.where(sh.isNotNull())
+    else:
+        sh = shingles(F.col(text_col), shingle_n)
+        df = df.where(F.col(text_col).isNotNull())
     sig = minhash_signature(sh, num_hashes)
     # Materialize the signature matrix ONCE — per doc, not per band. The
     # self-join's branches do NOT share the signature subtree (no
@@ -403,20 +359,23 @@ def token_shingles(tokens: Column, n: int = 8) -> Column:
     """Shingle set over a TOKEN-ID array (the corpus's native payload,
     input_hint: tokens array<int32>): distinct windows of ``n``
     consecutive ids rendered as compact strings for hashing — all JVM
-    array ops. Short/empty sequences yield the whole-sequence shingle,
-    mirroring :func:`shingles`."""
+    array ops. Short/empty sequences yield the whole-sequence shingle
+    and NULL yields NULL, mirroring :func:`shingles`."""
     k = F.greatest(F.size(tokens) - F.lit(n - 1), F.lit(1))
     idx = F.sequence(F.lit(0), k - 1)
-    return F.array_distinct(
-        F.transform(
-            idx,
-            lambda i: F.concat_ws(
-                ",",
-                F.transform(
-                    F.slice(tokens, i + 1, F.lit(n)), lambda t: t.cast("string")
+    return F.when(
+        tokens.isNotNull(),
+        F.array_distinct(
+            F.transform(
+                idx,
+                lambda i: F.concat_ws(
+                    ",",
+                    F.transform(
+                        F.slice(tokens, i + 1, F.lit(n)), lambda t: t.cast("string")
+                    ),
                 ),
-            ),
-        )
+            )
+        ),
     )
 
 
@@ -561,10 +520,7 @@ def duplicated_token_spans(
         toks_int = F.transform(toks, lambda t: F.xxhash64(t))
     else:
         toks_int = F.transform(toks, lambda t: t.cast("long"))
-    spark = df.sparkSession
-    target = spark.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
-        df = df.repartition(target)  # spread the (interpreted) tokenize
+    df = _spread(df)  # spread the (interpreted) tokenize
     pos = (
         df.where(F.size(toks) >= k)
         .select(
@@ -645,10 +601,7 @@ def minhash_lsh_pairs_verified(
     # old shape re-tokenized the raw text per candidate pair (a doc in k
     # pairs shingled k+1 times; the token path, dedup.py:385, already
     # worked this way). Same arrays → identical jaccard values.
-    spark = df.sparkSession
-    target = spark.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
-        df = df.repartition(target)  # spread the interpreted shingle pass
+    df = _spread(df)  # spread the shingle pass
     sh_tbl = df.select(
         F.col(id_col).alias("id"),
         shingles_arrow(F.col(text_col), shingle_n).alias("__sh"),
@@ -662,7 +615,7 @@ def minhash_lsh_pairs_verified(
     joined = cand.join(ta, "id_a").join(tb, "id_b")
     # Spread the candidate pairs BEFORE the per-pair set ops: AQE
     # coalesces the small candidate frame to one partition otherwise.
-    joined = joined.repartition(target)
+    joined = joined.repartition(df.sparkSession.sparkContext.defaultParallelism)
     inter = F.size(F.array_intersect("__sh_a", "__sh_b")).cast("double")
     union = F.size(F.array_union("__sh_a", "__sh_b")).cast("double")
     out = joined.select(
@@ -729,102 +682,69 @@ def minhash_lsh_dedup(
     return df.join(losers, id_col, "left_anti")
 
 
-_SIMHASH_MD5_UDFS: dict = {}
+def _vote(h, shifts, weights) -> int:
+    """SimHash majority vote over one document's uint64 token hashes:
+    bit b is set iff 2 * (#tokens with bit b set) > n. No tokens → 0."""
+    import numpy as np
 
-
-def _simhash_md5_udf(num_bits: int):
-    """text → simhash fingerprint with md5-60 token hashes, one Arrow
-    pass (tokenize + hash + vote). See :func:`simhash`."""
-    udf = _SIMHASH_MD5_UDFS.get(num_bits)
-    if udf is None:
-        import hashlib
-        import re
-
-        import numpy as np
-        import pandas as pd
-        from pyspark.sql.functions import pandas_udf
-
-        rx = re.compile(_SHINGLE_SPLIT["ascii"])
-        shifts = np.arange(num_bits, dtype=np.uint64)
-        weights = np.uint64(1) << shifts
-
-        def _fp(s):
-            md5, split = hashlib.md5, rx.split
-            out = np.zeros(len(s), dtype=np.uint64)
-            for i, x in enumerate(s):
-                if x is None:
-                    continue
-                h = np.fromiter(
-                    (
-                        int(md5(t.encode()).hexdigest()[:15], 16)
-                        for t in split(x.lower())
-                        if t
-                    ),
-                    dtype=np.uint64,
-                )
-                if len(h) == 0:
-                    continue
-                set_cnt = ((h[:, None] >> shifts[None, :]) & np.uint64(1)).sum(
-                    axis=0
-                )
-                out[i] = ((2 * set_cnt > len(h)) * weights).sum()
-            return pd.Series(out.view(np.int64))
-
-        _fp.__annotations__ = {"s": pd.Series, "return": pd.Series}
-        udf = pandas_udf(_fp, "long").asNondeterministic()
-        _SIMHASH_MD5_UDFS[num_bits] = udf
-    return udf
+    if len(h) == 0:
+        return 0
+    set_cnt = ((h[:, None] >> shifts[None, :]) & np.uint64(1)).sum(axis=0)
+    return int(((2 * set_cnt > len(h)) * weights).sum().view(np.int64))
 
 
 def simhash(text: Column, num_bits: int = 64, token_hash: str = "xxhash64") -> Column:
-    """SimHash fingerprint: sign-sum of per-token hash bits.
+    """SimHash fingerprint: sign-sum of per-token hash bits. NULL text
+    yields NULL; text with no token yields 0.
 
-    ONE JVM hash pass per token (xxhash64 or md5), then a vectorized
-    pandas UDF takes the per-bit majority vote as an
-    (n_tokens × num_bits) numpy matrix per row and packs the
-    fingerprint. The UDF is both the vectorization AND an optimization
-    barrier: the previous all-JVM form built 64 interpreted
-    ``aggregate()`` expressions that Catalyst projection-collapse
-    inlined, re-evaluating the whole token-hash pipeline 64× per row —
-    measured 50 s for 5,000 docs at sf0.1 vs ~1 s vectorized (round-2
-    verdict #7; same pattern as :func:`minhash_signature`).
+    ONE hash pass per token, then a vectorized pandas UDF takes the
+    per-bit majority vote as an (n_tokens × num_bits) numpy matrix per
+    row and packs the fingerprint. The UDF is both the vectorization AND
+    an optimization barrier: the previous all-JVM form built 64
+    interpreted ``aggregate()`` expressions that Catalyst
+    projection-collapse inlined, re-evaluating the whole token-hash
+    pipeline 64× per row — measured 50 s for 5,000 docs at sf0.1 vs
+    ~1 s vectorized (round-2 verdict #7; same pattern as
+    :func:`minhash_signature`).
 
     token_hash: "xxhash64" (fast JVM path, default) or "md5_60" — the
     first 15 hex chars of md5 as a 60-bit integer, reproducible in
     DuckDB SQL so the whole simhash pipeline can be oracle-checked
     (xxhash64 has no SQL equivalent). With md5_60 bits 60..63 are
-    always 0 on both sides."""
+    always 0 on both sides.
+
+    md5_60 runs as ONE Arrow kernel (tokenize + hashlib md5 + vote;
+    the JVM path ran an interpreted per-word md5+conv chain, guide
+    §4.2). xxhash64 keeps the JVM word list: the hash is JVM-only, so
+    the word hashes are the vote UDF's argument."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
-    if token_hash == "md5_60":
-        # ONE Arrow kernel: tokenize (C regex) + md5-60 (hashlib) +
-        # majority vote — the JVM path ran an interpreted per-word
-        # md5+conv chain before the vote UDF (guide §4.2). Identical
-        # fingerprints: same split class, same int(md5hex[:15],16)
-        # arithmetic, same all-occurrences vote.
-        return _simhash_md5_udf(num_bits)(text)
-    words = F.filter(F.split(F.lower(text), _SHINGLE_SPLIT["ascii"]), lambda w: w != "")
-    if token_hash == "xxhash64":
-        hashes = F.transform(words, lambda w: F.xxhash64(w))
-    else:
-        raise ValueError(token_hash)
-
     shifts = np.arange(num_bits, dtype=np.uint64)
     weights = np.uint64(1) << shifts
+    if token_hash == "md5_60":
+        return arrow_udf(
+            lambda w: _vote(np.fromiter(md5_60(w), dtype=np.uint64), shifts, weights),
+            "long",
+            SHINGLE,
+            key=("simhash_md5", num_bits),
+        )(text)
+    if token_hash != "xxhash64":
+        raise ValueError(token_hash)
+    hashes = F.transform(split_expr(text, SHINGLE), lambda w: F.xxhash64(w))
 
     @pandas_udf("long")
     def _fp(hs):  # pd.Series[array<long>] -> pd.Series[long]
-        out = np.zeros(len(hs), dtype=np.uint64)
-        for i, arr in enumerate(hs):
-            h = np.asarray(arr, dtype=np.int64).view(np.uint64)
-            if len(h) == 0:
-                continue
-            # bit b of fp = majority vote: 2*(#tokens with bit set) > n
-            set_cnt = ((h[:, None] >> shifts[None, :]) & np.uint64(1)).sum(axis=0)
-            out[i] = ((2 * set_cnt > len(h)) * weights).sum()
-        return pd.Series(out.view(np.int64))
+        return pd.Series(
+            [
+                None
+                if a is None
+                else _vote(np.asarray(a, dtype=np.int64).view(np.uint64), shifts, weights)
+                for a in hs
+            ],
+            dtype=object,
+        )
 
     return _fp(hashes)
 
@@ -841,10 +761,9 @@ def simhash_pairs(
     chunks (pigeonhole: hamming ≤ 3 ⇒ at least one of 4 chunks equal —
     EXACT recall for max_hamming ≤ 3; above 3 the blocking is a
     heuristic), then filter exact hamming distance ≤ max_hamming."""
-    spark = df.sparkSession
-    target = spark.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
-        df = df.repartition(target)  # interpreted fingerprint: spread it
+    # spread the fingerprint pass; NULL text has a NULL fingerprint and
+    # is never a candidate — drop it before banding
+    df = _spread(df).where(F.col(text_col).isNotNull())
     fp = simhash(F.col(text_col), token_hash=token_hash)
     base = df.select(F.col(id_col).alias("id"), fp.alias("fp"))
     chunks = base.select(
@@ -1115,10 +1034,7 @@ def semdedup(
     # the assignment expression is n_centroids interpreted higher-order
     # cosines per row — spread narrow (single-file) inputs across the
     # cluster first (metadata no-op when already parallel; CLAUDE.md)
-    spark = df.sparkSession
-    target = spark.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
-        df = df.repartition(target)
+    df = _spread(df)
     assigned = df.select(
         F.col(id_col).alias("__id"),
         v.alias("__v"),

@@ -60,9 +60,10 @@ def bigram_lm_score(
     """
     if k <= 0:
         raise ValueError("k must be > 0")
-    from .textstats import _spread, word_tokens_arrow
+    from .textstats import _spread
+    from .tokenize import words_arrow
 
-    toks = word_tokens_arrow(F.col(text_col))
+    toks = words_arrow(F.col(text_col))
     # spread narrow inputs before the tokenizer; the Arrow tokenizer is
     # non-deterministic-marked so the size()>=2 filter cannot push below
     # it and re-evaluate it (guide §4.4 — the old JVM split ran twice

@@ -1,15 +1,23 @@
 """Text analysis for training-data pipelines: language-ID heuristic,
-quality scoring, token counting, document fingerprinting.
+quality scoring, token counting, document fingerprinting, vocabulary,
+Gopher quality and repetition filters, decontamination, tf-idf and
+BM25 — the text analogue of the reference's textmining surface
+(Vocabulary.hpp:31-46 min-df/max-size vocabulary + per-column
+WordIndex), extended with the metrics a corpus pipeline needs.
 
-All pure Spark SQL expressions (codegen) — the text analogue of the
-reference's textmining surface (Vocabulary.hpp:31-46 min-df/max-size
-vocabulary + per-column WordIndex), extended with the metrics a corpus
-pipeline needs. No Python in the hot path.
+Every operator tokenizes through :mod:`.tokenize`, the Arrow boundary:
+one C-regex split per document in a pandas UDF (or, for
+:func:`repetition_stats`, inside its one ``mapInPandas`` gram kernel).
+The metrics over the token arrays are JVM array/string expressions;
+the JVM split itself survives only in :func:`word_tokens`, for the
+Column builders below.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
+
+from .tokenize import WORD, regex, shingles_arrow, split_expr, split_words, words_arrow
 
 __all__ = [
     "token_count",
@@ -37,62 +45,14 @@ _LANG_MARKERS = {
 }
 
 
-# Tokenizer split classes. The default is pinned to ASCII because the
-# driver's DuckDB oracle SQL splits on [^a-z0-9']+ — a Unicode class on
-# one side only would silently diverge on any non-ASCII letter (round-1
-# ADVICE). Pass charset="unicode" for multilingual corpora (and use the
-# matching class in any oracle).
-_TOKEN_SPLIT = {"ascii": r"[^a-z0-9']+", "unicode": r"[^\p{L}\p{N}']+"}
-
-
 def word_tokens(text: Column, charset: str = "ascii") -> Column:
-    """Whitespace+punctuation tokenizer (array<string>, lower-cased)."""
-    return F.filter(F.split(F.lower(text), _TOKEN_SPLIT[charset]), lambda w: w != "")
-
-
-_TOKEN_UDFS: dict = {}
-
-
-def word_tokens_arrow(text, pattern: str = r"[^a-z0-9']+") -> Column:
-    """Arrow-batched tokenizer: lower + C-regex split + empty filter in
-    the Python worker (optimization guide §4.2 — measured 5x faster than
-    the interpreted JVM split+filter higher-order pair at sf1-shape;
-    re.split runs in C, tokens cross back as one Arrow ListArray).
-
-    Byte-identical to :func:`word_tokens` on ASCII input (same split
-    class, same empty-string filter; Python str.lower == JVM lower on
-    ASCII — the driver corpus and every oracle-gated query are ASCII by
-    contract, see _TOKEN_SPLIT). Marked non-deterministic so the
-    optimizer neither duplicates it under pushed-down filters (guide
-    §4.4) nor re-evaluates it per consumer expression. The UDF is
-    module-level-cached per pattern, so a reused Python worker keeps the
-    compiled regex across tasks.
-    """
-    udf = _TOKEN_UDFS.get(pattern)
-    if udf is None:
-        import re
-
-        import pandas as pd
-        from pyspark.sql.functions import pandas_udf
-
-        rx = re.compile(pattern)
-
-        def _tok(s):
-            split = rx.split
-            return pd.Series(
-                [
-                    None if x is None else [t for t in split(x.lower()) if t]
-                    for x in s
-                ]
-            )
-
-        # real annotations: the module's `from __future__ import
-        # annotations` would stringify inline hints, which pandas_udf
-        # cannot resolve
-        _tok.__annotations__ = {"s": pd.Series, "return": pd.Series}
-        udf = pandas_udf(_tok, "array<string>").asNondeterministic()
-        _TOKEN_UDFS[pattern] = udf
-    return udf(text)
+    """Whitespace+punctuation tokenizer (array<string>, lower-cased):
+    the JVM form of the :data:`~.tokenize.WORD` split. Kept for the
+    Column builders that need a JVM column — :func:`token_count`,
+    :func:`quality_score`, :func:`language_id` and
+    :func:`bm25_scores`' many-term path — and for ``charset="unicode"``
+    (multilingual corpora; use the matching class in any oracle)."""
+    return split_expr(text, WORD, charset)
 
 
 def token_count(text: Column, mode: str = "whitespace") -> Column:
@@ -173,7 +133,7 @@ def vocabulary(
     max size, Vocabulary.hpp:31-46). explode → two hash aggs; ordered
     by (df desc, word asc) for determinism."""
     words = _spread(df).select(
-        F.explode(F.array_distinct(word_tokens_arrow(F.col(text_col)))).alias("word")
+        F.explode(F.array_distinct(words_arrow(F.col(text_col)))).alias("word")
     )
     return (
         words.groupBy("word")
@@ -182,48 +142,6 @@ def vocabulary(
         .orderBy(F.desc("doc_freq"), F.asc("word"))
         .limit(max_size)
     )
-
-
-_CONTAM_SHINGLE_UDFS: dict = {}
-
-
-def _contam_shingles_arrow(text, n: int) -> Column:
-    """Distinct word ``n``-gram shingles per doc (empty when < n words)
-    in one Arrow pass — the ngram_contamination shingle set."""
-    udf = _CONTAM_SHINGLE_UDFS.get(n)
-    if udf is None:
-        import re
-
-        import pandas as pd
-        from pyspark.sql.functions import pandas_udf
-
-        rx = re.compile(_TOKEN_SPLIT["ascii"])
-
-        def _sh(s):
-            split = rx.split
-            out = []
-            for x in s:
-                if x is None:
-                    out.append(None)
-                    continue
-                w = [t for t in split(x.lower()) if t]
-                if len(w) < n:
-                    out.append([])
-                else:
-                    out.append(
-                        list(
-                            dict.fromkeys(
-                                " ".join(w[i : i + n])
-                                for i in range(len(w) - n + 1)
-                            )
-                        )
-                    )
-            return pd.Series(out)
-
-        _sh.__annotations__ = {"s": pd.Series, "return": pd.Series}
-        udf = pandas_udf(_sh, "array<string>").asNondeterministic()
-        _CONTAM_SHINGLE_UDFS[n] = udf
-    return udf(text)
 
 
 def _let(arr: Column, body) -> Column:
@@ -296,7 +214,9 @@ def repetition_stats(
     only errs toward filtering MORE repetitive documents, and fractions
     can exceed 1 on degenerate repetition. Like the paper, apply AFTER
     the length filter: on very short documents even a once-occurring
-    n-gram is a large character fraction.
+    n-gram is a large character fraction. NULL text yields NULL
+    fractions and ``keep_repetition`` False (as :func:`gopher_quality`'s
+    ``keep``).
     Scale shape: ONE explode over (n, position) → one (id, n, gram)
     count agg → one (id, n) roll-up → one per-id assembly; fractions
     are exact-integer quotients quantized at 6 decimals, so the whole
@@ -308,7 +228,7 @@ def repetition_stats(
     # the interpreted JVM split+filter, then shipped the token arrays
     # through Arrow into the kernel — the C-regex split in the same
     # Python pass produces identical tokens (ASCII contract, see
-    # word_tokens_arrow) with one less pass and no array transfer
+    # .tokenize) with one less pass and no array transfer
     base = df.select(F.col(id_col).alias("id"), F.col(text_col).alias("__txt"))
     # Per-doc gram counting is DOC-LOCAL: the previous shape exploded
     # one (id, n, gram) STRING row per position for all nine n (~9 x
@@ -328,17 +248,22 @@ def repetition_stats(
         + [f"__v{n} long" for n in ns]
     )
 
+    rx = regex(WORD)
+
     def _gram_kernel(batches):
-        import re
         from collections import Counter
 
-        rx = re.compile(r"[^a-z0-9']+")
         for pdf in batches:
             rows = {"id": pdf["id"]}
             chars = []
             vals = {n: [] for n in ns}
             for txt in pdf["__txt"]:
-                wl = [t for t in rx.split(txt.lower()) if t]
+                if txt is None:
+                    chars.append(None)
+                    for n in ns:
+                        vals[n].append(None)
+                    continue
+                wl = split_words(txt, rx)
                 chars.append(len(" ".join(wl)))
                 W = len(wl)
                 for n in ns:
@@ -363,17 +288,19 @@ def repetition_stats(
                         vals[n].append(best[1] if best else 0)
                     else:
                         vals[n].append(dup)
-            rows["__chars"] = pd.array(chars, dtype="int64")
+            rows["__chars"] = pd.array(chars, dtype="Int64")
             for n in ns:
-                rows[f"__v{n}"] = pd.array(vals[n], dtype="int64")
+                rows[f"__v{n}"] = pd.array(vals[n], dtype="Int64")
             yield pd.DataFrame(rows)
 
     stats = base.mapInPandas(_gram_kernel, fields)
 
     def frac(c):
-        x = F.when(
-            F.col("__chars") > 0, c.cast("double") / F.col("__chars")
-        ).otherwise(F.lit(0.0))
+        chars = F.col("__chars")
+        # no otherwise(): NULL text (NULL __chars) stays NULL
+        x = F.when(chars > 0, c.cast("double") / chars).when(
+            chars == 0, F.lit(0.0)
+        )
         # IEEE-pure 6-decimal rounding (identical cross-engine)
         return F.floor(x * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
 
@@ -388,7 +315,7 @@ def repetition_stats(
     return stats.select(
         F.col("id").alias(id_col),
         *[frac(F.col(f"__v{n}")).alias(names[n]) for n in ns],
-        keep.alias("keep_repetition"),
+        F.coalesce(keep, F.lit(False)).alias("keep_repetition"),
     )
 
 
@@ -415,7 +342,7 @@ def gopher_quality(
     """
     df = _spread(df)
     t = F.col(text_col)
-    words = word_tokens_arrow(t)  # Arrow tokenizer, guide §4.2 (5x)
+    words = words_arrow(t)  # Arrow tokenizer, guide §4.2 (5x)
     lines = F.filter(
         F.transform(F.split(t, "\n"), lambda x: F.trim(x)), lambda x: x != ""
     )
@@ -546,10 +473,8 @@ def ngram_contamination(
         # tokenize + slide + join + distinct in ONE Arrow kernel (guide
         # §4.2): the JVM transform/slice/array_join slide is interpreted
         # and was the remaining cost after the tokenizer moved to Arrow.
-        # Identical arrays: same [^a-z0-9']+ split, ' '-joined n-grams,
-        # dict.fromkeys == array_distinct first-occurrence order, empty
-        # list when the doc has < n words.
-        return _contam_shingles_arrow(F.col(text_col), n)
+        # WORD split, no shingle when the doc has < n words.
+        return shingles_arrow(F.col(text_col), n, WORD, short_doc=False)
 
     def shingles(frame: DataFrame, keep_id: bool) -> DataFrame:
         cols = [F.col(id_col)] if keep_id else []
@@ -610,7 +535,7 @@ def tfidf_topk(
     """
     df = _spread(df)
     words = df.select(
-        F.col(id_col), F.explode(word_tokens_arrow(F.col(text_col))).alias("term")
+        F.col(id_col), F.explode(words_arrow(F.col(text_col))).alias("term")
     )
     # tf feeds BOTH the document-frequency aggregation (a broadcast
     # subquery) and the scoring join, and the branches share no subtree —
@@ -679,7 +604,7 @@ def text_stats(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     df = _spread(df)
     t = F.col(text_col)
     stats = _let(
-        word_tokens_arrow(t),
+        words_arrow(t),
         lambda w: F.struct(
             F.size(w).alias("n_words"),
             _quality_from_words(w, t).alias("quality"),
@@ -737,7 +662,7 @@ def bm25_scores(
         # path's absent rows.
         idx = range(len(terms))
         row = _let(
-            word_tokens_arrow(F.col(text_col)),
+            words_arrow(F.col(text_col)),
             lambda w: F.struct(
                 F.size(w).alias("dl"),
                 *[

@@ -13,6 +13,8 @@ import numpy as np
 import pandas as pd
 import pytest
 
+from .conftest import assert_frames_equal_unordered
+
 sys.path.insert(0, "/root/repo")
 import __spark_entry__ as entrymod  # noqa: E402
 
@@ -115,14 +117,46 @@ def test_entry_smoke(spark):
     assert df.count() > 0
 
 
-def test_md5_tokens_arrow_null_text(spark):
-    """NULL text tokenizes to NULL (word_tokens_arrow's contract) instead
-    of failing the task."""
-    docs = spark.createDataFrame(
-        [(1, "Hello, world"), (2, None)], "doc_id long, text string"
+def test_battery_1h_keeps_null_key_groups(spark, tmp_path):
+    """q_battery_1h joins its count_distinct branch on null-safe keys:
+    the output equals ONE groupBy battery that includes count_distinct,
+    NULL user_id group included."""
+    from pyspark.sql import functions as F
+
+    from getml_community_spark.operators.aggregates import battery
+
+    ev = spark.read.parquet(f"{SF}/events.parquet").orderBy("event_id").limit(300)
+    uid = ev.schema["user_id"].dataType
+    null_rows = ev.limit(5).withColumn("user_id", F.lit(None).cast(uid))
+    ev.unionByName(null_rows).write.parquet(str(tmp_path / "events.parquet"))
+
+    got = entrymod.q_battery_1h(spark, str(tmp_path))
+    ev = spark.read.parquet(str(tmp_path / "events.parquet"))
+    bucket = entrymod._hour_bucket("ts")
+    aggs = battery(
+        F.col("value"),
+        ts=F.col("ts").cast("timestamp").cast("double"),
+        t_ref=bucket.cast("double") + F.lit(3600.0),
+        tiebreak=F.col("event_id"),
+        include={
+            "count", "sum", "avg", "min", "max", "median", "q25", "q75",
+            "q90", "stddev_pop", "var_pop", "count_distinct", "first",
+            "last", "avg_time_between", "trend", "ewma_1h",
+            "variation_coefficient",
+        },
     )
-    rows = dict(
-        docs.select("doc_id", entrymod._md5_tokens_arrow().alias("t")).collect()
+    want = (
+        ev.groupBy("user_id", bucket.alias("bucket_start"))
+        .agg(*aggs)
+        .select(
+            "user_id",
+            "bucket_start",
+            F.col("count").cast("long").alias("cnt"),
+            *[entrymod._r(F.col(c)).alias(c) for c in got.columns[3:]],
+        )
     )
-    assert rows[2] is None
-    assert len(rows[1]) == 2
+    g, w = got.toPandas(), want.toPandas()
+    assert g["user_id"].isna().any()
+    assert_frames_equal_unordered(
+        g, w, ["user_id", "bucket_start"], atol=1.5e-6
+    )
