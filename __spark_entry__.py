@@ -265,10 +265,7 @@ def q_gapfill_1h(spark, sf):
 
     ev = _spread(_load(spark, sf, "events"))
     agg = rollup_from_raw(ev, "1h", source_col="user_id", ts_col="ts", value_col="value")
-    # windowed gap generation: the dense output feeds the sink directly
-    # (no further window stages), the regime where the lag-window form
-    # measures ~30% faster than the spine join (gapfill docstring)
-    dense = gapfill(agg, 3600, windowed=True)
+    dense = gapfill(agg, 3600)
     return dense.select(
         F.col("source").alias("user_id"),
         "bucket_start",
@@ -506,13 +503,9 @@ def q_lag_rolling_1h(spark, sf):
     from getml_community_spark.operators.rollup import rollup_from_raw
 
     ev = _spread(_load(spark, sf, "events"))
-    # windowed gap generation: measured faster here even though lag/
-    # rolling windows follow (one flat lag bank, unlike the decompose
-    # chain's window-over-window, which keeps the spine-join default)
     dense = gapfill(
         rollup_from_raw(ev, "1h", source_col="user_id", ts_col="ts", value_col="value"),
         3600,
-        windowed=True,
     )
     out = rolling_features(
         lag_features(dense, ["cnt"], lags=[1, 2]),
@@ -1611,9 +1604,7 @@ def q_seasonal_decompose(spark, sf):
     agg = rollup_from_raw(
         ev, "1h", source_col="user_id", ts_col="ts", value_col="value"
     )
-    # windowed=False: the decompose chain's window-over-window consumers
-    # compose badly with the lag-window gap generator (gapfill docstring)
-    dense = gapfill(agg, 3600, windowed=False).select("source", "bucket_start", "cnt")
+    dense = gapfill(agg, 3600).select("source", "bucket_start", "cnt")
     out = seasonal_decompose(
         dense,
         ts_col="bucket_start",
@@ -1843,7 +1834,7 @@ def q_deseasonal_anomaly(spark, sf):
     agg = rollup_from_raw(
         ev, "1h", source_col="user_id", ts_col="ts", value_col="value"
     )
-    dense = gapfill(agg, 3600, windowed=False).select("source", "bucket_start", "cnt")
+    dense = gapfill(agg, 3600).select("source", "bucket_start", "cnt")
     dec = seasonal_decompose(
         dense, ts_col="bucket_start", value_col="cnt", key_col="source",
         period=24, bucket_seconds=3600,

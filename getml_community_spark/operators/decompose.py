@@ -150,8 +150,14 @@ def seasonal_decompose(
         ).alias("seasonal"),
     )
     trend = F.col("__num") / F.lit(float(q))
+    # pin the build side: unhinted, AQE may broadcast the large
+    # checkpointed `t` and stream the tiny `seasonal` frame, so every
+    # output row lands in seasonal's one coalesced partition and a
+    # downstream per-key window (rolling_zscore) runs in a single task
+    # (measured 3.3-4.3 s vs 1.7-1.8 s on 4 tasks: sf0.1, local[3] on a
+    # 4-core host)
     return (
-        t.join(seasonal, ["key", "phase"])
+        t.join(F.broadcast(seasonal), ["key", "phase"])
         .select(
             "key",
             "bucket_epoch",

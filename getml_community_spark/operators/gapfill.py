@@ -1,16 +1,17 @@
-"""Gap-fill: densify irregular per-source rollup series onto a regular
-bucket spine.
+"""Gap-fill: densify irregular per-source rollup series so every
+bucket in each source's [min, max] span exists.
 
 The reference has no explicit gap-fill (it aggregates sliding windows
 directly), but our north rule requires dense tiers: a (source, bucket)
 with no events must exist with cnt=0, sum=0, min/max NULL
 (FIXTURES.md §2 ``gapfill_golden``).
 
-Spark-first: the spine is ``sequence(min_bucket, max_bucket, interval)``
-exploded per source — pure JVM, no Python. The left join back onto the
-aggregate runs on the same (source, bucket_start) keys the aggregate was
-just shuffled on, so AQE plans it without re-shuffling the large side;
-the spine side is tiny (sources × buckets) relative to raw data.
+Spark-first, one generator: a lag window over the aggregate (previous
+bucket per source) finds each gap, the missing buckets are born
+map-side from a bounded two-level explode, and they are unioned with
+the aggregate's own rows — pure JVM, no Python, no join. Every input
+row is kept as is, including rows with a NULL source or a NULL
+``bucket_start``.
 
 An ``applyInPandas`` variant does per-source linear interpolation for
 value columns — the stateful-custom-operator escape hatch (Arrow-
@@ -19,152 +20,50 @@ vectorized, grouped by source: each group is one pandas frame).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark import StorageLevel
+from pyspark.sql import DataFrame, Window, functions as F
 
 __all__ = ["gapfill", "gapfill_interpolated"]
-
-
-def _spine(agg: DataFrame, tier_seconds: int, per_source: bool) -> DataFrame:
-    """Regular (source, bucket_start) spine over each source's span.
-
-    TWO-LEVEL generation: explode day-sized chunks first, then the
-    intra-chunk offsets — a single sequence() array is bounded to
-    86400/tier_seconds entries (1440 at 1m), so a source spanning YEARS
-    never materializes one multi-million-element array in one row (a
-    flat sequence(lo, hi) would: 10y of 1m buckets = 5.3M entries /
-    ~42 MB in a single row). The chunk explode also spreads a long
-    span's spine rows across partitions instead of one task."""
-    chunk = 86400 if tier_seconds <= 86400 else tier_seconds
-    per_chunk = chunk // tier_seconds
-    # the real chunk stride: per_chunk*tier_seconds, NOT `chunk` — they
-    # differ when tier_seconds doesn't divide 86400 (e.g. 50000 s), and
-    # striding 86400 would truncate the spine's tail buckets
-    stride = per_chunk * tier_seconds
-    if per_source:
-        bounds = agg.groupBy("source").agg(
-            F.min("bucket_start").alias("lo"), F.max("bucket_start").alias("hi")
-        )
-    else:
-        g = agg.agg(
-            F.min("bucket_start").alias("lo"), F.max("bucket_start").alias("hi")
-        )
-        bounds = agg.select("source").distinct().crossJoin(F.broadcast(g))
-    lo_e = F.col("lo").cast("timestamp").cast("long")
-    hi_e = F.col("hi").cast("timestamp").cast("long")
-    chunks = bounds.select(
-        "source",
-        lo_e.alias("__lo"),
-        hi_e.alias("__hi"),
-        F.explode(
-            F.sequence(
-                F.lit(0).cast("long"),
-                F.floor((hi_e - lo_e) / F.lit(stride)).cast("long"),
-            )
-        ).alias("__c"),
-    )
-    offs = chunks.select(
-        "source",
-        "__lo",
-        "__hi",
-        "__c",
-        F.explode(
-            F.sequence(F.lit(0).cast("long"), F.lit(per_chunk - 1).cast("long"))
-        ).alias("__i"),
-    )
-    b = F.col("__lo") + (
-        F.col("__c") * F.lit(per_chunk) + F.col("__i")
-    ) * F.lit(tier_seconds)
-    return (
-        offs.select("source", "__hi", b.alias("__b"))
-        .where(F.col("__b") <= F.col("__hi"))
-        .select("source", F.timestamp_seconds(F.col("__b")).alias("bucket_start"))
-    )
 
 
 def gapfill(
     agg: DataFrame,
     tier_seconds: int = 60,
-    per_source: bool = True,
     zero_cols: tuple[str, ...] = ("cnt", "sum_n_tok"),
-    null_cols: tuple[str, ...] = ("min_n_tok", "max_n_tok"),
     rate_col: str | None = "rate",
-    barrier: bool = True,
-    windowed: bool = True,
 ) -> DataFrame:
-    """Densify a rollup table. Gap rows get cnt=0/sum=0/rate=0 and NULL
-    min/max. ``per_source=False`` uses the global [min, max] span for
-    every source (useful when sources must align for cascades).
+    """Densify a rollup table over each source's [min, max] bucket span.
+    Gap rows get 0 in ``zero_cols`` and ``rate_col`` and NULL in every
+    other column (min/max).
 
-    ``windowed=True`` (per_source only) generates gap rows from a lag
-    window over the aggregate instead of the spine join — measured ~30%
-    faster when the dense output is consumed directly (one sort of the
-    aggregate instead of a join that sorts the sources x buckets dense
-    table), but ~3x SLOWER when further per-key window stages
-    (seasonal_decompose) consume it un-materialized: the union +
-    lag-window upstream composes badly inside the downstream window
-    job. Default ON (the standalone/dense-write shape is the common
-    one, incl. the bench hot path); window-over-window consumers like
-    the decompose chain pass ``windowed=False``.
+    One window pass (lag of the previous bucket per source) finds each
+    gap; the per-source sort runs once, over the aggregate, never over
+    the dense output. Gap buckets come from a TWO-LEVEL explode: day-
+    sized chunks first, then the intra-chunk offsets, so one
+    ``sequence()`` array holds at most 86400/tier_seconds entries (1440
+    at 1m) and a gap spanning years never materializes a multi-million-
+    element array in one row; the chunk explode also spreads a long
+    gap's rows across tasks.
     """
-    # both construction paths consume `agg` from two branches that share
-    # no subtree — without a barrier the whole upstream chain
-    # (scan -> rollup) executes twice per action (measured: 2.2 s of
-    # gapfill's 2.2+ s at sf1.0 was the second pass). Lazy
-    # localCheckpoint; skipped when the caller already persisted the
-    # tier (the hot path does).
-    from pyspark import StorageLevel
-
-    if barrier and agg.storageLevel == StorageLevel.NONE:
+    # the aggregate feeds two branches that share no subtree (real rows,
+    # gap rows) — without a barrier the whole upstream chain (scan ->
+    # rollup) executes twice per action (measured: 2.2 s of gapfill's
+    # 2.2+ s at sf1.0 was the second pass). Lazy localCheckpoint;
+    # skipped when the caller already persisted the tier (the hot path
+    # does).
+    if agg.storageLevel == StorageLevel.NONE:
         agg = agg.localCheckpoint(eager=False)
-    if per_source and windowed:
-        return _gapfill_windowed(
-            agg, tier_seconds, zero_cols, null_cols, rate_col
-        )
-    spine = _spine(agg, tier_seconds, per_source)
-    out = spine.join(agg, ["source", "bucket_start"], "left")
-    for c in zero_cols:
-        out = out.withColumn(c, F.coalesce(F.col(c), F.lit(0)))
-    if rate_col and rate_col in agg.columns:
-        out = out.withColumn(rate_col, F.coalesce(F.col(rate_col), F.lit(0.0)))
-    # null_cols stay NULL — listed for schema documentation
-    _ = null_cols
-    return out
-
-
-def _gapfill_windowed(
-    agg: DataFrame,
-    tier_seconds: int,
-    zero_cols: tuple[str, ...],
-    null_cols: tuple[str, ...],
-    rate_col: str | None,
-) -> DataFrame:
-    """Per-source densification WITHOUT the spine join: one window pass
-    (lag of the previous bucket per source) finds each gap, and the
-    missing buckets are generated map-side from a two-level explode
-    (bounded arrays, the _spine chunk discipline) and unioned with the
-    real rows. Replaces sorting/joining the DENSE table (≈ sources x
-    buckets rows — 10x the aggregate at sf1-shape, measured ~40%% of
-    the query) with one sort of the aggregate itself; the dense rows
-    are born in the map stage after the window. Row set is identical:
-    every bucket in [min_bucket, max_bucket] per source.
-    """
-    from pyspark.sql import Window
-
-    _ = null_cols  # gap rows: NULL via typed literals below
     b = F.col("bucket_start").cast("timestamp").cast("long")
     w = Window.partitionBy("source").orderBy(b)
     sec = int(tier_seconds)
     per_chunk = max(86400 // sec, 1)
+    # the real chunk stride: per_chunk*sec, NOT 86400 — they differ when
+    # sec doesn't divide 86400 (e.g. 50000 s), and striding 86400 would
+    # truncate a gap's tail buckets
     stride = per_chunk * sec
-    prev = F.lag(b).over(w)
-    # only the GAP branch needs the window; the real rows come straight
-    # from the (checkpointed) aggregate, so the per-source sort runs
-    # once, over the aggregate, never over the dense output
-    wrows = agg.select("source", prev.alias("__prev"), b.alias("__b"))
     gaps = (
-        wrows.where(
-            F.col("__prev").isNotNull() & (F.col("__b") - F.col("__prev") > sec)
-        )
+        agg.select("source", F.lag(b).over(w).alias("__prev"), b.alias("__b"))
+        .where(F.col("__b") - F.col("__prev") > sec)
         .select(
             "source",
             (F.col("__prev") + sec).alias("__g0"),
@@ -186,10 +85,7 @@ def _gapfill_windowed(
         .select(
             "source",
             "__g1",
-            (
-                F.col("__g0")
-                + F.col("__c") * F.lit(per_chunk) * F.lit(sec)
-            ).alias("__c0"),
+            (F.col("__g0") + F.col("__c") * F.lit(stride)).alias("__c0"),
         )
         .select(
             "source",
@@ -213,10 +109,8 @@ def _gapfill_windowed(
             gap_cols.append(F.col("source"))
         elif c == "bucket_start":
             gap_cols.append(F.timestamp_seconds(F.col("__g")).alias("bucket_start"))
-        elif c in zero_cols:
+        elif c in zero_cols or c == rate_col:
             gap_cols.append(F.lit(0).cast(dtypes[c]).alias(c))
-        elif rate_col and c == rate_col:
-            gap_cols.append(F.lit(0.0).cast(dtypes[c]).alias(c))
         else:
             gap_cols.append(F.lit(None).cast(dtypes[c]).alias(c))
     return agg.unionByName(gaps.select(*gap_cols))
@@ -227,8 +121,9 @@ def gapfill_interpolated(
     tier_seconds: int = 60,
     value_cols: tuple[str, ...] = ("rate",),
 ) -> DataFrame:
-    """Dense spine + per-source LINEAR INTERPOLATION of value columns
-    across gaps (pandas ``interpolate`` inside ``applyInPandas``).
+    """:func:`gapfill`'s dense output + per-source LINEAR INTERPOLATION
+    of value columns across gaps (pandas ``interpolate`` inside
+    ``applyInPandas``).
 
     Grouped by source → each source's series is one Arrow batch in one
     pandas frame; no per-row Python. At scale the group count (≤ number

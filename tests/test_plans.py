@@ -301,6 +301,23 @@ def test_token_budget_single_exchange(spark):
     assert "Python" not in plan
 
 
+def test_gapfill_plans_one_generator_no_join(spark):
+    """gapfill has one generator: a lag window over the aggregate whose
+    gap rows are unioned back — no spine joined onto the aggregate."""
+    from getml_community_spark.operators.gapfill import gapfill
+    from getml_community_spark.operators.rollup import rollup_from_raw
+
+    ev = spark.read.parquet(f"{SF}/events.parquet")
+    dense = gapfill(
+        rollup_from_raw(ev, "1h", source_col="user_id", ts_col="ts", value_col="value"),
+        3600,
+    )
+    plan = _plan(dense)
+    for p in (_optimized(dense), plan):
+        assert "Join" not in p and "CartesianProduct" not in p, p
+    assert "Union" in plan and plan.count("Window [") == 1, plan
+
+
 def test_decompose_materializes_input_once(spark):
     from getml_community_spark.operators.decompose import seasonal_decompose
     from getml_community_spark.operators.gapfill import gapfill

@@ -81,16 +81,41 @@ def test_gapfill_dense_and_zeroed(spark, corpus_df, corpus_pdf):
     assert_frames_equal_unordered(got, want, ["source", "bucket_start"])
 
 
-def test_gapfill_windowed_equals_join_spine(spark, corpus_df):
-    """r6 optimization: the lag-window gap generator must produce the
-    EXACT row set and values of the spine-join path (same [min, max]
-    span per source, typed zero/NULL gap literals)."""
-    agg = rollup_from_raw(corpus_df, "1h")
-    join_form = gapfill(agg, 3600, windowed=False).toPandas()
-    win_form = gapfill(agg, 3600, windowed=True).toPandas()
-    assert_frames_equal_unordered(
-        win_form, join_form, ["source", "bucket_start"]
+def test_gapfill_keeps_null_key_rows(spark):
+    """Rows keyed by a NULL source or a NULL bucket_start survive the
+    gap-fill unchanged (no join on null-unsafe keys drops or zeroes
+    them), and the NULL-source group is densified like any other."""
+    from pyspark.sql import functions as F
+
+    t0 = 1_700_002_800  # an hour boundary
+    h = 3600
+    rows = [
+        ("a", t0, 1),
+        ("a", t0 + 2 * h, 2),
+        ("a", None, 2),
+        (None, t0, 3),
+        (None, t0 + 3 * h, 4),
+    ]
+    agg = spark.createDataFrame(rows, "source string, b long, cnt long").select(
+        "source",
+        F.timestamp_seconds("b").alias("bucket_start"),
+        "cnt",
+        (F.col("cnt") * 10).alias("sum_n_tok"),
+        F.col("cnt").cast("int").alias("min_n_tok"),
+        F.col("cnt").cast("int").alias("max_n_tok"),
+        (F.col("cnt") * 10 / F.lit(float(h))).alias("rate"),
     )
+    dense = gapfill(agg, h).select(
+        "source", F.col("bucket_start").cast("long").alias("b"), "cnt"
+    ).toPandas()
+    assert int(dense["cnt"].sum()) == sum(r[2] for r in rows)
+    null_src = dense[dense["source"].isna()].sort_values("b")
+    assert null_src["b"].tolist() == [t0 + i * h for i in range(4)]
+    assert null_src["cnt"].tolist() == [3, 0, 0, 4]
+    a_rows = dense[dense["source"] == "a"]
+    assert a_rows["b"].isna().sum() == 1
+    assert sorted(a_rows["b"].dropna().astype("int64")) == [t0, t0 + h, t0 + 2 * h]
+    assert len(dense) == 8
 
 
 def test_corpus_invariants(corpus_pdf):

@@ -146,32 +146,34 @@ def test_sql_literal_escaping():
 
 def test_gapfill_non_dividing_tier_covers_full_span(spark):
     """Regression (round-2 ADVICE): tier_seconds that does not divide
-    86400 must not truncate the spine's tail — every tier bucket up to
-    the source's max must exist and no agg row may be dropped."""
+    86400 must not truncate a gap's tail — every tier bucket up to the
+    source's max must exist and no agg row may be dropped. A tier
+    longer than one day runs the generator's one-bucket-per-chunk
+    branch."""
     from getml_community_spark.operators.gapfill import gapfill
 
-    tier = 50000  # does not divide 86400
-    lo = 1_700_000_000 - (1_700_000_000 % tier)
-    n_buckets = 18  # ~10.4 days
-    # sparse: only every 3rd bucket has a row
-    rows = [
-        ("s1", lo + i * tier, 1, 10, 5, 5, 10 / tier)
-        for i in range(0, n_buckets, 3)
-    ]
-    agg = spark.createDataFrame(
-        rows, ["source", "b", "cnt", "sum_n_tok", "min_n_tok", "max_n_tok", "rate"]
-    ).select(
-        "source",
-        F.timestamp_seconds("b").alias("bucket_start"),
-        "cnt", "sum_n_tok", "min_n_tok", "max_n_tok", "rate",
-    )
-    dense = gapfill(agg, tier_seconds=tier).toPandas()
-    # span is [lo, lo + 15*tier] inclusive → 16 buckets, none missing
-    assert len(dense) == n_buckets - 2
-    got = sorted(int(t.timestamp()) for t in dense["bucket_start"])
-    assert got == [lo + i * tier for i in range(n_buckets - 2)]
-    # pre-existing agg rows all survived the left join
-    assert int(dense["cnt"].sum()) == len(rows)
+    for tier in (50000, 7 * 86400):  # neither divides 86400
+        lo = 1_700_000_000 - (1_700_000_000 % tier)
+        n_buckets = 18
+        # sparse: only every 3rd bucket has a row
+        rows = [
+            ("s1", lo + i * tier, 1, 10, 5, 5, 10 / tier)
+            for i in range(0, n_buckets, 3)
+        ]
+        agg = spark.createDataFrame(
+            rows, ["source", "b", "cnt", "sum_n_tok", "min_n_tok", "max_n_tok", "rate"]
+        ).select(
+            "source",
+            F.timestamp_seconds("b").alias("bucket_start"),
+            "cnt", "sum_n_tok", "min_n_tok", "max_n_tok", "rate",
+        )
+        dense = gapfill(agg, tier_seconds=tier).toPandas()
+        # span is [lo, lo + 15*tier] inclusive → 16 buckets, none missing
+        assert len(dense) == n_buckets - 2, tier
+        got = sorted(int(t.timestamp()) for t in dense["bucket_start"])
+        assert got == [lo + i * tier for i in range(n_buckets - 2)], tier
+        # pre-existing agg rows all survived the gap-fill
+        assert int(dense["cnt"].sum()) == len(rows), tier
 
 
 def test_pipeline_save_load_roundtrip(spark, tmp_path):
