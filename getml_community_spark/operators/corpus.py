@@ -9,15 +9,16 @@ applied in declaration order).
 
 Scale notes: stages are lazy transformations; with ``report=False``
 (default) the whole clean is ONE Spark job when the result is written.
-``report=True`` localCheckpoints each stage's survivors and counts the
-materialized frame, so the corpus is scanned ONCE and each stage's work
-runs once — the count() actions read the previous stage's cached blocks,
-never the source (pytest-proven via a scan-counting accumulator).
-Tradeoff: localCheckpoint truncates lineage without replication, so an
-executor loss mid-report restarts the job rather than recomputing tasks;
-for multi-hour cluster runs pass ``checkpoint_dir=`` to switch every
-truncation in the chain to reliable ``DataFrame.checkpoint()`` into
-that store (HDFS/S3).
+``report=True`` puts each stage's survivors behind a
+:func:`..session.barrier` and counts the materialized frame, so the
+corpus is scanned ONCE and each stage's work runs once — the count()
+actions read the previous stage's blocks, never the source
+(pytest-proven via a scan-counting accumulator). Every lineage cut in
+the chain, the operators' own included, follows the barrier's one rule:
+localCheckpoint (an executor loss restarts the job) unless the session
+has a checkpoint dir (``spark.sparkContext.setCheckpointDir``, HDFS/S3
+for multi-hour cluster runs), which makes each cut a reliable
+``checkpoint()``.
 """
 
 from __future__ import annotations
@@ -26,6 +27,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..session import barrier
 from .dedup import exact_dedup, minhash_lsh_dedup
 from .textstats import gopher_quality, ngram_contamination
 
@@ -56,7 +58,6 @@ def clean_corpus(
     dedup_lines: bool = False,
     redact_pii: bool = False,
     report: bool = False,
-    checkpoint_dir: str | None = None,
 ) -> tuple[DataFrame, CleanReport]:
     """Run the standard cleaning chain and return (clean_df, report).
 
@@ -79,26 +80,21 @@ def clean_corpus(
                  stage that mutates rather than drops; runs last so the
                  dedup stages hash the original text)
 
-    ``checkpoint_dir`` (opt-in) makes every lineage truncation in the
-    chain RELIABLE: report-mode stage materialization and the
-    transitive connected-components rounds write
-    ``DataFrame.checkpoint()`` blocks into that store instead of
-    executor-local localCheckpoint blocks — slower, but a lost executor
-    costs a task retry, not the whole multi-hour job.
+    Every lineage cut — report-mode stage materialization, the near-
+    dedup barriers, the transitive connected-components rounds — goes
+    through :func:`..session.barrier`: reliable ``checkpoint()`` blocks
+    in the session's checkpoint dir when one is set (slower, but a lost
+    executor costs a task retry, not the whole multi-hour job),
+    executor-local localCheckpoint blocks otherwise.
     """
     rep = CleanReport()
-    if checkpoint_dir is not None:
-        df.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
 
     def note(name: str, frame: DataFrame) -> DataFrame:
         if report:
             # materialize this stage ONCE: the count() fills the
             # checkpoint blocks and every downstream stage reads them
             # instead of recomputing the upstream chain from the source
-            if checkpoint_dir is not None:
-                frame = frame.checkpoint(eager=False)
-            else:
-                frame = frame.localCheckpoint(eager=False)
+            frame = barrier(frame, eager=False)
             rep.stages.append((name, frame.count()))
         return frame
 
@@ -145,7 +141,6 @@ def clean_corpus(
             threshold=jaccard_threshold,
             verify=True,
             transitive=transitive,
-            checkpoint_dir=checkpoint_dir,
         ),
     )
 

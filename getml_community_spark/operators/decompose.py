@@ -39,6 +39,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from ..session import barrier
+
 __all__ = ["seasonal_decompose"]
 
 
@@ -114,7 +116,7 @@ def seasonal_decompose(
     # (scan → rollup → gapfill → MA windows) recomputes once per branch
     # (measured: 6 scans of the source). Materialize once; lazily, so
     # report-less pipelines stay one job until first action.
-    t = t.localCheckpoint(eager=False)
+    t = barrier(t, eager=False)
     # phase mean of (v - num/q) from order-independent sums:
     # (q·Σv − Σnum) / (q·n), over rows where the trend exists; then
     # micro-unit quantization so centering stays integer-exact

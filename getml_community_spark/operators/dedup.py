@@ -18,19 +18,18 @@ fingerprints, and the pair operators drop it before banding.
                     in few bits
 - ngram_jaccard:    exact n-gram Jaccard for candidate verification
 
-Fault-tolerance note: the eager ``localCheckpoint`` barriers used here
-(and in graph.py) truncate lineage WITHOUT replication — an executor
-loss mid-job restarts the whole job instead of recomputing lost tasks.
-That is the right trade locally and for short jobs; for multi-hour
-cluster runs point ``spark.sparkContext.setCheckpointDir`` at reliable
-storage and swap ``localCheckpoint()`` for ``checkpoint()`` (same
-barrier semantics, replicated blocks).
+Fault tolerance: every lineage cut here (and in graph.py) is a
+:func:`..session.barrier` — executor-local (an executor loss restarts
+the job) unless the session has a checkpoint dir
+(``spark.sparkContext.setCheckpointDir``, for multi-hour cluster runs),
+which makes every cut a reliable ``checkpoint()``.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from ..session import barrier
 from .textstats import _spread
 from .tokenize import SHINGLE, arrow_udf, md5_60, shingles_arrow, split_expr
 
@@ -275,13 +274,13 @@ def minhash_lsh_pairs(
     # Materialize the signature matrix ONCE — per doc, not per band. The
     # self-join's branches do NOT share the signature subtree (no
     # exchange reuse across aliases), so without a barrier the
-    # pandas-UDF signature pass runs twice. localCheckpoint (not
-    # persist): persist() registers in the plan-keyed CacheManager and
-    # leaks across repeated corpus-scale calls unless every caller
-    # remembers to unpersist; checkpointed RDD blocks are
-    # ContextCleaner-managed — freed when the DataFrame is GC'd.
-    sig_tbl = df.select(F.col(id_col).alias("id"), sig.alias("sig")).localCheckpoint(
-        eager=True
+    # pandas-UDF signature pass runs twice. A barrier (not persist):
+    # persist() registers in the plan-keyed CacheManager and leaks
+    # across repeated corpus-scale calls unless every caller remembers
+    # to unpersist; local checkpoint blocks are ContextCleaner-managed —
+    # freed when the DataFrame is GC'd.
+    sig_tbl = barrier(
+        df.select(F.col(id_col).alias("id"), sig.alias("sig")), eager=True
     )
     # Slim banded rows: (id, band, bucket) only. Carrying the signature
     # array through the band explode would replicate every doc's
@@ -401,10 +400,8 @@ def token_minhash_pairs(
     # pipeline separately for the LSH branch and the rescore branch
     # (no exchange reuse across self-join aliases — CLAUDE.md), and any
     # caller-supplied tokens projection (e.g. the md5 shim) with it.
-    sh_tbl = df.select(
-        F.col(id_col).alias("id"),
-        token_shingles(F.col(tokens_col), shingle_n).alias("__sh"),
-    ).localCheckpoint(eager=True)
+    sh = token_shingles(F.col(tokens_col), shingle_n).alias("__sh")
+    sh_tbl = barrier(df.select(F.col(id_col).alias("id"), sh), eager=True)
     pairs = minhash_lsh_pairs(
         sh_tbl,
         None,
@@ -432,7 +429,7 @@ def token_minhash_pairs(
     # lazy barrier, same reason as minhash_lsh_pairs_verified: callers
     # filter on exact_jaccard, and filter pushdown would re-run the
     # array set ops below the repartition on one partition
-    return out.localCheckpoint(eager=False)
+    return barrier(out, eager=False)
 
 
 def _rolling_window_hashes(k: int):
@@ -534,7 +531,7 @@ def duplicated_token_spans(
     # runs twice per action. The frame is three longs per token
     # position — slim enough to checkpoint at any scale that fits the
     # shuffle anyway.
-    pos = pos.localCheckpoint(eager=False)
+    pos = barrier(pos, eager=False)
     counts = pos.groupBy("h").agg(F.count(F.lit(1)).alias("__c"))
     dup = (
         pos.join(counts.where(F.col("__c") >= min_count), "h", "left_semi")
@@ -602,10 +599,8 @@ def minhash_lsh_pairs_verified(
     # pairs shingled k+1 times; the token path, dedup.py:385, already
     # worked this way). Same arrays → identical jaccard values.
     df = _spread(df)  # spread the shingle pass
-    sh_tbl = df.select(
-        F.col(id_col).alias("id"),
-        shingles_arrow(F.col(text_col), shingle_n).alias("__sh"),
-    ).localCheckpoint(eager=True)
+    sh = shingles_arrow(F.col(text_col), shingle_n).alias("__sh")
+    sh_tbl = barrier(df.select(F.col(id_col).alias("id"), sh), eager=True)
     cand = minhash_lsh_pairs(
         sh_tbl, None, "id", num_hashes, bands, shingle_n, max_bucket_size,
         shingle_expr=F.col("__sh"),
@@ -628,7 +623,7 @@ def minhash_lsh_pairs_verified(
     # double-tokenize once in the (single-partition) filter and again
     # in the projection (measured: +8 s in minhash_lsh_dedup). The
     # frame is candidates-only — tiny at any scale.
-    return out.localCheckpoint(eager=False)
+    return barrier(out, eager=False)
 
 
 def minhash_lsh_dedup(
@@ -642,7 +637,6 @@ def minhash_lsh_dedup(
     verify: bool = True,
     max_bucket_size: int | None = 1000,
     transitive: bool = False,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Keep-one near-dedup: drop the higher id of every candidate pair
     whose Jaccard ≥ threshold.
@@ -671,9 +665,7 @@ def minhash_lsh_dedup(
     if transitive:
         from .graph import connected_components
 
-        comp = connected_components(
-            hits, "id_a", "id_b", checkpoint_dir=checkpoint_dir
-        )
+        comp = connected_components(hits, "id_a", "id_b")
         losers = comp.where(F.col("node") != F.col("component")).select(
             F.col("node").alias(id_col)
         )
@@ -784,9 +776,9 @@ def simhash_pairs(
         ).alias("cc"),
     ).select("id", "fp", "cc.chunk", "cc.key")
     chunks = _cap_buckets(chunks, ["chunk", "key"], max_bucket_size)
-    # eager localCheckpoint: one fingerprint pass shared across both join
+    # eager barrier: one fingerprint pass shared across both join
     # branches, blocks GC-cleaned (persist() would leak in CacheManager)
-    chunks = chunks.localCheckpoint(eager=True)
+    chunks = barrier(chunks, eager=True)
     l, r = chunks.alias("l"), chunks.alias("r")
     return (
         l.join(
@@ -836,7 +828,7 @@ def embedding_near_dups(
     the pair count is bounded by bucket occupancy, not n^2; exact
     cosine filters candidates. Recall < 1 by construction; raise
     num_tables for higher recall. The vector table is materialized once
-    (eager localCheckpoint, GC-cleaned); the bucket self-join moves only
+    (eager barrier, GC-cleaned); the bucket self-join moves only
     (id, table, bucket) rows and vectors join back candidate-only, so
     no embedding ever crosses the shuffle more than once per side.
     """
@@ -858,10 +850,10 @@ def embedding_near_dups(
     tables = [
         _random_planes(dim, num_planes, seed + 1000 * t) for t in range(num_tables)
     ]
-    # one materialized pass over the vectors (eager localCheckpoint:
+    # one materialized pass over the vectors (eager barrier:
     # the bucket self-join branches don't share subtrees, and the
     # candidate cosine rejoin below reads it a third time)
-    vec_tbl = base.localCheckpoint(eager=True)
+    vec_tbl = barrier(base, eager=True)
     # Slim bucketed rows (id, table, bucket): carrying the embedding
     # through the explode would shuffle every vector num_tables× on both
     # join sides; instead vectors join back candidate-only.
@@ -944,7 +936,7 @@ def line_dedup(
     ).withColumn("__empty", norm == "")
     # three consumers (winner agg, kept-join probe, totals) share no
     # subtree — barrier so the corpus explode+normalize runs once
-    keyed = keyed.localCheckpoint(eager=False)
+    keyed = barrier(keyed, eager=False)
     winners = (
         keyed.where(~F.col("__empty"))
         .groupBy("__k")
@@ -1044,7 +1036,7 @@ def semdedup(
     # one materialized pass: the self-join branches don't share
     # subtrees (no exchange reuse across aliases), and the assignment
     # expression is wide (n_centroids structs)
-    assigned = assigned.localCheckpoint(eager=True)
+    assigned = barrier(assigned, eager=True)
     if max_cluster_size is not None:
         # cap bounds the O(m²) PAIRING set only: overflow rows (highest
         # centroid-sim beyond the cap, deterministic) skip pairing and

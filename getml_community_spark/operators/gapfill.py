@@ -20,8 +20,9 @@ vectorized, grouped by source: each group is one pandas frame).
 
 from __future__ import annotations
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Window, functions as F
+
+from ..session import barrier
 
 __all__ = ["gapfill", "gapfill_interpolated"]
 
@@ -48,11 +49,9 @@ def gapfill(
     # the aggregate feeds two branches that share no subtree (real rows,
     # gap rows) — without a barrier the whole upstream chain (scan ->
     # rollup) executes twice per action (measured: 2.2 s of gapfill's
-    # 2.2+ s at sf1.0 was the second pass). Lazy localCheckpoint;
-    # skipped when the caller already persisted the tier (the hot path
-    # does).
-    if agg.storageLevel == StorageLevel.NONE:
-        agg = agg.localCheckpoint(eager=False)
+    # 2.2+ s at sf1.0 was the second pass). Lazy barrier; a no-op when
+    # the caller already persisted the tier (the hot path does).
+    agg = barrier(agg, eager=False)
     b = F.col("bucket_start").cast("timestamp").cast("long")
     w = Window.partitionBy("source").orderBy(b)
     sec = int(tier_seconds)

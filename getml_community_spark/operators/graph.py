@@ -23,26 +23,20 @@ Beyond", SoCC 2014 — public):
 Scale shape per round (both): a bounded number of shuffle joins /
 aggregations over (node, node) pairs — no vectors, no text, no
 driver-side rows (the convergence check moves one scalar per round).
-Frames are eagerly checkpointed every round so lineage stays O(1)
-deep. Default is localCheckpoint (fast, but truncates lineage WITHOUT
-replication: executor loss mid-job is unrecoverable — job retry, not
-task retry). Pass ``checkpoint_dir=`` to use reliable
-``DataFrame.checkpoint()`` into that store (HDFS/S3 on a cluster)
-instead — the right mode for multi-hour runs.
+Frames pass an eager :func:`..session.barrier` every round so lineage
+stays O(1) deep. The barrier is a localCheckpoint (executor-local: a
+lost executor restarts the job) unless the session has a checkpoint
+dir (``spark.sparkContext.setCheckpointDir``), which makes every round
+a reliable ``checkpoint()`` — the right mode for multi-hour runs.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..session import barrier
+
 __all__ = ["connected_components"]
-
-
-def _ckpt(df: DataFrame, reliable: bool, eager: bool = True) -> DataFrame:
-    """Truncate lineage: reliable ``checkpoint()`` (replicated store —
-    survives executor loss) or ``localCheckpoint`` (fast, executor-local
-    blocks only)."""
-    return df.checkpoint(eager=eager) if reliable else df.localCheckpoint(eager=eager)
 
 
 def _checksum(e: DataFrame) -> tuple:
@@ -90,16 +84,14 @@ def _small_star(e: DataFrame) -> DataFrame:
     )
 
 
-def _cc_star(
-    e: DataFrame, nodes: DataFrame, max_iter: int, reliable: bool = False
-) -> DataFrame:
+def _cc_star(e: DataFrame, nodes: DataFrame, max_iter: int) -> DataFrame:
     """Alternate large-star/small-star until the (canonically max→min
     oriented) edge set is stable; the fixed point is one star per
     component centered at the component min."""
-    nodes = _ckpt(nodes, reliable)
+    nodes = barrier(nodes, eager=True)
     prev = None
     for _ in range(max_iter):
-        e = _ckpt(_small_star(_large_star(e)), reliable)
+        e = barrier(_small_star(_large_star(e)), eager=True)
         chk = _checksum(e)
         if chk == prev:
             stars = e.select(F.col("a").alias("node"), F.col("b").alias("component"))
@@ -113,18 +105,18 @@ def _cc_star(
     )
 
 
-def _cc_label(e: DataFrame, max_iter: int, reliable: bool = False) -> DataFrame:
-    e = _ckpt(
+def _cc_label(e: DataFrame, max_iter: int) -> DataFrame:
+    e = barrier(
         e.select("a", "b")
         .union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
         .distinct(),
-        reliable,
+        eager=True,
     )
-    labels = _ckpt(
+    labels = barrier(
         e.select(F.col("a").alias("node"))
         .distinct()
         .withColumn("component", F.col("node")),
-        reliable,
+        eager=True,
     )
     for _ in range(max_iter):
         neighbor_min = (
@@ -142,7 +134,7 @@ def _cc_label(e: DataFrame, max_iter: int, reliable: bool = False) -> DataFrame:
                 ).alias("component"),
             )
         )
-        merged = _ckpt(merged, reliable)
+        merged = barrier(merged, eager=True)
         changed = merged.where(F.col("component") != F.col("__old")).count()
         labels = merged.select("node", "component")
         if changed == 0:
@@ -160,7 +152,6 @@ def connected_components(
     dst: str = "id_b",
     max_iter: int = 20,
     algorithm: str = "star",
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Return (node, component) with component = min node id reachable.
 
@@ -171,15 +162,11 @@ def connected_components(
     regardless of component diameter; ``"label"`` is the O(diameter)
     min-label propagation. Both raise RuntimeError past ``max_iter``.
 
-    ``checkpoint_dir`` (opt-in) switches per-round lineage truncation
-    from localCheckpoint to RELIABLE ``DataFrame.checkpoint()`` into
-    that directory (sets the session's checkpoint dir): slower per
-    round (writes to the store) but survives executor loss — use on
-    multi-hour cluster runs.
+    Every round cuts lineage through :func:`..session.barrier`: reliable
+    ``checkpoint()`` into the session's checkpoint dir when one is set
+    (slower per round, survives executor loss — use on multi-hour
+    cluster runs), ``localCheckpoint`` otherwise.
     """
-    reliable = checkpoint_dir is not None
-    if reliable:
-        edges.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
     raw = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
     e = raw.where(F.col("a") != F.col("b"))
     if algorithm == "star":
@@ -190,7 +177,7 @@ def connected_components(
             .union(raw.select(F.col("b").alias("node")))
             .distinct()
         )
-        return _cc_star(e, nodes, max_iter, reliable)
+        return _cc_star(e, nodes, max_iter)
     if algorithm == "label":
-        return _cc_label(raw, max_iter, reliable)
+        return _cc_label(raw, max_iter)
     raise ValueError(f"unknown algorithm {algorithm!r}")

@@ -26,6 +26,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..session import barrier
+
 __all__ = ["bigram_lm_score"]
 
 
@@ -84,7 +86,7 @@ def bigram_lm_score(
     # four consumers (bigram counts, context counts, vocab, scoring
     # join) share no subtree — without a barrier one action tokenizes
     # and explodes the corpus four times (the decompose lesson)
-    pairs = pairs.localCheckpoint(eager=False)
+    pairs = barrier(pairs, eager=False)
 
     cb = pairs.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("__cb"))
     cu = pairs.groupBy("w1").agg(F.count(F.lit(1)).alias("__cu"))

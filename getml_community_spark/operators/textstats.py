@@ -17,6 +17,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from ..session import barrier
 from .tokenize import WORD, regex, shingles_arrow, split_expr, split_words, words_arrow
 
 __all__ = [
@@ -542,10 +543,9 @@ def tfidf_topk(
     # without a barrier each consumer re-runs the tokenize + explode +
     # (id, term) aggregation (plan-audited; the optimization guide's
     # duplicated-subtree trap). One slim checkpoint = one corpus pass.
-    tf = (
-        words.groupBy(id_col, "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        .localCheckpoint(eager=True)
+    tf = barrier(
+        words.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf")),
+        eager=True,
     )
     dfreq = (
         tf.groupBy("term")
@@ -673,15 +673,15 @@ def bm25_scores(
                 ],
             ),
         )
-        base = (
+        base = barrier(
             _spread(df)
             .select(F.col(id_col).alias("id"), row.alias("__s"))
             .select(
                 "id",
                 F.col("__s.dl").cast("long").alias("__dl"),
                 *[F.col(f"__s.tf{i}").alias(f"__tf{i}") for i in idx],
-            )
-            .localCheckpoint(eager=True)
+            ),
+            eager=True,
         )
         stats = base.agg(
             F.count(F.lit(1)).alias("__n"),
@@ -731,9 +731,9 @@ def bm25_scores(
     # the SLIM (id, long) frame once so the corpus tokenizes exactly
     # twice (dl pass + term pass), never per consumer. The token arrays
     # themselves are never materialized.
-    dl = base.select(
-        "id", F.size("__w").cast("long").alias("__dl")
-    ).localCheckpoint(eager=True)
+    dl = barrier(
+        base.select("id", F.size("__w").cast("long").alias("__dl")), eager=True
+    )
     stats = dl.agg(
         F.count(F.lit(1)).alias("__n"), F.sum("__dl").alias("__sumdl")
     )
@@ -743,10 +743,8 @@ def bm25_scores(
     # tf feeds both the document-frequency agg and the scoring join;
     # without a barrier each consumer re-runs the tokenize+explode scan
     # (plan-audited). The frame is tiny: <= len(terms) rows per doc.
-    tf = (
-        words.groupBy("id", "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        .localCheckpoint(eager=True)
+    tf = barrier(
+        words.groupBy("id", "term").agg(F.count(F.lit(1)).alias("tf")), eager=True
     )
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     scored = (

@@ -19,9 +19,10 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark import StorageLevel
+from pyspark.sql import DataFrame, SparkSession
 
-__all__ = ["get_spark", "stop_spark"]
+__all__ = ["get_spark", "stop_spark", "barrier"]
 
 
 def _iceberg_available() -> bool:
@@ -84,7 +85,8 @@ def get_spark(
         # (e.g. the 47-query bench loop, 3 plans per query, several
         # checkpoint barriers each) accumulate gigabytes of orphaned
         # storage blocks — measured as monotonic per-rep slowdown.
-        # 3min bounds the leak to a couple of plans' worth.
+        # 3min bounds the leak to a couple of plans' worth. barrier()
+        # below is the package's only producer of localCheckpoint blocks.
         .config("spark.cleaner.periodicGC.interval", "3min")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.ui.enabled", "false")
@@ -106,6 +108,20 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def barrier(df: DataFrame, *, eager: bool) -> DataFrame:
+    """Cut ``df``'s lineage: the package's one barrier policy. A
+    persisted frame is returned unchanged (its cache is the barrier).
+    With a session checkpoint dir (``sparkContext.setCheckpointDir``)
+    the cut is a reliable ``checkpoint()`` that survives executor loss
+    (its files stay until the store is cleaned); otherwise it is an
+    executor-local ``localCheckpoint()``, freed by the ContextCleaner."""
+    if df.storageLevel != StorageLevel.NONE:
+        return df
+    if df.sparkSession.sparkContext.getCheckpointDir() is not None:
+        return df.checkpoint(eager=eager)
+    return df.localCheckpoint(eager=eager)
 
 
 def stop_spark() -> None:

@@ -18,6 +18,21 @@ def spark():
     yield s
 
 
+@pytest.fixture
+def reliable_checkpoint_dir(spark, tmp_path):
+    """Point the shared session's checkpoint dir at a fresh directory, so
+    every ``session.barrier`` takes the reliable ``checkpoint()`` path,
+    and restore the previous dir on teardown. PySpark has no unset call;
+    without the reset every later test's barriers would be reliable."""
+    sc = spark.sparkContext
+    prev = sc.getCheckpointDir()
+    path = str(tmp_path / "ck")
+    sc.setCheckpointDir(path)
+    yield path
+    # Option.apply(None) is Scala's None: the "never set" state
+    getattr(sc._jsc.sc(), "checkpointDir_$eq")(sc._jvm.scala.Option.apply(prev))
+
+
 @pytest.fixture(scope="session")
 def corpus_pdf():
     from getml_community_spark.datagen import corpus_pandas

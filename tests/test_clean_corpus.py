@@ -141,20 +141,66 @@ def test_clean_corpus_line_dedup_stage(spark):
     assert dict(rep.stages)["lines"] == 2        # mutates, never drops
 
 
-def test_clean_corpus_reliable_checkpoint_dir(spark, corpus, tmp_path):
-    """checkpoint_dir= routes report-mode stage materialization (and the
-    transitive CC rounds) through reliable DataFrame.checkpoint()."""
+# report + transitive: every barrier kind in the chain runs (stage
+# notes, near-dedup shingle/pair barriers, connected-components rounds)
+_RELIABLE_KW = dict(min_words=20, min_stop_hits=1, report=True, transitive=True)
+
+
+def _ids(frame):
+    return sorted(r["doc_id"] for r in frame.select("doc_id").collect())
+
+
+@pytest.fixture(scope="module")
+def local_survivors(spark, corpus):
+    """Survivor ids of the reliable-mode chain run with no session
+    checkpoint dir, i.e. with every barrier a localCheckpoint."""
+    assert spark.sparkContext.getCheckpointDir() is None
+    out, rep = clean_corpus(corpus, **_RELIABLE_KW)
+    stages = dict(rep.stages)
+    assert stages["near"] < stages["exact"]  # the near stage drops a pair
+    return _ids(out)
+
+
+def test_clean_corpus_reliable_checkpoint_dir(
+    spark, corpus, local_survivors, reliable_checkpoint_dir
+):
+    """A session checkpoint dir routes report-mode stage materialization
+    (and the transitive CC rounds) through reliable
+    DataFrame.checkpoint()."""
     import os
 
-    ckdir = str(tmp_path / "clean_ck")
-    out, rep = clean_corpus(
-        corpus, report=True, transitive=True, checkpoint_dir=ckdir
-    )
-    ids = sorted(r["doc_id"] for r in out.select("doc_id").collect())
+    ckdir = reliable_checkpoint_dir
+    out, rep = clean_corpus(corpus, **_RELIABLE_KW)
     # same survivors as the localCheckpoint path
-    out2, _ = clean_corpus(corpus, report=True, transitive=True)
-    ids2 = sorted(r["doc_id"] for r in out2.select("doc_id").collect())
-    assert ids == ids2
+    assert _ids(out) == local_survivors
     assert [n for n, _ in rep.stages][:2] == ["input", "gopher"]
     found = [f for _, _, fs in os.walk(ckdir) for f in fs if not f.startswith(".")]
     assert found, f"no checkpoint files under {ckdir}"
+
+
+def test_reliable_mode_never_local_checkpoints(
+    spark, corpus, local_survivors, reliable_checkpoint_dir, monkeypatch
+):
+    """Under a session checkpoint dir no lineage cut falls back to an
+    executor-local block: the whole report + transitive chain completes
+    with DataFrame.localCheckpoint raising, and keeps the local-mode
+    survivors. A persisted frame passes the barrier untouched."""
+    from getml_community_spark.session import barrier
+
+    def refuse(self, *args, **kwargs):
+        raise AssertionError("lineage cut bypassed the barrier policy")
+
+    # patch the concrete class: pyspark.sql.DataFrame is only its base
+    DataFrame = type(corpus)
+    monkeypatch.setattr(DataFrame, "localCheckpoint", refuse)
+    out, rep = clean_corpus(corpus, **_RELIABLE_KW)
+    assert _ids(out) == local_survivors
+    assert [n for n, _ in rep.stages] == ["input", "gopher", "exact", "near"]
+
+    monkeypatch.setattr(DataFrame, "checkpoint", refuse)
+    cached = spark.range(5).cache()
+    try:
+        assert barrier(cached, eager=True) is cached
+        assert barrier(cached, eager=False) is cached
+    finally:
+        cached.unpersist()

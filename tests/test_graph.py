@@ -117,22 +117,19 @@ def test_transitive_dedup_drops_whole_chain(spark):
     assert t == [0]  # one survivor for the whole connected chain
 
 
-def test_cc_reliable_checkpoint_dir(spark, tmp_path):
-    """checkpoint_dir= switches per-round lineage truncation to reliable
-    DataFrame.checkpoint() — same components, and checkpoint files
-    actually land in the given store (round-4 advice: one reliable path
+def test_cc_reliable_checkpoint_dir(spark, reliable_checkpoint_dir):
+    """A session checkpoint dir switches per-round lineage truncation to
+    reliable DataFrame.checkpoint() — same components, and checkpoint
+    files actually land in that store (round-4 advice: one reliable path
     for iterative ops)."""
     import os
 
     rng = np.random.default_rng(5)
     edges = [(int(a), int(b)) for a, b in rng.integers(0, 60, size=(80, 2))]
     df = spark.createDataFrame(edges, "id_a long, id_b long")
-    ckdir = str(tmp_path / "cc_ck")
+    ckdir = reliable_checkpoint_dir
 
-    got = {
-        r["node"]: r["component"]
-        for r in connected_components(df, checkpoint_dir=ckdir).collect()
-    }
+    got = {r["node"]: r["component"] for r in connected_components(df).collect()}
     want = _union_find(edges)
     assert got == want
 
@@ -148,8 +145,6 @@ def test_cc_reliable_checkpoint_dir(spark, tmp_path):
     # label variant takes the same path
     got_l = {
         r["node"]: r["component"]
-        for r in connected_components(
-            df, algorithm="label", max_iter=80, checkpoint_dir=ckdir
-        ).collect()
+        for r in connected_components(df, algorithm="label", max_iter=80).collect()
     }
     assert got_l == want
