@@ -319,64 +319,33 @@ def q_json_extract(spark, sf):
 
 def q_battery_1h(spark, sf):
     """Extended aggregation battery per (user_id, hour bucket)
-    (SURVEY.md §2.6).
-
-    count_distinct is computed in a SEPARATE co-partitioned aggregation
-    and joined back (optimization guide §2.3 "aggregate before you
-    shuffle"): mixing a distinct aggregate with the buffer-heavy battery
-    makes Catalyst rewrite the whole agg to group by
-    (keys, value) first, building and exchanging one percentile/min_by
-    buffer PER DISTINCT VALUE (≈ per event on continuous doubles —
-    measured 4.9 s vs 2.9 s without the distinct at sf1-shape). The
-    standalone distinct branch plans as two cheap codegen hash
-    aggregates. Values are identical: same clean() input, same
-    count_distinct arithmetic, inner join on the identical group set.
-    The join is null-safe on both keys: a plain equi-join would drop
-    the groups whose user_id or bucket is NULL, which the single-agg
-    battery keeps."""
-    from getml_community_spark.operators.aggregates import battery, clean
+    (SURVEY.md §2.6). The operator splits count_distinct into its own
+    aggregation, joined back on null-safe keys, so NULL-key groups stay
+    and no per-distinct-value buffers are built."""
+    from getml_community_spark.operators.aggregates import grouped_battery
 
     ev = _spread(_load(spark, sf, "events"))
     t = F.col("ts").cast("timestamp").cast("double")
     bucket = _hour_bucket("ts")
-    t_ref = bucket.cast("double") + F.lit(3600.0)
-    aggs = battery(
+    out = grouped_battery(
+        ev,
+        [F.col("user_id"), bucket.alias("bucket_start")],
         F.col("value"),
         ts=t,
-        t_ref=t_ref,
+        t_ref=bucket.cast("double") + F.lit(3600.0),
         tiebreak=F.col("event_id"),
         include={
             "count", "sum", "avg", "min", "max", "median", "q25", "q75",
-            "q90", "stddev_pop", "var_pop", "first",
+            "q90", "stddev_pop", "var_pop", "count_distinct", "first",
             "last", "avg_time_between", "trend", "ewma_1h",
             "variation_coefficient",
         },
     )
-    main = ev.groupBy(F.col("user_id"), bucket.alias("bucket_start")).agg(*aggs)
-    cd = ev.groupBy(F.col("user_id").alias("__u"), bucket.alias("__b")).agg(
-        F.count_distinct(clean(F.col("value"))).cast("double").alias(
-            "count_distinct"
-        )
-    )
-    out = main.join(
-        cd,
-        F.col("user_id").eqNullSafe(F.col("__u"))
-        & F.col("bucket_start").eqNullSafe(F.col("__b")),
-    )
-    # column order must stay byte-identical to the single-agg battery's
-    # emission order (driver gate is column-order sensitive):
-    # count_distinct sits between stddev_pop and first
-    order = [
-        "count", "sum", "avg", "min", "max", "median", "q25", "q75",
-        "q90", "var_pop", "stddev_pop", "count_distinct", "first",
-        "last", "avg_time_between", "ewma_1h", "trend",
-        "variation_coefficient",
-    ]
     return out.select(
         "user_id",
         "bucket_start",
         F.col("count").cast("long").alias("cnt"),
-        *[_r(F.col(c)).alias(c) for c in order if c != "count"],
+        *[_r(F.col(c)).alias(c) for c in out.columns[3:]],
     )
 
 
@@ -570,7 +539,7 @@ def q_asof_upper_ts(spark, sf):
     m = asof_match(
         orders, events, on="o_custkey", population_id="o_orderkey",
         pop_ts="pop_ts", peri_ts="ts", horizon=0.0, memory=None,
-        upper_ts="valid_until", strategy="range",
+        upper_ts="valid_until",
         peri_cols=["value", "ts", "valid_until"],
     )
     return (

@@ -32,6 +32,8 @@ Spark-first design notes
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -40,6 +42,7 @@ from ..oracle import HALF_LIVES
 __all__ = [
     "clean",
     "battery",
+    "grouped_battery",
     "QUANTILES",
     "two_pass_battery",
     "mode_agg",
@@ -90,6 +93,12 @@ def battery(
               flip this on when a group can hold millions of rows and
               the reference-exactness gate doesn't apply.
     """
+    out = _metrics(value, ts, t_ref, tiebreak, approx)
+    return [c.alias(prefix + k) for k, c in out.items() if include is None or k in include]
+
+
+def _metrics(value, ts, t_ref, tiebreak, approx=False) -> dict[str, Column]:
+    """Every battery metric by name, in emission order."""
     v = clean(value)
     out: dict[str, Column] = {}
 
@@ -183,9 +192,47 @@ def battery(
     # VARIATION COEFFICIENT = var_pop/mean (sic), Aggregations.hpp:696-707
     out["variation_coefficient"] = out["var_pop"] / F.nullif(out["avg"], F.lit(0.0))
 
-    if include is not None:
-        out = {k: c for k, c in out.items() if k in include}
-    return [c.alias(prefix + k) for k, c in out.items()]
+    return out
+
+
+_DISTINCT = ("count_distinct", "count_distinct_over_count", "count_minus_count_distinct")
+
+
+def grouped_battery(
+    df: DataFrame, keys: list, value: Column, *, ts: Column | None = None,
+    t_ref: Column | None = None, tiebreak: Column | None = None,
+    include: set[str] | None = None,
+) -> DataFrame:
+    """``df.groupBy(*keys).agg(*battery(...))``: keys, then the metrics
+    in ``battery()``'s emission order.
+
+    A distinct metric requested with other metrics runs
+    ``count_distinct`` as its own aggregation on the same keys: in one
+    aggregate, Catalyst's one-distinct rewrite groups by (keys, value)
+    first and builds one percentile/min_by buffer PER DISTINCT VALUE
+    (measured 4.9 s vs 2.9 s at sf1-shape). The join back is null-safe,
+    so NULL-key groups stay; the ratios derive after it."""
+    out = _metrics(value, ts, t_ref, tiebreak)
+    names = [k for k in out if include is None or k in include]
+    distinct = [k for k in names if k in _DISTINCT]
+    if not distinct or len(distinct) == len(names):
+        return df.groupBy(*keys).agg(*[out[k].alias(k) for k in names])
+    main = df.groupBy(*keys).agg(
+        *[out[k].alias(k) for k in names if k not in _DISTINCT],
+        out["count"].alias("__count"),
+    )
+    kn = main.columns[: len(keys)]
+    cd = df.groupBy(*keys).agg(out["count_distinct"])
+    cd = cd.toDF(*[f"__k{i}" for i in range(len(keys))], "count_distinct")
+    on = [F.col(k).eqNullSafe(F.col(f"__k{i}")) for i, k in enumerate(kn)]
+    joined = main.join(cd, reduce(lambda a, b: a & b, on))
+    n, nd = F.col("__count"), F.col("count_distinct")
+    derived = {
+        "count_distinct": nd,
+        "count_distinct_over_count": nd / F.nullif(n, F.lit(0.0)),
+        "count_minus_count_distinct": n - nd,
+    }
+    return joined.select(*kn, *[derived.get(k, F.col(k)).alias(k) for k in names])
 
 
 def assert_equal_agg(value: Column, name: str | None = None) -> Column:

@@ -15,18 +15,27 @@ one ``groupBy(population_id).agg(*battery)`` computes every feature in
 a single shuffle, the Spark analogue of the reference's row-wise
 batched generation (FastProp.cpp:269-310).
 
-Scale strategy ("bucketed"): the reference bounds window lookups with a
-per-key timestamp tree index (tsindex/InMemoryIndex.hpp:37-43). The
-shuffle-native analogue is TIME BUCKETING: peripheral rows get bucket
-``floor(ts/W)`` with W = memory; each population row joins to the ≤
-⌈m/W⌉+1 = 2 buckets its window can touch (exploded via a literal
-array, pure JVM). The equi-join on (key, bucket) bounds candidates per
-row to O(rows in 2 buckets) instead of O(rows per key) — the skew killer
-for long-history keys. The exact range predicate filters inside the
-joined stage before any aggregation state is built.
+One feature core: ``asof_features`` and ``fastprop_features`` build
+their feature Columns and hand them to :func:`_asof_aggregate`, which
+alone owns the duplicate-id guard (a shared ``population_id`` raises
+``ValueError``), the LEFT match, the carries, the groupBy, the re-emit
+and the empty-match defaults.
+
+Join shape (no option; ``memory`` decides): the reference bounds window
+lookups with a per-key timestamp tree index
+(tsindex/InMemoryIndex.hpp:37-43). The shuffle-native analogue is TIME
+BUCKETING: peripheral rows get bucket ``floor(ts/W)`` with W = memory;
+each population row joins to the ≤ ⌈m/W⌉+1 = 2 buckets its window can
+touch (exploded via a literal array, pure JVM). The equi-join on (key,
+bucket) bounds candidates per row to O(rows in 2 buckets) instead of
+O(rows per key) — the skew killer for long-history keys. With
+``memory=None`` the join is on the key alone. The exact range predicate
+filters inside the joined stage before any aggregation state is built.
 """
 
 from __future__ import annotations
+
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame, functions as F
 
@@ -41,12 +50,6 @@ def _epoch(col: Column) -> Column:
     return col.cast("timestamp").cast("double")
 
 
-def _window_bounds(t_pop: Column, horizon: float, memory: float | None):
-    upper = t_pop - F.lit(float(horizon))
-    lower = upper - F.lit(float(memory)) if memory is not None else None
-    return lower, upper
-
-
 def asof_match(
     population: DataFrame,
     peripheral: DataFrame,
@@ -57,7 +60,6 @@ def asof_match(
     horizon: float = 0.0,
     memory: float | None = None,
     upper_ts: str | None = None,
-    strategy: str = "auto",
     peri_cols: list[str] | None = None,
     pop_cols: list[str] | None = None,
     how: str = "inner",
@@ -65,8 +67,11 @@ def asof_match(
     """Return matched (population_id, pop_ts_epoch, peripheral columns)
     pairs under the reference window predicate.
 
-    Timestamps may be TimestampType (cast to double epoch seconds — the
-    reference stores double epoch, data/time.py:11-23) or numeric.
+    The frame holds ``__pop_id``, ``__t_pop``, ``__t_peri``, one
+    ``__pop_<c>`` per ``pop_cols`` entry, the join keys and the kept
+    peripheral columns. Timestamps may be TimestampType (cast to double
+    epoch seconds — the reference stores double epoch,
+    data/time.py:11-23) or numeric.
 
     ``how="left"`` keeps every population row: rows with no window match
     are emitted once per candidate bucket with all peripheral columns
@@ -83,7 +88,7 @@ def asof_match(
     if not on:
         # keyless join: the reference adds a constant join key to both
         # sides (modify_data_frames.cpp:121-131 add_jk). The bucketed
-        # strategy still bounds candidates by time bucket, so this is a
+        # shape still bounds candidates by time bucket, so this is a
         # time-windowed cross join, not a full cartesian.
         population = population.withColumn("__jk", F.lit(1))
         peripheral = peripheral.withColumn("__jk", F.lit(1))
@@ -91,7 +96,6 @@ def asof_match(
 
     t_pop = _epoch(F.col(pop_ts))
     t_peri = _epoch(F.col(peri_ts))
-    lower, upper = _window_bounds(t_pop, horizon, memory)
 
     keep = peri_cols or [c for c in peripheral.columns if c not in on]
     peri = peripheral.select(
@@ -108,58 +112,114 @@ def asof_match(
         *[F.col(c).alias(f"__pop_{c}") for c in extra_pop],
     )
 
-    if strategy == "auto":
-        strategy = "bucketed" if memory is not None else "range"
-
-    if strategy == "bucketed":
+    upper = F.col("__t_pop") - F.lit(float(horizon))
+    cond = F.col("__t_peri") <= upper
+    if memory is not None:
         w = float(memory)
+        cond = cond & (F.col("__t_peri") > upper - F.lit(w))
         peri = peri.withColumn(
             "__bkt", F.floor(F.col("__t_peri") / F.lit(w)).cast("long")
         )
-        lo_b = F.floor((F.col("__t_pop") - F.lit(float(horizon)) - F.lit(w)) / F.lit(w))
-        hi_b = F.floor((F.col("__t_pop") - F.lit(float(horizon))) / F.lit(w))
-        pop_e = pop.withColumn(
+        lo_b = F.floor((upper - F.lit(w)) / F.lit(w))
+        hi_b = F.floor(upper / F.lit(w))
+        pop = pop.withColumn(
             "__bkt",
             F.explode(F.array_distinct(F.array(lo_b.cast("long"), hi_b.cast("long")))),
         )
         join_keys = on + ["__bkt"]
     else:
-        pop_e = pop
         join_keys = list(on)
-
-    upper_pred = F.col("__t_peri") <= (F.col("__t_pop") - F.lit(float(horizon)))
-    cond = upper_pred
-    if memory is not None:
-        cond = cond & (
-            F.col("__t_peri")
-            > (F.col("__t_pop") - F.lit(float(horizon)) - F.lit(float(memory)))
-        )
     if upper_ts is not None:
         # reference: NaN/NULL upper ⇒ open-ended (Matchmaker.hpp:126-131)
         u = _epoch(F.col(upper_ts))
         cond = cond & (u.isNull() | F.isnan(u) | (u > F.col("__t_pop")))
 
+    drop = ["__bkt"] if memory is not None else []
     if how == "inner":
-        joined = pop_e.join(peri, on=join_keys, how="inner")
-        if strategy == "bucketed":
-            joined = joined.drop("__bkt")
-        return joined.where(cond)
+        return pop.join(peri, on=join_keys, how="inner").drop(*drop).where(cond)
     # how == "left": the window predicate joins the equi keys inside the
     # ON condition so match-less population rows null-extend instead of
     # disappearing. Peripheral key columns are renamed to avoid ambiguity
     # and dropped after the join.
-    peri_r = peri
-    for k in join_keys:
-        peri_r = peri_r.withColumnRenamed(k, f"__peri_{k}")
-    eq = None
-    for k in join_keys:
-        e = F.col(k) == F.col(f"__peri_{k}")
-        eq = e if eq is None else eq & e
-    joined = pop_e.join(peri_r, eq & cond, "left")
+    peri_r = peri.withColumnsRenamed({k: f"__peri_{k}" for k in join_keys})
+    eq = [F.col(k) == F.col(f"__peri_{k}") for k in join_keys]
+    joined = pop.join(peri_r, reduce(lambda a, b: a & b, eq) & cond, "left")
     # population key columns stay (callers re-emit them); internal
     # bucket + renamed peripheral keys go
-    drop = ["__bkt"] if strategy == "bucketed" else []
     return joined.drop(*drop, *[f"__peri_{k}" for k in join_keys])
+
+
+def _asof_aggregate(
+    population: DataFrame,
+    population_id: str,
+    features: list[Column],
+    zero_fill: dict[str, object],
+    *,
+    on: list[str] | str,
+    pop_cols: list[str],
+    **match,
+) -> DataFrame:
+    """The as-of feature core: one output row per population row, its
+    columns in population order followed by ``features`` (aliased
+    aggregate Columns over the LEFT :func:`asof_match` frame; ``match``
+    holds its other arguments).
+
+    ``population_id`` must be unique — one eager job checks it and
+    raises ``ValueError`` naming a duplicated id, since the single
+    ``groupBy(__pop_id)`` would otherwise merge the rows' match sets.
+    A row with no window match gets NULL for every feature except the
+    ``zero_fill`` ones, which get their literal (the reference's
+    empty-set defaults, Aggregations.hpp: COUNT→0, SUM→0.0).
+    """
+    # repartitioning by the id first lets Catalyst collapse a caller's own
+    # round-robin repartition (CollapseRepartition), so the check costs
+    # one shuffle of the id column, not two
+    dup = (
+        population.repartition(population_id)
+        .groupBy(population_id).agg(F.count(F.lit(1)).alias("__n"))
+        .where(F.col("__n") > 1).limit(1).collect()
+    )
+    if dup:
+        raise ValueError(
+            f"population_id {population_id!r} must be unique: "
+            f"{dup[0][0]!r} appears {dup[0][1]} times"
+        )
+    on_l = [on] if isinstance(on, str) else list(on)
+    pop_carry = [c for c in population.columns if c != population_id]
+    matched = asof_match(
+        population, population_id=population_id, on=on_l, how="left",
+        pop_cols=list(dict.fromkeys([*pop_cols, *pop_carry])), **match,
+    )
+    # LEFT match + one groupBy covers match-less population rows, so no
+    # rejoin pass over the population (optimization guide §2.4 — the old
+    # population⋈features sort-merge rejoin was ~20-25% of the query at
+    # sf1-shape); non-id population columns ride along as first()
+    # (constant per pop row). __nm counts REAL matches: __t_peri is null
+    # exactly on null-extended rows.
+    carries = [
+        F.first(F.col(c) if c in on_l else F.col(f"__pop_{c}")).alias(c)
+        for c in pop_carry
+    ]
+    grouped = matched.groupBy("__pop_id").agg(
+        *carries, *features, F.count(F.col("__t_peri")).alias("__nm")
+    )
+    # an empty match set emits NULL features (e.g. avg_time_between's
+    # n<=1 → 0.0 branch must not fire) except the zero-filled ones
+    has = F.col("__nm") > 0
+    return grouped.select(
+        *[
+            F.col("__pop_id").alias(c) if c == population_id else F.col(c)
+            for c in population.columns
+        ],
+        *[
+            (
+                F.coalesce(F.col(n), F.lit(zero_fill[n]))
+                if n in zero_fill
+                else F.when(has, F.col(n))
+            ).alias(n)
+            for n in grouped.columns[1 + len(carries):-1]
+        ],
+    )
 
 
 def asof_features(
@@ -174,7 +234,6 @@ def asof_features(
     memory: float | None = None,
     include: set[str] | None = None,
     prefix: str = "",
-    strategy: str = "auto",
     value_expr=None,
     peri_cols: list[str] | None = None,
     pop_cols: list[str] | None = None,
@@ -185,36 +244,17 @@ def asof_features(
     HumanReadableSQLGenerator.cpp:557's join chain collapses into a
     single shuffle).
 
-    Population rows with no matches keep LEFT-join semantics: count=0,
-    sum=0.0, everything else NULL (the engine's NaN). The match itself
-    is a LEFT join (window predicate in the join condition), so one
-    ``groupBy(population_id)`` covers match-less rows too and no second
-    pass over the population / rejoin shuffle is needed (optimization
-    guide §2.4 — measured: the old population⋈features sort-merge rejoin
-    was ~20-25%% of the query at sf1-shape). Requires ``population_id``
-    to uniquely identify population rows (the as-of contract's row id);
-    non-id population columns are carried as ``first()`` per group.
+    Builds the battery Columns and runs them through the as-of feature
+    core shared with ``fastprop_features``: population rows with no
+    matches get count=0, sum=0.0, everything else NULL (the engine's
+    NaN); non-id population columns are carried as ``first()`` per
+    group. ``population_id`` must uniquely identify population rows; a
+    duplicated id raises ``ValueError``.
     """
     from .aggregates import battery
 
     if (value_col is None) == (value_expr is None):
         raise ValueError("pass exactly one of value_col / value_expr")
-    on_l = [on] if isinstance(on, str) else list(on)
-    pop_carry = [c for c in population.columns if c != population_id]
-    matched = asof_match(
-        population,
-        peripheral,
-        on,
-        population_id,
-        pop_ts,
-        peri_ts,
-        horizon=horizon,
-        memory=memory,
-        strategy=strategy,
-        peri_cols=(peri_cols or ([value_col, peri_ts] if value_col else None)),
-        pop_cols=list(dict.fromkeys([*(pop_cols or []), *pop_carry])),
-        how="left",
-    )
     # value_expr enables the reference's value-extraction variants
     # (fastprop/Aggregator.cpp): categorical dummies
     # (CASE WHEN c='x' THEN 1 ELSE 0, SQLMaker.cpp:295-307) and
@@ -235,33 +275,9 @@ def asof_features(
         include=include,
         prefix=prefix,
     )
-    carries = [
-        F.first(F.col(c) if c in on_l else F.col(f"__pop_{c}")).alias(c)
-        for c in pop_carry
-    ]
-    # __nm counts REAL matches; a pop row with zero matches must emit
-    # NULL for every feature except count/sum (exactly what the old
-    # population⋈features rejoin produced for absent feature rows —
-    # e.g. avg_time_between's n<=1 → 0.0 branch must not fire on an
-    # empty match set).
-    grouped = matched.groupBy("__pop_id").agg(
-        *carries, *aggs, F.count(F.col("__t_peri")).alias("__nm")
+    return _asof_aggregate(
+        population, population_id, aggs, {prefix + "count": 0.0, prefix + "sum": 0.0},
+        peripheral=peripheral, on=on, pop_ts=pop_ts, peri_ts=peri_ts,
+        horizon=horizon, memory=memory, pop_cols=pop_cols or [],
+        peri_cols=peri_cols or ([value_col, peri_ts] if value_col else None),
     )
-    feat_names = grouped.columns[1 + len(carries):-1]
-    has = F.col("__nm") > 0
-    keep_raw = {prefix + "count", prefix + "sum"}
-    out = grouped.select(
-        *[
-            F.col("__pop_id").alias(c) if c == population_id else F.col(c)
-            for c in population.columns
-        ],
-        *[
-            (F.col(n) if n in keep_raw else F.when(has, F.col(n))).alias(n)
-            for n in feat_names
-        ],
-    )
-    # empty-match defaults (Aggregations.hpp: COUNT→0, SUM→0.0)
-    for c in (prefix + "count", prefix + "sum"):
-        if c in out.columns:
-            out = out.withColumn(c, F.coalesce(F.col(c), F.lit(0.0)))
-    return out

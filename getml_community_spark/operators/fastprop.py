@@ -17,7 +17,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from .asof_join import asof_match
+from .asof_join import _asof_aggregate
 
 __all__ = ["top_categories", "fastprop_features", "select_features", "FASTPROP_AGGS"]
 
@@ -32,6 +32,7 @@ FASTPROP_AGGS = {
     "stddev_pop": lambda c: F.stddev_pop(c),
     "median": lambda c: F.median(c),
 }
+_EMPTY = {"count": 0, "sum": 0.0}
 
 
 def top_categories(
@@ -66,7 +67,6 @@ def fastprop_features(
     same_units_pairs: tuple[tuple[str, str], ...] = (),
     horizon: float = 0.0,
     memory: float | None = None,
-    strategy: str = "auto",
     fitted_categories: dict[str, list] | None = None,
 ) -> DataFrame:
     """Auto-enumerate and compute the conditions × aggregations feature
@@ -94,38 +94,18 @@ def fastprop_features(
 
     Feature columns are named ``{agg}__{value_col}__{condition}``. All
     features compute in ONE groupBy over the match frame (single
-    shuffle). The match is a LEFT join, so population rows with no
-    matches keep count=0 / sum=0.0 / NULL. Requires ``population_id``
-    to uniquely identify population rows, as ``asof_features`` does:
-    rows sharing an id collapse into ONE output row whose features
-    aggregate all their matches, and non-id population columns are
-    carried as ``first()`` per group.
+    shuffle) through the as-of feature core shared with
+    ``asof_features``: population rows with no matches get
+    ``count__*`` = 0, ``sum__*`` = 0.0 and NULL elsewhere, and non-id
+    population columns are carried as ``first()`` per group.
+    ``population_id`` must uniquely identify population rows; a
+    duplicated id raises ``ValueError``.
     """
     for a in aggs:
         if a not in FASTPROP_AGGS:
             raise ValueError(f"unknown aggregation {a!r}")
     if n_lag_splits and memory is None:
         raise ValueError("lag splits require a finite memory window")
-
-    on_l = [on] if isinstance(on, str) else list(on)
-    pop_carry = [c for c in population.columns if c != population_id]
-    peri_needed = [*value_cols, *categorical_cols, *(p[1] for p in same_units_pairs)]
-    matched = asof_match(
-        population,
-        peripheral,
-        on,
-        population_id,
-        pop_ts,
-        peri_ts,
-        horizon=horizon,
-        memory=memory,
-        strategy=strategy,
-        peri_cols=list(dict.fromkeys([*peri_needed, peri_ts])),
-        pop_cols=list(
-            dict.fromkeys([*(p[0] for p in same_units_pairs), *pop_carry])
-        ),
-        how="left",
-    )
 
     conditions: list[tuple[str, Column | None]] = [("all", None)]
     for ccol in categorical_cols:
@@ -155,36 +135,23 @@ def fastprop_features(
             )
 
     feature_cols: list[Column] = []
-    names: list[str] = []
+    zero_fill: dict[str, object] = {}
     for cond_name, cond in conditions:
         for vc in value_cols:
             base = F.col(vc) if cond is None else F.when(cond, F.col(vc))
             for a in aggs:
                 name = f"{a}__{vc}__{cond_name}"
                 feature_cols.append(FASTPROP_AGGS[a](base).alias(name))
-                names.append(name)
+                if a in _EMPTY:
+                    zero_fill[name] = _EMPTY[a]
 
-    # LEFT-match + one groupBy covers match-less population rows, so no
-    # rejoin pass over the population (optimization guide §2.4); non-id
-    # population columns ride along as first() (constant per pop row).
-    carries = [
-        F.first(F.col(c) if c in on_l else F.col(f"__pop_{c}")).alias(c)
-        for c in pop_carry
-    ]
-    grouped = matched.groupBy("__pop_id").agg(*carries, *feature_cols)
-    out = grouped.select(
-        *[
-            F.col("__pop_id").alias(c) if c == population_id else F.col(c)
-            for c in population.columns
-        ],
-        *names,
+    peri_needed = [*value_cols, *categorical_cols, *(p[1] for p in same_units_pairs)]
+    return _asof_aggregate(
+        population, population_id, feature_cols, zero_fill,
+        peripheral=peripheral, on=on, pop_ts=pop_ts, peri_ts=peri_ts,
+        horizon=horizon, memory=memory, pop_cols=[p[0] for p in same_units_pairs],
+        peri_cols=list(dict.fromkeys([*peri_needed, peri_ts])),
     )
-    for name in names:
-        if name.startswith("count__"):
-            out = out.withColumn(name, F.coalesce(F.col(name), F.lit(0)))
-        elif name.startswith("sum__"):
-            out = out.withColumn(name, F.coalesce(F.col(name), F.lit(0.0)))
-    return out
 
 
 def select_features(

@@ -184,22 +184,22 @@ def rollup_battery(
     bucket END — the reference's ts_pop for a bucket-end population row
     (paper Fig. 2 window (t_pop − h − m, t_pop − h] with h=0, m=tier).
     """
-    from .aggregates import battery
+    from .aggregates import grouped_battery
 
     sec = TIER_SECONDS[tier]
     b = _bucket_epoch(ts_col, sec)
     ts_epoch = F.col(ts_col).cast("timestamp").cast("double")
     t_ref = (b + F.lit(sec)).cast("double")  # bucket end, constant per group
-    aggs = battery(
-        F.col(value_col),
-        ts=ts_epoch,
-        t_ref=t_ref,
-        tiebreak=F.xxhash64(F.col("doc_id")) if "doc_id" in df.columns else None,
-        include=include,
-    )
     return (
-        df.groupBy(F.col(source_col).alias("source"), b.alias("__b"))
-        .agg(*aggs)
+        grouped_battery(
+            df,
+            [F.col(source_col).alias("source"), b.alias("__b")],
+            F.col(value_col),
+            ts=ts_epoch,
+            t_ref=t_ref,
+            tiebreak=F.xxhash64(F.col("doc_id")) if "doc_id" in df.columns else None,
+            include=include,
+        )
         .withColumn("bucket_start", F.timestamp_seconds(F.col("__b")))
         .drop("__b")
     )

@@ -1,8 +1,9 @@
 """As-of join vs DuckDB on the driver's star-schema testdata:
 for each orders row, over events with user_id == o_custkey and
 ts ∈ (pop_ts − 7d, pop_ts − 1h], the SQL-expressible battery
-(FIXTURES.md §3 representative query). Bucketed and range strategies
-must agree with each other and with the oracle.
+(FIXTURES.md §3 representative query). The finite memory makes this
+the time-bucketed join shape; the memory=None range shape is gated by
+the contract suite's ``asof_upper_ts`` query.
 
 Population timestamps are REMAPPED into the events span
 (2024-01-08 + (o_orderkey % 480) hours): o_orderdate spans 1995-2001
@@ -63,8 +64,8 @@ def oracle_pdf():
     return duckdb.sql(ORACLE_SQL).df().set_index("o_orderkey").sort_index()
 
 
-@pytest.fixture(scope="module", params=["bucketed", "range"])
-def spark_feats(request, spark):
+@pytest.fixture(scope="module")
+def spark_feats(spark):
     from getml_community_spark.operators.asof_join import asof_features
 
     orders = _with_pop_ts(spark.read.parquet(f"{SF}/orders.parquet"))
@@ -93,7 +94,6 @@ def spark_feats(request, spark):
             "first",
             "last",
         },
-        strategy=request.param,
     )
     return (
         feats.select(

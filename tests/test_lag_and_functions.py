@@ -308,37 +308,59 @@ def test_fastprop_same_units_condition(spark):
 
 def test_population_id_uniqueness_contract(spark):
     """asof_features and fastprop_features require a unique
-    population_id: rows sharing an id collapse into ONE output row whose
-    features aggregate all their matches, and match-less rows keep
-    count=0 / sum=0.0."""
+    population_id: a duplicated id raises ValueError naming it (an exact
+    duplicate row and a same-id/different-ts row alike) instead of
+    merging the rows' match sets. On unique ids match-less rows keep
+    count=0 / sum=0.0 / NULL, and the output schema is pinned on a long
+    value column (the zero-fill literals set the count/sum types)."""
     from getml_community_spark.operators.asof_join import asof_features
     from getml_community_spark.operators.fastprop import fastprop_features
 
-    # pid 1 twice: windows (500, 1000] and (700, 1200] hold 5 + 5 matches
-    pop = spark.createDataFrame(
-        [(1, 100, 1000.0), (1, 100, 1200.0), (2, 100, 1100.0), (3, 999, 1000.0)],
-        ["pid", "k", "t_pop"],
-    )
+    cols = ["pid", "k", "t_pop"]
+    unique = [(1, 100, 1000.0), (2, 100, 1100.0), (3, 999, 1000.0)]
     peri = spark.createDataFrame(
-        [(100, float(t), t / 100.0) for t in range(0, 1500, 100)], ["k", "t", "v"]
+        [(100, float(t), t // 100) for t in range(0, 1500, 100)], ["k", "t", "v"]
     )
     kw = dict(
         on="k", population_id="pid", pop_ts="t_pop", peri_ts="t",
         horizon=0.0, memory=500.0,
     )
-    asof = asof_features(pop, peri, value_col="v", include={"count", "sum"}, **kw)
-    fp = fastprop_features(pop, peri, value_cols=["v"], aggs=("count", "sum"), **kw)
-    for out, count, total in (
-        (asof, "count", "sum"),
-        (fp, "count__v__all", "sum__v__all"),
+    ops = (
+        lambda pop: asof_features(
+            pop, peri, value_col="v", include={"count", "sum", "avg"}, **kw
+        ),
+        lambda pop: fastprop_features(
+            pop, peri, value_cols=["v"], aggs=("count", "sum", "avg"), **kw
+        ),
+    )
+    for dup in ((41, 100, 1000.0), (41, 100, 1200.0)):
+        pop = spark.createDataFrame([*unique, (41, 100, 1000.0), dup], cols)
+        for op in ops:
+            with pytest.raises(ValueError, match=r"'pid'.*\b41\b"):
+                op(pop)
+
+    asof, fp = (op(spark.createDataFrame(unique, cols)) for op in ops)
+    base = [("pid", "bigint"), ("k", "bigint"), ("t_pop", "double")]
+    assert [(f.name, f.dataType.simpleString()) for f in asof.schema] == [
+        *base, ("count", "double"), ("sum", "double"), ("avg", "double"),
+    ]
+    assert [(f.name, f.dataType.simpleString()) for f in fp.schema] == [
+        *base, ("count__v__all", "bigint"), ("sum__v__all", "double"),
+        ("avg__v__all", "double"),
+    ]
+    for out, (count, total, avg) in (
+        (asof, ("count", "sum", "avg")),
+        (fp, ("count__v__all", "sum__v__all", "avg__v__all")),
     ):
         pdf = out.toPandas()
         assert sorted(pdf["pid"]) == [1, 2, 3]
         pdf = pdf.set_index("pid")
-        assert pdf.loc[1, count] == 10
-        assert pdf.loc[1, total] == pytest.approx(6 + 7 + 8 + 9 + 10 + 8 + 9 + 10 + 11 + 12)
+        # pid 1's window (500, 1000] holds v = 6..10
+        assert pdf.loc[1, count] == 5
+        assert pdf.loc[1, total] == 40
         assert pdf.loc[3, count] == 0
         assert pdf.loc[3, total] == 0.0
+        assert pd.isna(pdf.loc[3, avg])
 
 
 def test_fastprop_pipeline_fit_transform_to_sql(spark):

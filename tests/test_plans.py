@@ -114,7 +114,11 @@ def test_fastprop_grid_is_single_aggregation(spark):
     """The whole enumerated conditions x aggregations grid (30 features)
     computes in ONE hash aggregation (partial + final) with zero Python
     in the plan — FastProp's N-feature-tables-plus-backjoins collapsed
-    into one shuffle."""
+    into one shuffle. asof_features shares the same core and must plan
+    the same way."""
+    import re
+
+    from getml_community_spark.operators.asof_join import asof_features
     from getml_community_spark.operators.fastprop import fastprop_features
 
     orders = spark.read.parquet(f"{SF}/orders.parquet").withColumn(
@@ -126,15 +130,19 @@ def test_fastprop_grid_is_single_aggregation(spark):
     events = spark.read.parquet(f"{SF}/events.parquet").withColumnRenamed(
         "user_id", "o_custkey"
     )
+    kw = dict(
+        on="o_custkey", population_id="o_orderkey", pop_ts="pop_ts",
+        peri_ts="ts", horizon=3600.0, memory=7 * 86400.0 - 3600.0,
+    )
     out = fastprop_features(
-        orders, events, on="o_custkey", population_id="o_orderkey",
-        pop_ts="pop_ts", peri_ts="ts", value_cols=["value"],
+        orders, events, value_cols=["value"],
         aggs=("count", "sum", "avg", "min", "max"),
-        categorical_cols=("event_type",), n_most_frequent=3, n_lag_splits=2,
-        horizon=3600.0, memory=7 * 86400.0 - 3600.0,
+        categorical_cols=("event_type",), n_most_frequent=3, n_lag_splits=2, **kw,
     )
     feature_cols = [c for c in out.columns if "__value__" in c]
     assert len(feature_cols) == 30
+    include = {"count", "sum", "avg", "min", "max"}
+    asof = asof_features(orders, events, value_col="value", include=include, **kw)
     # the feature-extraction shape (id + features — what the contract
     # queries select): Catalyst prunes the population-column first()
     # carries, leaving ONE hash aggregation (partial + final) and no
@@ -142,13 +150,34 @@ def test_fastprop_grid_is_single_aggregation(spark):
     # degrades the carry to a sort-based aggregate (first(string) has no
     # mutable hash buffer) — the price of the rejoin-free left-match
     # plan, comparable to the old rejoin's sort-merge.
-    plan = _plan(out.select("o_orderkey", *feature_cols))
+    for df in (out.select("o_orderkey", *feature_cols), asof.select("o_orderkey", *include)):
+        plan = _plan(df)
+        assert len(re.findall(r"HashAggregate", plan)) == 2, plan  # partial + final
+        assert "SortMergeJoin" not in plan, plan  # no population rejoin
+        assert plan.count("Exchange") <= 4, plan
+        assert "BatchEvalPython" not in plan and "ArrowEval" not in plan, plan
+
+
+def test_rollup_battery_percentiles_keyed_by_group_only(spark):
+    """rollup_battery's full battery holds count_distinct; mixed into the
+    one aggregate, Catalyst's one-distinct rewrite would key the
+    percentile buffers by (source, bucket, value). grouped_battery splits
+    the distinct off, so every percentile aggregate is keyed by
+    (source, bucket) alone."""
     import re
 
-    assert len(re.findall(r"HashAggregate", plan)) == 2, plan  # partial + final
-    assert "SortMergeJoin" not in plan, plan  # no population rejoin
-    assert plan.count("Exchange") <= 4, plan
-    assert "BatchEvalPython" not in plan and "ArrowEval" not in plan, plan
+    from getml_community_spark.operators.rollup import rollup_battery
+
+    ev = spark.read.parquet(f"{SF}/events.parquet")
+    plan = _plan(rollup_battery(ev, "1h", source_col="user_id", ts_col="ts", value_col="value"))
+    keys = [
+        re.search(r"Aggregate\(keys=\[([^\]]*)\]", line).group(1)
+        for line in plan.splitlines()
+        if "Aggregate(keys=" in line and "percentile" in line
+    ]
+    assert keys, plan
+    for k in keys:
+        assert len(k.split(", ")) == 2, plan
 
 
 def test_bucketed_tables_join_without_shuffle(spark, tmp_path):
