@@ -557,7 +557,8 @@ def q_asof_categorical_dummy(spark, sf):
     (o_totalprice − 1000·value per match) aggregated over the window."""
     from getml_community_spark.operators.asof_join import asof_features
 
-    orders = _with_pop_ts(_spread(_load(spark, sf, "orders")))
+    # no _spread: the as-of feature core spreads the population by its id
+    orders = _with_pop_ts(_load(spark, sf, "orders"))
     events = _spread(_load(spark, sf, "events")).withColumnRenamed("user_id", "o_custkey")
     dummy = asof_features(
         orders, events, on="o_custkey", population_id="o_orderkey",
@@ -616,7 +617,7 @@ def q_asof_orders_events(spark, sf):
     overlaps events, making the old gate vacuous)."""
     from getml_community_spark.operators.asof_join import asof_features
 
-    orders = _with_pop_ts(_spread(_load(spark, sf, "orders")))
+    orders = _with_pop_ts(_load(spark, sf, "orders"))
     events = _spread(_load(spark, sf, "events")).withColumnRenamed("user_id", "o_custkey")
     feats = asof_features(
         orders,
@@ -652,7 +653,7 @@ def q_asof_multikey(spark, sf):
     (custkey, synthetic key2) with the usual battery."""
     from getml_community_spark.operators.asof_join import asof_features
 
-    orders = _with_pop_ts(_spread(_load(spark, sf, "orders"))).withColumn(
+    orders = _with_pop_ts(_load(spark, sf, "orders")).withColumn(
         "k2", F.col("o_orderkey") % 3
     )
     events = (
@@ -735,7 +736,7 @@ def q_fastprop_features(spark, sf):
     checked against the equivalent CASE-WHEN battery in DuckDB."""
     from getml_community_spark.operators.fastprop import fastprop_features
 
-    orders = _with_pop_ts(_spread(_load(spark, sf, "orders")))
+    orders = _with_pop_ts(_load(spark, sf, "orders"))
     events = _spread(_load(spark, sf, "events")).withColumnRenamed("user_id", "o_custkey")
     out = fastprop_features(
         orders, events, on="o_custkey", population_id="o_orderkey",

@@ -97,6 +97,14 @@ def battery(
     return [c.alias(prefix + k) for k, c in out.items() if include is None or k in include]
 
 
+def _distinct_ratios(count: Column, count_distinct: Column) -> dict[str, Column]:
+    """The two metrics derived from count and count_distinct."""
+    return {
+        "count_distinct_over_count": count_distinct / F.nullif(count, F.lit(0.0)),
+        "count_minus_count_distinct": count - count_distinct,
+    }
+
+
 def _metrics(value, ts, t_ref, tiebreak, approx=False) -> dict[str, Column]:
     """Every battery metric by name, in emission order."""
     v = clean(value)
@@ -135,10 +143,7 @@ def _metrics(value, ts, t_ref, tiebreak, approx=False) -> dict[str, Column]:
         out["count_distinct"] = F.approx_count_distinct(v).cast("double")
     else:
         out["count_distinct"] = F.count_distinct(v).cast("double")
-    out["count_distinct_over_count"] = out["count_distinct"] / F.nullif(
-        out["count"], F.lit(0.0)
-    )
-    out["count_minus_count_distinct"] = out["count"] - out["count_distinct"]
+    out.update(_distinct_ratios(out["count"], out["count_distinct"]))
 
     if ts is not None:
         t = clean(ts)
@@ -226,12 +231,8 @@ def grouped_battery(
     cd = cd.toDF(*[f"__k{i}" for i in range(len(keys))], "count_distinct")
     on = [F.col(k).eqNullSafe(F.col(f"__k{i}")) for i, k in enumerate(kn)]
     joined = main.join(cd, reduce(lambda a, b: a & b, on))
-    n, nd = F.col("__count"), F.col("count_distinct")
-    derived = {
-        "count_distinct": nd,
-        "count_distinct_over_count": nd / F.nullif(n, F.lit(0.0)),
-        "count_minus_count_distinct": n - nd,
-    }
+    nd = F.col("count_distinct")
+    derived = {"count_distinct": nd, **_distinct_ratios(F.col("__count"), nd)}
     return joined.select(*kn, *[derived.get(k, F.col(k)).alias(k) for k in names])
 
 

@@ -171,31 +171,30 @@ def _asof_aggregate(
     ``zero_fill`` ones, which get their literal (the reference's
     empty-set defaults, Aggregations.hpp: COUNT→0, SUM→0.0).
     """
-    # repartitioning by the id first lets Catalyst collapse a caller's own
-    # round-robin repartition (CollapseRepartition), so the check costs
-    # one shuffle of the id column, not two
+    # one partition per core, by the id: the guard's groupBy needs no
+    # shuffle, AQE cannot coalesce a small population into one task, and
+    # with a broadcast peripheral the per-id aggregate below needs none
+    # either (with a shuffled join this is one extra population shuffle)
+    by_id = population.repartition(
+        population.sparkSession.sparkContext.defaultParallelism, population_id
+    )
     dup = (
-        population.repartition(population_id)
-        .groupBy(population_id).agg(F.count(F.lit(1)).alias("__n"))
+        by_id.groupBy(population_id).agg(F.count(F.lit(1)).alias("__n"))
         .where(F.col("__n") > 1).limit(1).collect()
     )
     if dup:
-        raise ValueError(
-            f"population_id {population_id!r} must be unique: "
-            f"{dup[0][0]!r} appears {dup[0][1]} times"
-        )
+        raise ValueError(f"population_id {population_id!r} must be unique: "
+                         f"{dup[0][0]!r} appears {dup[0][1]} times")
     on_l = [on] if isinstance(on, str) else list(on)
     pop_carry = [c for c in population.columns if c != population_id]
     matched = asof_match(
-        population, population_id=population_id, on=on_l, how="left",
+        by_id, population_id=population_id, on=on_l, how="left",
         pop_cols=list(dict.fromkeys([*pop_cols, *pop_carry])), **match,
     )
-    # LEFT match + one groupBy covers match-less population rows, so no
-    # rejoin pass over the population (optimization guide §2.4 — the old
-    # population⋈features sort-merge rejoin was ~20-25% of the query at
-    # sf1-shape); non-id population columns ride along as first()
-    # (constant per pop row). __nm counts REAL matches: __t_peri is null
-    # exactly on null-extended rows.
+    # the LEFT match keeps match-less rows, so no population rejoin
+    # (optimization guide §2.4); non-id population columns ride along as
+    # first(). __nm counts real matches: __t_peri is null exactly on
+    # null-extended rows.
     carries = [
         F.first(F.col(c) if c in on_l else F.col(f"__pop_{c}")).alias(c)
         for c in pop_carry
@@ -212,11 +211,8 @@ def _asof_aggregate(
             for c in population.columns
         ],
         *[
-            (
-                F.coalesce(F.col(n), F.lit(zero_fill[n]))
-                if n in zero_fill
-                else F.when(has, F.col(n))
-            ).alias(n)
+            F.coalesce(F.col(n), F.lit(zero_fill[n])).alias(n)
+            if n in zero_fill else F.when(has, F.col(n)).alias(n)
             for n in grouped.columns[1 + len(carries):-1]
         ],
     )

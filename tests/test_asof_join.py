@@ -1,9 +1,9 @@
 """As-of join vs DuckDB on the driver's star-schema testdata:
 for each orders row, over events with user_id == o_custkey and
 ts ∈ (pop_ts − 7d, pop_ts − 1h], the SQL-expressible battery
-(FIXTURES.md §3 representative query). The finite memory makes this
-the time-bucketed join shape; the memory=None range shape is gated by
-the contract suite's ``asof_upper_ts`` query.
+(FIXTURES.md §3 representative query). ``memory`` picks the join
+shape, so the suite runs both: the 7-day window takes the time-bucketed
+join, memory=None (no lower bound) the key-only range join.
 
 Population timestamps are REMAPPED into the events span
 (2024-01-08 + (o_orderkey % 480) hours): o_orderdate spans 1995-2001
@@ -26,7 +26,16 @@ MEMORY = 7 * 86400.0 - 3600.0  # window (t−7d, t−1h]
 POP_EPOCH_LIT = 1704672000  # 2024-01-08T00:00:00Z
 POP_EPOCH_SQL = f"({POP_EPOCH_LIT} + (o.o_orderkey % 480) * 3600)"
 
-ORACLE_SQL = f"""
+SHAPES = {"bucketed": MEMORY, "range": None}
+
+
+def _oracle_sql(memory):
+    lower = (
+        ""
+        if memory is None
+        else f"AND epoch(e.ts) >  {POP_EPOCH_SQL} - {HORIZON} - {memory}"
+    )
+    return f"""
 SELECT
   o.o_orderkey,
   count(e.value) AS count,
@@ -43,7 +52,7 @@ FROM read_parquet('{SF}/orders.parquet') o
 LEFT JOIN read_parquet('{SF}/events.parquet') e
   ON e.user_id = o.o_custkey
  AND epoch(e.ts) <= {POP_EPOCH_SQL} - {HORIZON}
- AND epoch(e.ts) >  {POP_EPOCH_SQL} - {HORIZON} - {MEMORY}
+ {lower}
 GROUP BY o.o_orderkey
 """
 
@@ -59,13 +68,18 @@ def _with_pop_ts(orders):
     )
 
 
-@pytest.fixture(scope="module")
-def oracle_pdf():
-    return duckdb.sql(ORACLE_SQL).df().set_index("o_orderkey").sort_index()
+@pytest.fixture(scope="module", params=list(SHAPES))
+def memory(request):
+    return SHAPES[request.param]
 
 
 @pytest.fixture(scope="module")
-def spark_feats(spark):
+def oracle_pdf(memory):
+    return duckdb.sql(_oracle_sql(memory)).df().set_index("o_orderkey").sort_index()
+
+
+@pytest.fixture(scope="module")
+def spark_feats(spark, memory):
     from getml_community_spark.operators.asof_join import asof_features
 
     orders = _with_pop_ts(spark.read.parquet(f"{SF}/orders.parquet"))
@@ -81,7 +95,7 @@ def spark_feats(spark):
         peri_ts="ts",
         value_col="value",
         horizon=HORIZON,
-        memory=MEMORY,
+        memory=memory,
         include={
             "count",
             "sum",
@@ -120,6 +134,9 @@ def test_asof_features_match_duckdb(spark_feats, oracle_pdf):
     assert len(got) == len(want)
     # the gate must be NON-VACUOUS: the windows actually match events
     assert want["count"].sum() > 0, "as-of oracle matched zero peripheral rows"
+    # ...and some population rows match nothing (the LEFT join's
+    # null-extended path: count 0, sum 0.0, the rest NULL)
+    assert (want["count"] == 0).any(), "every population row matched"
     assert got["count"].sum() == want["count"].sum()
     for col in want.columns:
         for k in want.index:

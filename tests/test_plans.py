@@ -156,6 +156,9 @@ def test_fastprop_grid_is_single_aggregation(spark):
         assert "SortMergeJoin" not in plan, plan  # no population rejoin
         assert plan.count("Exchange") <= 4, plan
         assert "BatchEvalPython" not in plan and "ArrowEval" not in plan, plan
+        # the core partitions the population by the id and the small
+        # peripheral is broadcast, so no Exchange splits partial from final
+        assert re.search(r"HashAggregate\(keys=\[__pop_id[^\n]*\n\s*\+- HashAggregate", plan), plan
 
 
 def test_rollup_battery_percentiles_keyed_by_group_only(spark):
