@@ -22,9 +22,12 @@ plans            RollupSpec — the declarative job spec (Placeholder
                  analogue); RollupJob — resumable tiered pipeline with
                  tier-aware range-query router (query_range), chunk-index
                  segment queries, hist/dist tier maintenance
-operators        rollup tiers (+ rollup_to_step/choose_tier), gap-fill,
-                 counter-reset rate (PromQL), mergeable histogram
-                 quantiles, mergeable HLL distinct counts,
+operators        rollup tiers (+ rollup_to_step/choose_tier): the tier
+                 families are declared once — core_family (rollup),
+                 hist_family (histquantile), hll_family (distinct) —
+                 and run by one batch skeleton, rollup.bucket_rollup;
+                 gap-fill, counter-reset rate (PromQL), mergeable
+                 histogram quantiles, mergeable HLL distinct counts,
                  as-of join, agg battery, dedup,
                  similarity search, text stats + repetition filters,
                  LM-perplexity scoring, PII redaction, sequence packing,
@@ -37,10 +40,11 @@ operators        rollup tiers (+ rollup_to_step/choose_tier), gap-fill,
                  uses
 functions        scalar expression surface, Gorilla numpy kernels, preprocessors
 sources          readers/writers (csv/parquet/json/orc/jdbc; snapshot tables)
-streaming        structured-streaming 1m tier (+ histogram tier, counter
-                 walk), stateful Gorilla segment close, watermark-evicted
-                 streaming dedup, streaming anomaly + CUSUM alerts,
-                 native session_window sessions
+streaming        structured-streaming tiers of every family (stream_tier,
+                 the watermark twin of bucket_rollup), per-source
+                 stateful walks (counter, anomaly, CUSUM alerts),
+                 stateful Gorilla segment close, watermark-evicted
+                 streaming dedup, native session_window sessions
 """
 
 __version__ = "0.1.0"

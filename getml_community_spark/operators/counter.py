@@ -27,7 +27,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from .rollup import TIER_SECONDS, _bucket_epoch
+from .rollup import _bucket_epoch, tier_seconds
 
 __all__ = ["counter_increase"]
 
@@ -51,9 +51,7 @@ def counter_increase(
     - a delta is credited to the bucket of its LATER sample;
     - rate = increase / tier_seconds.
     """
-    if tier not in TIER_SECONDS:
-        raise ValueError(f"unknown tier {tier!r}")
-    sec = TIER_SECONDS[tier]
+    sec = tier_seconds(tier)
     ts_long = F.col(ts_col).cast("timestamp").cast("long")
     w = Window.partitionBy(source_col).orderBy(ts_long, F.col(value_col))
     v = F.col(value_col).cast("double")

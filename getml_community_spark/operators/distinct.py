@@ -25,11 +25,44 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from .rollup import TIER_SECONDS, _bucket_epoch
+from .rollup import TierFamily, bucket_rollup
 
-__all__ = ["hll_rollup_from_raw", "hll_cascade", "hll_to_step", "hll_estimates"]
+__all__ = [
+    "hll_family",
+    "hll_rollup_from_raw",
+    "hll_cascade",
+    "hll_to_step",
+    "hll_estimates",
+]
 
 DEFAULT_LG_K = 12
+
+
+def hll_family(distinct_col: str = "doc_id", lg_k: int = DEFAULT_LG_K) -> TierFamily:
+    """Distinct-count tiers: an HLL sketch of ``distinct_col`` plus the
+    exact row count per (source, bucket). The raw aggregation buffer IS
+    the sketch (~2^lg_k bytes worst case); merging is ``hll_union_agg``,
+    lossless w.r.t. the sketch: the union of partial sketches estimates
+    identically to a single-pass sketch over the same rows."""
+
+    def raw(df, sec):
+        aggs = [
+            F.hll_sketch_agg(F.col(distinct_col), F.lit(lg_k)).alias("sketch"),
+            F.count(F.lit(1)).alias("cnt"),
+        ]
+        return df, [], aggs, ["sketch", "cnt"]
+
+    def merge(lower, sec):
+        aggs = [
+            F.hll_union_agg("sketch").alias("sketch"),
+            F.sum("cnt").cast("long").alias("cnt"),
+        ]
+        return lower, [], aggs, ["sketch", "cnt"]
+
+    return TierFamily(raw, merge)
+
+
+_HLL = hll_family()
 
 
 def hll_rollup_from_raw(
@@ -41,52 +74,22 @@ def hll_rollup_from_raw(
     lg_k: int = DEFAULT_LG_K,
 ) -> DataFrame:
     """(source, bucket_start) → HLL sketch of ``distinct_col`` + exact
-    row count. One shuffle, map-side partial sketches (the agg buffer IS
-    the sketch), binary column ~2^lg_k bytes worst case."""
-    sec = TIER_SECONDS[tier]
-    b = _bucket_epoch(ts_col, sec)
-    return (
-        df.groupBy(F.col(source_col).alias("source"), b.alias("__b"))
-        .agg(
-            F.hll_sketch_agg(F.col(distinct_col), F.lit(lg_k)).alias("sketch"),
-            F.count(F.lit(1)).alias("cnt"),
-        )
-        .select(
-            "source",
-            F.timestamp_seconds(F.col("__b")).alias("bucket_start"),
-            "sketch",
-            "cnt",
-        )
-    )
+    row count. One shuffle, map-side partial sketches."""
+    family = hll_family(distinct_col, lg_k)
+    return bucket_rollup(df, family.raw, tier, source_col, ts_col)
 
 
 def hll_cascade(lower: DataFrame, to_tier: str) -> DataFrame:
     """Union finer-tier sketches into a coarser tier — the distinct-count
-    analogue of ``rollup_cascade``. Lossless w.r.t. the sketch: the
-    union of partial sketches estimates identically to a single-pass
-    sketch over the same rows."""
-    return hll_to_step(lower, TIER_SECONDS[to_tier])
+    analogue of ``rollup_cascade``."""
+    return bucket_rollup(lower, _HLL.merge, to_tier)
 
 
 def hll_to_step(lower: DataFrame, step_seconds: int) -> DataFrame:
     """Union sketches into arbitrary epoch-aligned step buckets (the
     range-query router's distinct path); valid whenever the source
     tier's width divides ``step_seconds``."""
-    sec = int(step_seconds)
-    bucket = _bucket_epoch("bucket_start", sec)
-    return (
-        lower.groupBy("source", bucket.alias("__b"))
-        .agg(
-            F.hll_union_agg("sketch").alias("sketch"),
-            F.sum("cnt").cast("long").alias("cnt"),
-        )
-        .select(
-            "source",
-            F.timestamp_seconds(F.col("__b")).alias("bucket_start"),
-            "sketch",
-            "cnt",
-        )
-    )
+    return bucket_rollup(lower, _HLL.merge, int(step_seconds))
 
 
 def hll_estimates(tier_df: DataFrame) -> DataFrame:

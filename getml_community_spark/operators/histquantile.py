@@ -43,13 +43,50 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from .rollup import TIER_SECONDS, _bucket_epoch
+from .rollup import TierFamily, bucket_rollup
 
-__all__ = ["hist_rollup_from_raw", "hist_cascade", "hist_to_step", "hist_quantiles"]
+__all__ = [
+    "hist_family",
+    "hist_rollup_from_raw",
+    "hist_cascade",
+    "hist_to_step",
+    "hist_quantiles",
+]
 
 
-def _bucket_ts(epoch_col):
-    return F.timestamp_seconds(epoch_col).alias("bucket_start")
+def hist_family(
+    value_col: str = "n_tok", bin_width: float = 1.0, weight_col: str | None = None
+) -> TierFamily:
+    """Histogram tiers: (bin, cnt) per (source, bucket) with ``bin =
+    floor(value / bin_width)`` as the extra group key. NULL values drop
+    (they carry no quantile information). Merging ADDS counts — exact,
+    no re-binning.
+
+    ``weight_col`` (integer column) makes ``cnt`` a WEIGHT sum instead
+    of a row count — downstream quantiles become weighted quantiles
+    ("p95 document length weighted by n_tok" answers where the TOKENS
+    sit, not where the documents sit — the mixture-construction view).
+    Weights must be non-negative integers so counts stay exact longs;
+    rows with NULL weight drop with the NULL values."""
+    if bin_width <= 0:
+        raise ValueError("bin_width must be > 0")
+
+    def raw(df, sec):
+        v = F.col(value_col)
+        b = F.floor(v.cast("double") / F.lit(float(bin_width))).cast("long")
+        keep, cnt = v.isNotNull(), F.count(F.lit(1))
+        if weight_col is not None:
+            keep &= F.col(weight_col).isNotNull()
+            cnt = F.sum(F.col(weight_col).cast("long"))
+        return df.where(keep), [b.alias("bin")], [cnt.alias("cnt")], ["bin", "cnt"]
+
+    def merge(hist, sec):
+        return hist, [F.col("bin")], [F.sum("cnt").alias("cnt")], ["bin", "cnt"]
+
+    return TierFamily(raw, merge)
+
+
+_HIST = hist_family()
 
 
 def hist_rollup_from_raw(
@@ -62,42 +99,11 @@ def hist_rollup_from_raw(
     weight_col: str | None = None,
 ) -> DataFrame:
     """Histogram tier from raw events: (source, bucket_start, bin, cnt)
-    with ``bin = floor(value / bin_width)`` (NULL values drop — they
-    carry no quantile information). One hash aggregation, one shuffle
-    on (source, bucket, bin); a hot source partial-aggregates map-side
-    exactly like the core rollup.
-
-    ``weight_col`` (integer column) makes ``cnt`` a WEIGHT sum instead
-    of a row count — downstream quantiles become weighted quantiles
-    ("p95 document length weighted by n_tok" answers where the TOKENS
-    sit, not where the documents sit — the mixture-construction view).
-    Weights must be non-negative integers so counts stay exact longs;
-    rows with NULL weight drop with the NULL values."""
-    if tier not in TIER_SECONDS:
-        raise ValueError(f"unknown tier {tier!r}")
-    if bin_width <= 0:
-        raise ValueError("bin_width must be > 0")
-    sec = TIER_SECONDS[tier]
-    b = _bucket_epoch(ts_col, sec)
-    bin_col = F.floor(F.col(value_col).cast("double") / F.lit(float(bin_width))).cast(
-        "long"
-    )
-    keep = F.col(value_col).isNotNull()
-    if weight_col is None:
-        agg = F.count(F.lit(1)).alias("cnt")
-    else:
-        keep = keep & F.col(weight_col).isNotNull()
-        agg = F.sum(F.col(weight_col).cast("long")).alias("cnt")
-    return (
-        df.where(keep)
-        .groupBy(
-            F.col(source_col).alias("source"),
-            b.alias("__be"),
-            bin_col.alias("bin"),
-        )
-        .agg(agg)
-        .select("source", _bucket_ts(F.col("__be")), "bin", "cnt")
-    )
+    (see :func:`hist_family`). One hash aggregation, one shuffle on
+    (source, bucket, bin); a hot source partial-aggregates map-side
+    exactly like the core rollup."""
+    family = hist_family(value_col, bin_width, weight_col)
+    return bucket_rollup(df, family.raw, tier, source_col, ts_col)
 
 
 def hist_cascade(hist: DataFrame, to_tier: str) -> DataFrame:
@@ -105,9 +111,7 @@ def hist_cascade(hist: DataFrame, to_tier: str) -> DataFrame:
     the merge is exact (no re-binning, no approximation): the coarse
     histogram equals what hist_rollup_from_raw would have produced
     from raw (pytest-asserted bucket-exact)."""
-    if to_tier not in TIER_SECONDS:
-        raise ValueError(f"unknown tier {to_tier!r}")
-    return hist_to_step(hist, TIER_SECONDS[to_tier])
+    return bucket_rollup(hist, _HIST.merge, to_tier)
 
 
 def hist_to_step(hist: DataFrame, step_seconds: int) -> DataFrame:
@@ -115,13 +119,7 @@ def hist_to_step(hist: DataFrame, step_seconds: int) -> DataFrame:
     (the range-query router's quantile path) — valid whenever the
     source tier's width divides ``step_seconds``; the count merge stays
     exact like the tier cascade."""
-    sec = int(step_seconds)
-    b = _bucket_epoch("bucket_start", sec)
-    return (
-        hist.groupBy(F.col("source"), b.alias("__be"), F.col("bin"))
-        .agg(F.sum("cnt").alias("cnt"))
-        .select("source", _bucket_ts(F.col("__be")), "bin", "cnt")
-    )
+    return bucket_rollup(hist, _HIST.merge, int(step_seconds))
 
 
 def hist_quantiles(

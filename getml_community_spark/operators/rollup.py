@@ -2,11 +2,20 @@
 
 This is the engine's core: the reference's window-join + aggregate
 (Matchmaker.hpp:126-131 + Aggregator.hpp) specialized to regular bucket
-ends becomes a plain ``groupBy(source, window(event_time, tier))`` —
-one shuffle per tier, partial-aggregated map-side, whole-stage codegen.
-Higher tiers are rolled up from the tier below (the reference's
-``subfeatures`` nesting, fastprop/Aggregator.cpp:339-367), never from
-raw: at 10^12 rows the 1h tier reads the ~60×-smaller 1m table.
+ends becomes a plain ``groupBy(source, bucket)`` on a LONG epoch bucket
+key (:func:`_bucket_epoch`) — one shuffle per tier, partial-aggregated
+map-side, whole-stage codegen. Higher tiers are rolled up from the tier
+below (the reference's ``subfeatures`` nesting,
+fastprop/Aggregator.cpp:339-367), never from raw: at 10^12 rows the 1h
+tier reads the ~60×-smaller 1m table.
+
+Every tier family is a :class:`TierFamily` — a mergeable state with a
+raw stage (events → state) and a merge stage (finer tier → coarser
+tier). The families are declared once: :func:`core_family` here,
+``hist_family`` in histquantile.py, ``hll_family`` in distinct.py.
+:func:`bucket_rollup` is the one batch bucket → aggregate skeleton that
+every from-raw, cascade and re-bucket function (and RollupJob) calls;
+streaming/stream_rollup.py holds its watermark twin.
 
 Sub-aggregation legality (SURVEY.md §7 M4): count/sum/min/max compose;
 avg and rate are recomputed from composed sums; quantiles/median/mode
@@ -22,10 +31,17 @@ combine itself would concentrate; see :func:`salted_rollup`.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from collections.abc import Callable
+from typing import NamedTuple
+
+from pyspark.sql import Column, DataFrame, functions as F
 
 __all__ = [
     "TIER_SECONDS",
+    "TierFamily",
+    "core_family",
+    "bucket_rollup",
+    "tier_seconds",
     "rollup_from_raw",
     "rollup_cascade",
     "rollup_to_step",
@@ -35,11 +51,19 @@ __all__ = [
 ]
 
 TIER_SECONDS = {"1m": 60, "1h": 3600, "1d": 86400}
-_TIER_INTERVAL = {"1m": "1 minute", "1h": "1 hour", "1d": "1 day"}
-_TIER_TRUNC = {"1m": "minute", "1h": "hour", "1d": "day"}
 
 # Output schema shared by all tiers (FIXTURES.md §2 golden schema).
 CORE_AGG_COLS = ["cnt", "sum_n_tok", "min_n_tok", "max_n_tok", "rate"]
+
+
+def tier_seconds(tier: str | int) -> int:
+    """Bucket width of a tier name (``TIER_SECONDS``) or of a step given
+    in seconds. An unknown tier name raises ``ValueError``."""
+    if not isinstance(tier, str):
+        return int(tier)
+    if tier not in TIER_SECONDS:
+        raise ValueError(f"unknown tier {tier!r}; known tiers: {', '.join(TIER_SECONDS)}")
+    return TIER_SECONDS[tier]
 
 
 def _bucket_epoch(ts_col: str, sec: int):
@@ -54,20 +78,87 @@ def _is_integral(df: DataFrame, col: str) -> bool:
     return t in ("tinyint", "smallint", "int", "bigint", "long")
 
 
-def _core_aggs(value: str, tier_seconds: int, integral: bool) -> list:
-    """Core aggs; sums keep an exact integer type for integral inputs
-    (the corpus n_tok path: bigint sums are exact at any scale) and
-    double otherwise."""
-    v = F.col(value)
-    s = F.coalesce(F.sum(v), F.lit(0))
-    s = s.cast("long") if integral else s.cast("double")
-    return [
-        F.count(v).alias("cnt"),
-        s.alias("sum_n_tok"),
-        F.min(v).alias("min_n_tok"),
-        F.max(v).alias("max_n_tok"),
-        (s.cast("double") / F.lit(float(tier_seconds))).alias("rate"),
-    ]
+# A stage maps (input frame, bucket seconds) to (rows to aggregate,
+# extra group keys, aggregates, output columns after source/bucket_start).
+Stage = Callable[[DataFrame, int], tuple[DataFrame, list, list, list]]
+
+
+class TierFamily(NamedTuple):
+    """One mergeable tier family: ``raw`` aggregates input events into
+    the family's state, ``merge`` aggregates a finer tier of the same
+    family into a coarser one (cascade and re-bucket)."""
+
+    raw: Stage
+    merge: Stage
+
+
+def _exact_sum(col: Column, integral: bool) -> Column:
+    """Sums keep an exact integer type for integral inputs (the corpus
+    n_tok path: bigint sums are exact at any scale), double otherwise."""
+    s = F.coalesce(F.sum(col), F.lit(0))
+    return s.cast("long") if integral else s.cast("double")
+
+
+def core_family(value_col: str = "n_tok") -> TierFamily:
+    """Core Σ/min/max tiers of ``value_col`` (``CORE_AGG_COLS``).
+
+    Merging keeps only composable aggregates: Σcnt, Σsum, min(min),
+    max(max); rate is recomputed from the composed sum. Rows with cnt=0
+    (gap-filled) contribute nothing: their min/max are NULL and Spark
+    min/max skip NULLs, matching an aggregate over the union of raw rows
+    exactly."""
+
+    def raw(df, sec):
+        v = F.col(value_col)
+        s = _exact_sum(v, _is_integral(df, value_col))
+        rate = s.cast("double") / F.lit(float(sec))
+        aggs = [F.count(v), s, F.min(v), F.max(v), rate]
+        return df, [], [a.alias(n) for a, n in zip(aggs, CORE_AGG_COLS)], CORE_AGG_COLS
+
+    def merge(lower, sec):
+        s = _exact_sum(F.col("sum_n_tok"), _is_integral(lower, "sum_n_tok"))
+        aggs = [
+            F.sum("cnt").cast("long").alias("cnt"),
+            s.alias("sum_n_tok"),
+            F.min("min_n_tok").alias("min_n_tok"),
+            F.max("max_n_tok").alias("max_n_tok"),
+        ]
+        rate = F.col("sum_n_tok").cast("double") / F.lit(float(sec))
+        return lower, [], aggs, [*CORE_AGG_COLS[:-1], rate.alias("rate")]
+
+    return TierFamily(raw, merge)
+
+
+_CORE = core_family()
+
+
+def bucket_rollup(
+    df: DataFrame,
+    stage: Stage,
+    tier: str | int,
+    source_col: str = "source",
+    ts_col: str = "bucket_start",
+    keys: tuple = (),
+) -> DataFrame:
+    """The batch tier skeleton: bucket ``ts_col`` into ``tier`` (a tier
+    name or a step in seconds) → one ``groupBy(source, bucket, *keys)``
+    running a family ``stage`` → (source, bucket_start, *stage outputs).
+
+    The bucket key is the LONG epoch of :func:`_bucket_epoch`, not
+    ``window()``/``date_trunc``: struct group keys double hash/shuffle
+    cost and date_trunc is a non-codegen timezone path ~9x slower per
+    row (measured). The long->timestamp conversion happens AFTER
+    aggregation, on ~1/|bucket| as many rows. The single groupBy
+    shuffles once on (source, bucket); filters/projections above it fold
+    into the parquet scan via Catalyst."""
+    sec = tier_seconds(tier)
+    rows, stage_keys, aggs, out = stage(df, sec)
+    b = _bucket_epoch(ts_col, sec)
+    return (
+        rows.groupBy(F.col(source_col).alias("source"), b.alias("__b"), *keys, *stage_keys)
+        .agg(*aggs)
+        .select("source", F.timestamp_seconds(F.col("__b")).alias("bucket_start"), *out)
+    )
 
 
 def rollup_from_raw(
@@ -77,40 +168,16 @@ def rollup_from_raw(
     ts_col: str = "event_time",
     value_col: str = "n_tok",
 ) -> DataFrame:
-    """Base continuous aggregate: (source, bucket_start) → core aggs.
-
-    ``window()`` keeps the bucketing inside codegen; the single groupBy
-    shuffles once on (source, bucket) — the minimal shuffle for this
-    computation. Filters/projections above this fold into the parquet
-    scan via Catalyst (only source/ts/value columns are read; token
-    arrays are never scanned on this path).
-    """
-    sec = TIER_SECONDS[tier]
-    # Bucket by LONG arithmetic, not window()/date_trunc: struct group
-    # keys double hash/shuffle cost and date_trunc is a non-codegen
-    # timezone path ~9x slower per row (measured). The long->timestamp
-    # conversion happens AFTER aggregation, on ~1/|bucket| as many rows.
-    b = _bucket_epoch(ts_col, sec)
-    return (
-        df.groupBy(F.col(source_col).alias("source"), b.alias("__b"))
-        .agg(*_core_aggs(value_col, sec, _is_integral(df, value_col)))
-        .select(
-            "source",
-            F.timestamp_seconds(F.col("__b")).alias("bucket_start"),
-            *CORE_AGG_COLS,
-        )
-    )
+    """Base continuous aggregate: (source, bucket_start) → core aggs,
+    one :func:`bucket_rollup` over the raw events (only the source, ts
+    and value columns are read; token arrays are never scanned)."""
+    return bucket_rollup(df, core_family(value_col).raw, tier, source_col, ts_col)
 
 
 def rollup_cascade(lower: DataFrame, to_tier: str) -> DataFrame:
-    """Roll a finer tier into a coarser one (1m→1h, 1h→1d).
-
-    Only composable aggregates: Σcnt, Σsum, min(min), max(max); rate is
-    recomputed from the composed sum. Rows with cnt=0 (gap-filled)
-    contribute nothing: their min/max are NULL and Spark min/max skip
-    NULLs, matching an aggregate over the union of raw rows exactly.
-    """
-    return rollup_to_step(lower, TIER_SECONDS[to_tier])
+    """Roll a finer tier into a coarser one (1m→1h, 1h→1d) with the
+    core merge aggregates (see :func:`core_family`)."""
+    return bucket_rollup(lower, _CORE.merge, to_tier)
 
 
 def rollup_to_step(lower: DataFrame, step_seconds: int) -> DataFrame:
@@ -124,26 +191,7 @@ def rollup_to_step(lower: DataFrame, step_seconds: int) -> DataFrame:
     tier without touching raw (Thanos/TimescaleDB downsampled-read
     pattern). Same composable-aggregate rules as the cascade.
     """
-    sec = int(step_seconds)
-    bucket = _bucket_epoch("bucket_start", sec)
-    integral = _is_integral(lower, "sum_n_tok")
-    s = F.coalesce(F.sum("sum_n_tok"), F.lit(0))
-    s = s.cast("long") if integral else s.cast("double")
-    return (
-        lower.groupBy("source", bucket.alias("__b"))
-        .agg(
-            F.sum("cnt").cast("long").alias("cnt"),
-            s.alias("sum_n_tok"),
-            F.min("min_n_tok").alias("min_n_tok"),
-            F.max("max_n_tok").alias("max_n_tok"),
-        )
-        .withColumn("rate", F.col("sum_n_tok").cast("double") / F.lit(float(sec)))
-        .select(
-            "source",
-            F.timestamp_seconds(F.col("__b")).alias("bucket_start"),
-            *CORE_AGG_COLS,
-        )
-    )
+    return bucket_rollup(lower, _CORE.merge, int(step_seconds))
 
 
 def choose_tier(step_seconds: int, tiers=None) -> str:
@@ -186,7 +234,7 @@ def rollup_battery(
     """
     from .aggregates import grouped_battery
 
-    sec = TIER_SECONDS[tier]
+    sec = tier_seconds(tier)
     b = _bucket_epoch(ts_col, sec)
     ts_epoch = F.col(ts_col).cast("timestamp").cast("double")
     t_ref = (b + F.lit(sec)).cast("double")  # bucket end, constant per group
@@ -215,41 +263,15 @@ def salted_rollup(
 ) -> DataFrame:
     """Two-stage salted aggregation for pathologically-hot groups.
 
-    Stage 1 groups by (source, bucket, salt) where
-    salt = pmod(xxhash64(doc_id), k), spreading a hot group over k
-    reducers; stage 2 combines the k partials. Only composable aggs.
+    Stage 1 is the core raw stage grouped by (source, bucket, salt)
+    where salt = pmod(xxhash64(doc_id), k), spreading a hot group over k
+    reducers; stage 2 is the core merge, combining the k partials.
     Equivalent by construction to :func:`rollup_from_raw`; pytest
     asserts bit-equality. Use when a single (source, bucket) group's
     post-partial-agg combine volume is itself a bottleneck.
     """
-    sec = TIER_SECONDS[tier]
-    b = _bucket_epoch(ts_col, sec)
-    salt = F.pmod(F.xxhash64(F.col("doc_id")), F.lit(salt_buckets))
-    integral = _is_integral(df, value_col)
-    v = F.col(value_col)
-    partial = (
-        df.groupBy(F.col(source_col).alias("source"), b.alias("__b"), salt.alias("salt"))
-        .agg(
-            F.count(v).alias("cnt"),
-            F.sum(v).alias("sum_n_tok"),
-            F.min(v).alias("min_n_tok"),
-            F.max(v).alias("max_n_tok"),
-        )
+    salt = F.pmod(F.xxhash64(F.col("doc_id")), F.lit(salt_buckets)).alias("salt")
+    partial = bucket_rollup(
+        df, core_family(value_col).raw, tier, source_col, ts_col, keys=(salt,)
     )
-    s = F.coalesce(F.sum("sum_n_tok"), F.lit(0))
-    s = s.cast("long") if integral else s.cast("double")
-    return (
-        partial.groupBy("source", "__b")
-        .agg(
-            F.sum("cnt").cast("long").alias("cnt"),
-            s.alias("sum_n_tok"),
-            F.min("min_n_tok").alias("min_n_tok"),
-            F.max("max_n_tok").alias("max_n_tok"),
-        )
-        .withColumn("rate", F.col("sum_n_tok").cast("double") / F.lit(float(sec)))
-        .select(
-            "source",
-            F.timestamp_seconds(F.col("__b")).alias("bucket_start"),
-            *CORE_AGG_COLS,
-        )
-    )
+    return bucket_rollup(partial, _CORE.merge, tier)

@@ -24,33 +24,30 @@ per day comes from the same shuffle as the rollup itself.
 from __future__ import annotations
 
 import time
-from collections.abc import Callable
-from functools import partial
 from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..checkpoint import JobState, LineageLog, SnapshotTable
 from ..functions.gorilla import compress_rollup
-from ..operators.distinct import hll_cascade, hll_rollup_from_raw
+from ..operators.distinct import hll_family
 from ..operators.gapfill import gapfill
-from ..operators.histquantile import hist_cascade, hist_rollup_from_raw
-from ..operators.rollup import TIER_SECONDS, rollup_cascade, rollup_from_raw
+from ..operators.histquantile import hist_family
+from ..operators.rollup import TIER_SECONDS, TierFamily, bucket_rollup, core_family
 from .rollup_spec import RollupSpec
 
 __all__ = ["RollupJob"]
 
 
 class _Family(NamedTuple):
-    """One tier family: a table per tier, the base-tier rollup from raw
-    input and the cascade to each coarser tier. ``prefix`` ("" core,
-    "hist_", "dist_") names the family's lineage/state tiers and its
-    ``_all_tables`` keys."""
+    """One maintained tier family: its :class:`TierFamily` (raw stage
+    for the base tier, merge stage for each coarser tier) and a table
+    per tier. ``prefix`` ("" core, "hist_", "dist_") names the family's
+    lineage/state tiers and its ``_all_tables`` keys."""
 
     prefix: str
     tables: dict
-    from_raw: Callable[[DataFrame, str], DataFrame]
-    cascade: Callable[[DataFrame, str], DataFrame]
+    family: TierFamily
 
 
 def _days(table: SnapshotTable) -> set[str]:
@@ -82,27 +79,13 @@ class RollupJob:
         # THE family registry: rolling, reconcile, re-roll deletes,
         # retention and compaction all walk it (a family forgotten in one
         # of those loops silently corrupts re-rolls). Core comes first.
-        cols = {"source_col": spec.source_col, "ts_col": spec.ts_col}
-        self._families = [
-            _Family(
-                "",
-                tier_tables("agg"),
-                partial(rollup_from_raw, value_col=spec.value_col, **cols),
-                rollup_cascade,
-            )
-        ]
+        self._families = [_Family("", tier_tables("agg"), core_family(spec.value_col))]
         if spec.hist_bin_width:
             self._families.append(
                 _Family(
                     "hist_",
                     tier_tables("hist"),
-                    partial(
-                        hist_rollup_from_raw,
-                        value_col=spec.value_col,
-                        bin_width=spec.hist_bin_width,
-                        **cols,
-                    ),
-                    hist_cascade,
+                    hist_family(spec.value_col, spec.hist_bin_width),
                 )
             )
         if spec.distinct_col:
@@ -110,13 +93,7 @@ class RollupJob:
                 _Family(
                     "dist_",
                     tier_tables("dist"),
-                    partial(
-                        hll_rollup_from_raw,
-                        distinct_col=spec.distinct_col,
-                        lg_k=spec.hll_lg_k,
-                        **cols,
-                    ),
-                    hll_cascade,
+                    hll_family(spec.distinct_col, spec.hll_lg_k),
                 )
             )
         by_prefix = {f.prefix: f.tables for f in self._families}
@@ -393,6 +370,13 @@ class RollupJob:
         return complete
 
     # ------------------------------------------------------------ #
+    def _from_raw(self, family: _Family, raw: DataFrame, tier: str) -> DataFrame:
+        """``family``'s ``tier`` rolled from raw input rows."""
+        spec = self.spec
+        return bucket_rollup(
+            raw, family.family.raw, tier, spec.source_col, spec.ts_col
+        )
+
     def _roll_family(
         self,
         family: _Family,
@@ -421,13 +405,14 @@ class RollupJob:
         lower = base = None
         for tier in self.spec.tiers:
             if lower is None:
-                cur = family.from_raw(sel, tier).withColumn(
+                cur = self._from_raw(family, sel, tier).withColumn(
                     "day", F.to_date("bucket_start")
                 )
             else:
-                cur = family.cascade(lower.drop("day"), tier).withColumn(
-                    "day", F.to_date("bucket_start")
-                ).where(F.col("day").isin(pending))
+                cur = bucket_rollup(lower.drop("day"), family.family.merge, tier)
+                cur = cur.withColumn("day", F.to_date("bucket_start")).where(
+                    F.col("day").isin(pending)
+                )
             cur = cur.cache()
             t0 = time.perf_counter()
             rows_out = {
@@ -690,25 +675,29 @@ class RollupJob:
 
     def _route(
         self,
-        tables: dict,
+        prefix: str,
         t_from: int,
         t_to: int,
-        sec: int,
-        allow_empty: bool = False,
-    ):
-        """Shared range-router core: validate alignment, pick the
-        coarsest maintained tier whose width divides the step, read it
-        with MANIFEST-level day pruning, filter to the exact bucket
-        range. Returns (tier, rows-or-None, (d_from, d_to))."""
+        step_seconds: int,
+        realtime: bool = False,
+    ) -> DataFrame:
+        """The range router shared by every family's range query:
+        validate alignment, pick the coarsest maintained tier whose width
+        divides the step, read it with MANIFEST-level day pruning, filter
+        to the exact bucket range, optionally union the real-time head,
+        and re-bucket with the family's merge stage (skipped when the
+        step IS the tier width)."""
         import datetime as dt
 
         from ..operators.rollup import choose_tier
 
+        family = next(f for f in self._families if f.prefix == prefix)
+        sec = int(step_seconds)
         if t_from % sec or t_to % sec:
             raise ValueError("t_from/t_to must be multiples of step_seconds")
         if t_to <= t_from:
             raise ValueError("empty range")
-        tier = choose_tier(sec, [t for t in self.spec.tiers if t in tables])
+        tier = choose_tier(sec, [t for t in self.spec.tiers if t in family.tables])
         d_from = dt.datetime.fromtimestamp(t_from, dt.timezone.utc).date()
         d_to = dt.datetime.fromtimestamp(t_to - 1, dt.timezone.utc).date()
 
@@ -717,15 +706,32 @@ class RollupJob:
             return bool(d) and d_from <= dt.date.fromisoformat(d) <= d_to
 
         try:
-            rows = tables[tier].read(self.spark, partition_filter=_in_range)
+            rows = family.tables[tier].read(self.spark, partition_filter=_in_range)
             rows = rows.drop("day")
             epoch = F.col("bucket_start").cast("timestamp").cast("long")
             rows = rows.where((epoch >= t_from) & (epoch < t_to))
         except FileNotFoundError:
-            if not allow_empty:
+            if not realtime:
                 raise
             rows = None
-        return tier, rows, (d_from, d_to)
+
+        if realtime:
+            done = _days(family.tables[tier])
+            day = F.col("event_date").cast("string")
+            ts_epoch = F.col(self.spec.ts_col).cast("timestamp").cast("long")
+            head = self._input().where(
+                (day >= str(d_from))
+                & (day <= str(d_to))
+                & (~day.isin(sorted(done)) if done else F.lit(True))
+                & (ts_epoch >= t_from)
+                & (ts_epoch < t_to)
+            )
+            head_rolled = self._from_raw(family, head, tier)
+            rows = head_rolled if rows is None else rows.unionByName(head_rolled)
+
+        if sec != TIER_SECONDS[tier]:
+            rows = bucket_rollup(rows, family.family.merge, sec)
+        return rows
 
     def query_range(
         self,
@@ -746,8 +752,8 @@ class RollupJob:
         2. prunes day partitions at the MANIFEST level
            (``SnapshotTable.read(partition_filter=...)``) — days outside
            the range never enter the plan;
-        3. re-buckets with ``rollup_to_step`` (skipped when the step IS
-           the tier width);
+        3. re-buckets with the core merge (``rollup_to_step``; skipped
+           when the step IS the tier width);
         4. with ``realtime=True``, unions an on-the-fly rollup of input
            days not yet committed to the chosen tier (the un-rolled
            head), so results are as fresh as raw without waiting for the
@@ -758,38 +764,7 @@ class RollupJob:
         absent from the result — query a coarser step (served by a
         longer-retained tier) for old history.
         """
-        from ..operators.rollup import rollup_to_step
-
-        sec = int(step_seconds)
-        tier, rows, (d_from, d_to) = self._route(
-            self.tables, t_from, t_to, sec, allow_empty=realtime
-        )
-
-        if realtime:
-            from ..operators.rollup import rollup_from_raw
-
-            done = _days(self.tables[tier])
-            inp = self._input()
-            ts_epoch = F.col(self.spec.ts_col).cast("timestamp").cast("long")
-            head = inp.where(
-                (F.col("event_date").cast("string") >= str(d_from))
-                & (F.col("event_date").cast("string") <= str(d_to))
-                & (~F.col("event_date").cast("string").isin(sorted(done)) if done else F.lit(True))
-                & (ts_epoch >= t_from)
-                & (ts_epoch < t_to)
-            )
-            head_rolled = rollup_from_raw(
-                head,
-                tier,
-                self.spec.source_col,
-                self.spec.ts_col,
-                self.spec.value_col,
-            )
-            rows = head_rolled if rows is None else rows.unionByName(head_rolled)
-
-        if sec != TIER_SECONDS[tier]:
-            rows = rollup_to_step(rows, sec)
-        return rows
+        return self._route("", t_from, t_to, step_seconds, realtime)
 
     def query_range_archive(
         self, t_from: int, t_to: int, step_seconds: int
@@ -808,14 +783,13 @@ class RollupJob:
         import datetime as dt
 
         from ..functions.gorilla import query_segments
-        from ..operators.rollup import TIER_SECONDS as TS
 
         if not self.spec.segment_stats:
             raise ValueError("spec.segment_stats is off — no chunk index stored")
         sec = int(step_seconds)
         if t_from % sec or t_to % sec:
             raise ValueError("t_from/t_to must be multiples of step_seconds")
-        base_sec = TS[self.spec.compress_tier]
+        base_sec = TIER_SECONDS[self.spec.compress_tier]
         if sec % base_sec:
             raise ValueError(
                 f"step must be a multiple of the compressed tier ({base_sec}s)"
@@ -829,7 +803,6 @@ class RollupJob:
 
         segs = self.segments.read(self.spark, partition_filter=_in_range)
         pts = query_segments(segs, t_from=t_from, t_to=t_to - 1)
-        bucket = (F.floor(F.col("ts") / F.lit(sec)) * F.lit(sec)).cast("long")
         v = self.spec.compress_value
         if v == "rate":
             agg = (F.sum(F.col("value") * F.lit(float(base_sec))) / F.lit(float(sec)))
@@ -841,15 +814,11 @@ class RollupJob:
             agg = F.max("value")
         else:
             raise ValueError(f"no archive re-bucket rule for {v!r}")
-        return (
-            pts.groupBy("source", bucket.alias("__b"))
-            .agg(agg.alias("value"))
-            .select(
-                "source",
-                F.timestamp_seconds(F.col("__b")).alias("bucket_start"),
-                "value",
-            )
-        )
+        def stage(df, _sec):  # decoded points carry a LONG epoch second "ts"
+            ts = F.timestamp_seconds("ts")
+            return df.withColumn("ts", ts), [], [agg.alias("value")], ["value"]
+
+        return bucket_rollup(pts, stage, sec, ts_col="ts")
 
     def query_range_quantiles(
         self,
@@ -860,18 +829,14 @@ class RollupJob:
     ) -> DataFrame:
         """Range-routed percentiles: serve (source, step-bucket)
         quantiles for ``[t_from, t_to)`` from the coarsest maintained
-        HISTOGRAM tier whose width divides the step — same manifest
-        pruning as ``query_range``, exact count-merge re-bucketing
-        (``hist_to_step``), then the type-1 quantile extraction.
-        Requires ``RollupSpec.hist_bin_width``."""
+        HISTOGRAM tier whose width divides the step — same router as
+        ``query_range``, exact count-merge re-bucketing, then the type-1
+        quantile extraction. Requires ``RollupSpec.hist_bin_width``."""
         if not self.hist_tables:
             raise ValueError("no histogram tiers (set RollupSpec.hist_bin_width)")
-        from ..operators.histquantile import hist_quantiles, hist_to_step
+        from ..operators.histquantile import hist_quantiles
 
-        sec = int(step_seconds)
-        tier, rows, _ = self._route(self.hist_tables, t_from, t_to, sec)
-        if sec != TIER_SECONDS[tier]:
-            rows = hist_to_step(rows, sec)
+        rows = self._route("hist_", t_from, t_to, step_seconds)
         return hist_quantiles(rows, qs=qs, bin_width=self.spec.hist_bin_width)
 
     def query_range_distinct(
@@ -880,18 +845,13 @@ class RollupJob:
         """Range-routed distinct counts: serve (source, step-bucket)
         HLL estimates for ``[t_from, t_to)`` from the coarsest
         maintained DISTINCT tier whose width divides the step — sketch
-        unions through ``hll_to_step`` are lossless, so the estimate
-        equals a one-pass sketch over the same raw rows. Requires
-        ``RollupSpec.distinct_col``."""
+        unions are lossless, so the estimate equals a one-pass sketch
+        over the same raw rows. Requires ``RollupSpec.distinct_col``."""
         if not self.dist_tables:
             raise ValueError("no distinct tiers (set RollupSpec.distinct_col)")
-        from ..operators.distinct import hll_estimates, hll_to_step
+        from ..operators.distinct import hll_estimates
 
-        sec = int(step_seconds)
-        tier, rows, _ = self._route(self.dist_tables, t_from, t_to, sec)
-        if sec != TIER_SECONDS[tier]:
-            rows = hll_to_step(rows, sec)
-        return hll_estimates(rows)
+        return hll_estimates(self._route("dist_", t_from, t_to, step_seconds))
 
     def read_hist_quantiles(self, tier: str, qs: tuple = (0.5, 0.95, 0.99)) -> DataFrame:
         """Quantiles from the maintained histogram tier (requires

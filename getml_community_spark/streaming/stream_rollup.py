@@ -20,15 +20,12 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..operators.rollup import (
-    CORE_AGG_COLS,
-    TIER_SECONDS,
-    _TIER_INTERVAL,
-    _core_aggs,
-    _is_integral,
-)
+from ..operators.distinct import hll_family
+from ..operators.histquantile import hist_family
+from ..operators.rollup import TierFamily, core_family, tier_seconds
 
 __all__ = [
+    "stream_tier",
     "stream_rollup",
     "stream_gorilla_segments",
     "stream_corpus_reader",
@@ -75,6 +72,32 @@ def stream_exact_dedup(
     )
 
 
+def stream_tier(
+    stream: DataFrame,
+    family: TierFamily,
+    tier: str,
+    watermark: str,
+    source_col: str = "source",
+    ts_col: str = "event_time",
+) -> DataFrame:
+    """The streaming tier skeleton: a family's raw stage grouped by
+    (source, ``window()``, *family keys) under a watermark →
+    (source, bucket_start, *family outputs), the schema of the batch
+    :func:`~..operators.rollup.bucket_rollup`. The ``window()`` key (not
+    the batch long epoch) is what lets Spark evict a group's state once
+    the watermark passes the window end; the family's aggregation
+    buffer is the whole per-group state."""
+    sec = tier_seconds(tier)
+    rows, keys, aggs, out = family.raw(stream, sec)
+    w = F.window(F.col(ts_col), f"{sec} seconds")
+    return (
+        rows.withWatermark(ts_col, watermark)
+        .groupBy(F.col(source_col).alias("source"), w.alias("w"), *keys)
+        .agg(*aggs)
+        .select("source", F.col("w.start").alias("bucket_start"), *out)
+    )
+
+
 def stream_rollup(
     stream: DataFrame,
     tier: str = "1m",
@@ -85,14 +108,7 @@ def stream_rollup(
 ) -> DataFrame:
     """Streaming continuous aggregate; same output schema as
     rollup_from_raw so golden tests compare the two directly."""
-    sec = TIER_SECONDS[tier]
-    w = F.window(F.col(ts_col), _TIER_INTERVAL[tier])
-    return (
-        stream.withWatermark(ts_col, watermark)
-        .groupBy(F.col(source_col).alias("source"), w.alias("w"))
-        .agg(*_core_aggs(value_col, sec, _is_integral(stream, value_col)))
-        .select("source", F.col("w.start").alias("bucket_start"), *CORE_AGG_COLS)
-    )
+    return stream_tier(stream, core_family(value_col), tier, watermark, source_col, ts_col)
 
 
 def stream_hist(
@@ -112,21 +128,8 @@ def stream_hist(
     this a native watermark-evicted streaming aggregation (no custom
     state); per-group state is one count, group cardinality is bounded
     by sources x live-windows x occupied bins."""
-    if tier not in TIER_SECONDS:
-        raise ValueError(f"unknown tier {tier!r}")
-    if bin_width <= 0:
-        raise ValueError("bin_width must be > 0")
-    w = F.window(F.col(ts_col), _TIER_INTERVAL[tier])
-    bin_col = F.floor(
-        F.col(value_col).cast("double") / F.lit(float(bin_width))
-    ).cast("long")
-    return (
-        stream.where(F.col(value_col).isNotNull())
-        .withWatermark(ts_col, watermark)
-        .groupBy(F.col(source_col).alias("source"), w.alias("w"), bin_col.alias("bin"))
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .select("source", F.col("w.start").alias("bucket_start"), "bin", "cnt")
-    )
+    family = hist_family(value_col, bin_width)
+    return stream_tier(stream, family, tier, watermark, source_col, ts_col)
 
 
 def stream_distinct(
@@ -147,18 +150,8 @@ def stream_distinct(
     window) group) no matter how many distinct values stream through;
     sketch merges are order-independent, so estimates are identical to
     a batch pass over the same rows (pytest-asserted)."""
-    if tier not in TIER_SECONDS:
-        raise ValueError(f"unknown tier {tier!r}")
-    w = F.window(F.col(ts_col), _TIER_INTERVAL[tier])
-    return (
-        stream.withWatermark(ts_col, watermark)
-        .groupBy(F.col(source_col).alias("source"), w.alias("w"))
-        .agg(
-            F.hll_sketch_agg(F.col(distinct_col), F.lit(lg_k)).alias("sketch"),
-            F.count(F.lit(1)).alias("cnt"),
-        )
-        .select("source", F.col("w.start").alias("bucket_start"), "sketch", "cnt")
-    )
+    family = hll_family(distinct_col, lg_k)
+    return stream_tier(stream, family, tier, watermark, source_col, ts_col)
 
 
 def stream_into_snapshot(
@@ -255,7 +248,9 @@ def stream_gorilla_segments(
     fires the points are sorted, encoded with the same bit-exact
     encode_segment as the batch path, and emitted once (append mode).
     Rows later than the watermark never reach the group and belong to
-    the batch re-roll path (RollupJob's input-fingerprint re-roll).
+    the batch re-roll path (RollupJob's input-fingerprint re-roll); so
+    does every pre-1970 row, since the first trigger's watermark is the
+    epoch itself.
 
     Output schema matches compress_rollup minus bytes_raw accounting
     nuances: (source, day, n_points, bytes_raw, bytes_compressed, data).
@@ -272,10 +267,8 @@ def stream_gorilla_segments(
     import numpy as np
     import pandas as pd
 
-    out_schema = (
-        "source string, day date, n_points int, bytes_raw long, "
-        "bytes_compressed long, data binary"
-    )
+    from ..functions.gorilla import COMPRESSED_SCHEMA, epoch_day
+
     state_schema = "ts array<long>, vals array<double>"
 
     def fn(key, pdfs, state):
@@ -322,15 +315,77 @@ def stream_gorilla_segments(
     prepped = (
         stream.withWatermark(ts_col, watermark)
         .withColumn("__epoch", F.col(ts_col).cast("timestamp").cast("long"))
-        .withColumn(
-            "day",
-            F.date_from_unix_date((F.col("__epoch") / F.lit(86400)).cast("int")),
-        )
+        .withColumn("day", epoch_day(F.col("__epoch")))
         .withColumn("__val", F.col(value_col).cast("double"))
         .select(F.col(source_col).alias("source"), "day", ts_col, "__epoch", "__val")
     )
     return prepped.groupBy("source", "day").applyInPandasWithState(
-        fn, out_schema, state_schema, "append", "EventTimeTimeout"
+        fn, COMPRESSED_SCHEMA, state_schema, "append", "EventTimeTimeout"
+    )
+
+
+def _source_walk(
+    stream: DataFrame,
+    value_col: str,
+    source_col: str,
+    ts_col: str,
+    watermark: str,
+    state_schema: str,
+    init: tuple,
+    out_schema: str,
+    step,
+) -> DataFrame:
+    """The per-source stateful walk shared by the streaming alert and
+    counter operators (applyInPandasWithState, NoTimeout).
+
+    Per source and trigger: the batch's rows sorted by (time, value) —
+    the batch counter's tie rule; a tier stream holds one row per
+    (source, bucket), so the value never reorders it — then ``step(state,
+    value) → (state, extra output tuple)`` once per row, starting from
+    the stored state (``init`` for a new source). Output is (source, ts,
+    value, *extras) with ``out_schema`` naming the extras. Rows are
+    sorted WITHIN each micro-batch only: a row arriving in a later
+    trigger than newer rows of its source is walked after them."""
+    import numpy as np
+    import pandas as pd
+
+    extras = [c.split()[0] for c in out_schema.split(",")]
+
+    def fn(key, pdfs, state):
+        frames = list(pdfs)
+        if not frames:
+            return
+        pdf = pd.concat(frames).sort_values(["__tsc", "__val"])
+        vals = pdf["__val"].to_numpy(np.float64)
+        st, rows = tuple(state.get) if state.exists else init, []
+        for v in vals:
+            st, row = step(st, v)
+            rows.append(row)
+        state.update(st)
+        yield pd.DataFrame(
+            {
+                source_col: key[0],
+                ts_col: pd.to_datetime(pdf["__tsc"].to_numpy(), unit="s"),
+                "value": vals,
+                **{c: [r[i] for r in rows] for i, c in enumerate(extras)},
+            }
+        )
+
+    # __tsc carries the bucket time as a NON-event-time long (a second
+    # timestamp column would inherit the watermark tag and streaming
+    # rejects two event-time columns per stream)
+    prepped = (
+        stream.withWatermark(ts_col, watermark)
+        .withColumn("__tsc", F.col(ts_col).cast("timestamp").cast("long"))
+        .withColumn("__val", F.col(value_col).cast("double"))
+        .select(F.col(source_col).cast("string").alias(source_col), "__tsc", "__val")
+    )
+    return prepped.groupBy(source_col).applyInPandasWithState(
+        fn,
+        f"{source_col} string, {ts_col} timestamp, value double, {out_schema}",
+        state_schema,
+        "append",
+        "NoTimeout",
     )
 
 
@@ -358,58 +413,21 @@ def stream_anomaly(
     later corrections belong to the batch re-roll path.
     """
     import numpy as np
-    import pandas as pd
 
-    out_schema = (
-        f"{source_col} string, {ts_col} timestamp, value double, "
-        "zscore double, is_anomaly boolean"
-    )
-    state_schema = "vals array<double>"
-    minp = window
+    def step(st, v):
+        t = np.asarray(st[0], dtype=np.float64)
+        n, z = len(t), np.nan
+        if n >= window:
+            s1, s2 = t.sum(), (t * t).sum()
+            mu = s1 / n
+            var = max(s2 / n - mu * mu, 0.0)
+            if var > 0:
+                z = (v - mu) / np.sqrt(var)
+        return ([*st[0], float(v)][-window:],), (z, bool(abs(z) > k))
 
-    def fn(key, pdfs, state):
-        trail = list(state.get[0]) if state.exists else []
-        frames = [p for p in pdfs]
-        if not frames:
-            return
-        pdf = pd.concat(frames).sort_values("__tsc")
-        vals = pdf["__val"].to_numpy(np.float64)
-        zs = np.full(len(vals), np.nan)
-        flags = np.zeros(len(vals), dtype=bool)
-        for i, v in enumerate(vals):
-            t = np.asarray(trail[-window:], dtype=np.float64)
-            n = len(t)
-            if n >= minp:
-                s1, s2 = t.sum(), (t * t).sum()
-                mu = s1 / n
-                var = max(s2 / n - mu * mu, 0.0)
-                if var > 0:
-                    zs[i] = (v - mu) / np.sqrt(var)
-                    flags[i] = abs(zs[i]) > k
-            trail.append(float(v))
-            trail = trail[-window:]
-        state.update((trail,))
-        yield pd.DataFrame(
-            {
-                source_col: key[0],
-                ts_col: pd.to_datetime(pdf["__tsc"].to_numpy(), unit="s"),
-                "value": vals,
-                "zscore": zs,
-                "is_anomaly": flags,
-            }
-        )
-
-    # __tsc carries the bucket time as a NON-event-time long (a second
-    # timestamp column would inherit the watermark tag and streaming
-    # rejects two event-time columns per stream)
-    prepped = (
-        tier_stream.withWatermark(ts_col, watermark)
-        .withColumn("__tsc", F.col(ts_col).cast("timestamp").cast("long"))
-        .withColumn("__val", F.col(value_col).cast("double"))
-        .select(F.col(source_col).cast("string").alias(source_col), "__tsc", "__val")
-    )
-    return prepped.groupBy(source_col).applyInPandasWithState(
-        fn, out_schema, state_schema, "append", "NoTimeout"
+    return _source_walk(
+        tier_stream, value_col, source_col, ts_col, watermark,
+        "vals array<double>", ([],), "zscore double, is_anomaly boolean", step,
     )
 
 
@@ -448,51 +466,20 @@ def stream_cusum(
     sessionize module shows that pattern; it trades the 2-long state
     for a per-key buffer."""
     import numpy as np
-    import pandas as pd
 
-    out_schema = (
-        f"{source_col} string, {ts_col} timestamp, value double, "
-        "s_pos double, s_neg double, alarm boolean"
-    )
-    state_schema = "sp long, sn long"
     mu_u = int(round(target * 1e6))
     k_u = int(round(k * 1e6))
     h_u = int(round(h * 1e6))
 
-    def fn(key, pdfs, state):
-        sp, sn = (state.get if state.exists else (0, 0))
-        frames = [p for p in pdfs]
-        if not frames:
-            return
-        pdf = pd.concat(frames).sort_values("__tsc")
-        vals = pdf["__val"].to_numpy(np.float64)
-        v_u = np.floor(vals * 1e6 + 0.5).astype(np.int64)
-        sps = np.empty(len(v_u), dtype=np.int64)
-        sns = np.empty(len(v_u), dtype=np.int64)
-        for i, x in enumerate(v_u):
-            sp = max(0, sp + int(x) - mu_u - k_u)
-            sn = max(0, sn - (int(x) - mu_u + k_u))
-            sps[i], sns[i] = sp, sn
-        state.update((int(sp), int(sn)))
-        yield pd.DataFrame(
-            {
-                source_col: key[0],
-                ts_col: pd.to_datetime(pdf["__tsc"].to_numpy(), unit="s"),
-                "value": vals,
-                "s_pos": sps / 1e6,
-                "s_neg": sns / 1e6,
-                "alarm": (sps > h_u) | (sns > h_u),
-            }
-        )
+    def step(st, v):
+        x = int(np.floor(v * 1e6 + 0.5))
+        sp = max(0, st[0] + x - mu_u - k_u)
+        sn = max(0, st[1] - (x - mu_u + k_u))
+        return (sp, sn), (sp / 1e6, sn / 1e6, sp > h_u or sn > h_u)
 
-    prepped = (
-        tier_stream.withWatermark(ts_col, watermark)
-        .withColumn("__tsc", F.col(ts_col).cast("timestamp").cast("long"))
-        .withColumn("__val", F.col(value_col).cast("double"))
-        .select(F.col(source_col).cast("string").alias(source_col), "__tsc", "__val")
-    )
-    return prepped.groupBy(source_col).applyInPandasWithState(
-        fn, out_schema, state_schema, "append", "NoTimeout"
+    return _source_walk(
+        tier_stream, value_col, source_col, ts_col, watermark,
+        "sp long, sn long", (0, 0), "s_pos double, s_neg double, alarm boolean", step,
     )
 
 
@@ -516,53 +503,16 @@ def stream_counter_increase(
     is_reset); the first sample of a source emits contrib NULL
     (baseline unknown), matching the batch operator.
     """
-    import numpy as np
-    import pandas as pd
 
-    out_schema = (
-        f"{source_col} string, {ts_col} timestamp, value double, "
-        "contrib double, is_reset boolean"
-    )
-    state_schema = "last double"
+    def step(st, v):
+        last, v = st[0], float(v)
+        if last is None:
+            return (v,), (float("nan"), False)
+        return (v,), ((v - last, False) if v >= last else (v, True))
 
-    def fn(key, pdfs, state):
-        last = state.get[0] if state.exists else None
-        frames = [p for p in pdfs]
-        if not frames:
-            return
-        pdf = pd.concat(frames).sort_values(["__tsc", "__val"])
-        vals = pdf["__val"].to_numpy(np.float64)
-        contrib = np.empty(len(vals), dtype=np.float64)
-        reset = np.zeros(len(vals), dtype=bool)
-        for i, v in enumerate(vals):
-            if last is None:
-                contrib[i] = np.nan
-            elif v >= last:
-                contrib[i] = v - last
-            else:
-                contrib[i] = v
-                reset[i] = True
-            last = float(v)
-        state.update((float(last),))
-        out = pd.DataFrame(
-            {
-                source_col: key[0],
-                ts_col: pd.to_datetime(pdf["__tsc"].to_numpy(), unit="s"),
-                "value": vals,
-                "contrib": contrib,
-                "is_reset": reset,
-            }
-        )
-        yield out
-
-    prepped = (
-        stream.withWatermark(ts_col, watermark)
-        .withColumn("__tsc", F.col(ts_col).cast("timestamp").cast("long"))
-        .withColumn("__val", F.col(value_col).cast("double"))
-        .select(F.col(source_col).cast("string").alias(source_col), "__tsc", "__val")
-    )
-    return prepped.groupBy(source_col).applyInPandasWithState(
-        fn, out_schema, state_schema, "append", "NoTimeout"
+    return _source_walk(
+        stream, value_col, source_col, ts_col, watermark,
+        "last double", (None,), "contrib double, is_reset boolean", step,
     )
 
 

@@ -43,6 +43,39 @@ def test_cascade_adds_one_exchange_only(spark):
     assert _plan(agg1h).count("Exchange") == 2  # one per tier
 
 
+@pytest.mark.parametrize("family", ["hist", "hll"])
+def test_hist_and_hll_tiers_single_exchange_and_partial_agg(spark, family):
+    """The histogram and HLL families run the same batch skeleton as the
+    core tiers: per tier one more Exchange, each fed by a map-side
+    partial aggregate, no Python, and the long epoch bucket key — never
+    the streaming ``window()`` struct key."""
+    from getml_community_spark.operators.distinct import hll_cascade, hll_rollup_from_raw
+    from getml_community_spark.operators.histquantile import (
+        hist_cascade,
+        hist_rollup_from_raw,
+    )
+
+    ev = spark.read.parquet(f"{SF}/events.parquet")
+    kw = dict(source_col="user_id", ts_col="ts")
+    if family == "hist":
+        tier = hist_rollup_from_raw(ev, "1m", value_col="value", bin_width=5.0, **kw)
+        cascade = hist_cascade
+    else:
+        tier = hll_rollup_from_raw(ev, "1m", distinct_col="event_id", **kw)
+        cascade = hll_cascade
+    for n, name in enumerate(["1m", "1h", "1d"], start=1):
+        if n > 1:
+            tier = cascade(tier, name)
+        plan = _plan(tier)
+        lines = plan.splitlines()
+        exchanges = [i for i, ln in enumerate(lines) if "Exchange" in ln]
+        assert len(exchanges) == n, (name, plan)
+        for i in exchanges:
+            assert "Aggregate" in lines[i + 1] and "partial_" in lines[i + 1], (name, plan)
+        assert "Python" not in plan and "MapInPandas" not in plan, (name, plan)
+        assert "window" not in plan and "precisetimestampconversion" not in plan, (name, plan)
+
+
 def test_filter_and_projection_pushdown(spark):
     """Filters and column pruning reach the parquet scan: a filtered
     rollup must show PushedFilters and must NOT read unused columns

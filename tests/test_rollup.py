@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pytest
 
 from getml_community_spark.operators.gapfill import gapfill
 from getml_community_spark.operators.rollup import (
@@ -56,6 +57,36 @@ def test_salted_equals_plain(spark, corpus_df):
     plain = rollup_from_raw(corpus_df, "1m").toPandas()
     salted = salted_rollup(corpus_df, "1m", salt_buckets=8).toPandas()
     assert_frames_equal_unordered(salted, plain, ["source", "bucket_start"])
+
+
+def _tier_functions():
+    from getml_community_spark.operators import counter, distinct, histquantile
+    from getml_community_spark.operators import rollup as r
+    from getml_community_spark.streaming import stream_rollup as s
+
+    return {
+        "rollup_from_raw": r.rollup_from_raw,
+        "rollup_cascade": r.rollup_cascade,
+        "salted_rollup": r.salted_rollup,
+        "rollup_battery": r.rollup_battery,
+        "hll_rollup_from_raw": distinct.hll_rollup_from_raw,
+        "hll_cascade": distinct.hll_cascade,
+        "hist_rollup_from_raw": histquantile.hist_rollup_from_raw,
+        "hist_cascade": histquantile.hist_cascade,
+        "counter_increase": counter.counter_increase,
+        "stream_rollup": s.stream_rollup,
+        "stream_hist": s.stream_hist,
+        "stream_distinct": s.stream_distinct,
+    }
+
+
+@pytest.mark.parametrize("name", sorted(_tier_functions()))
+def test_unknown_tier_raises_value_error(spark, name):
+    """Every tier function rejects an unknown tier with one ValueError
+    naming it and the known tiers, before any plan is built."""
+    fn = _tier_functions()[name]
+    with pytest.raises(ValueError, match=r"unknown tier '2m'; known tiers: 1m, 1h, 1d"):
+        fn(spark.range(1), "2m")
 
 
 def test_gapfill_dense_and_zeroed(spark, corpus_df, corpus_pdf):

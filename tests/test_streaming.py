@@ -69,7 +69,10 @@ def test_stream_gorilla_segments_stateful_close(spark, tmp_path):
 
     d1_epochs = [day1 + i * 600 for i in range(100)]
     d1_vals = [100.0 + (i % 7) * 0.25 for i in range(100)]
-    write_points("d1", d1_epochs, d1_vals)
+    # 1969-12-31T23:00Z: the stream's late-row filter drops it (event
+    # time below the first batch's watermark, 0) — it belongs to the
+    # batch path and must not leak into any segment
+    write_points("d1", [-3600] + d1_epochs, [7.5] + d1_vals)
 
     sink = str(tmp_path / "segs_out")
 
@@ -117,6 +120,18 @@ def test_stream_gorilla_segments_stateful_close(spark, tmp_path):
     ts, vals = decode_segment(bytes(row["data"]))
     assert (ts == np.array(d1_epochs)).all()
     assert (vals == np.array(d1_vals)).all()
+
+    # the stream keys segments by compress_rollup's floored day rule
+    # (1969-12-31 for the pre-epoch point), not by truncation toward 0
+    from getml_community_spark.functions.gorilla import epoch_day
+
+    probe = spark.createDataFrame([(-3600,)], "e long")
+    assert str(probe.select(epoch_day(F.col("e"))).first()[0]) == "1969-12-31"
+    stream = spark.readStream.schema(
+        "source string, event_time timestamp, n_tok double"
+    ).parquet(src_dir)
+    plan = stream_gorilla_segments(stream)._jdf.queryExecution().analyzed().toString()
+    assert "date_from_unix_date(cast(FLOOR(" in plan, plan
 
 
 def test_streamed_tier_feeds_batch_cascade(spark, tmp_path):
