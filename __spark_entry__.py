@@ -14,8 +14,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from getml_community_spark.operators.textstats import _spread
 from getml_community_spark.operators.tokenize import SHINGLE, split_expr
+from getml_community_spark.session import spread
 
 SF_DEFAULT = "/root/testdata/sf0.001"
 
@@ -201,7 +201,7 @@ def q_exactsubstr_spans(spark, sf):
     from getml_community_spark.operators.dedup import duplicated_token_spans
     from getml_community_spark.operators.tokenize import words_arrow
 
-    docs = _spread(_load(spark, sf, "documents"))
+    docs = spread(_load(spark, sf, "documents"))
     # Arrow tokenizer (guide §4.2) — same split class as the oracle
     toks = words_arrow(F.col("text"), SHINGLE)
     df = docs.select("doc_id", toks.alias("tokens"))
@@ -263,7 +263,7 @@ def q_gapfill_1h(spark, sf):
     from getml_community_spark.operators.gapfill import gapfill
     from getml_community_spark.operators.rollup import rollup_from_raw
 
-    ev = _spread(_load(spark, sf, "events"))
+    ev = spread(_load(spark, sf, "events"))
     agg = rollup_from_raw(ev, "1h", source_col="user_id", ts_col="ts", value_col="value")
     dense = gapfill(agg, 3600)
     return dense.select(
@@ -282,7 +282,7 @@ def q_gapfill_interp_1h(spark, sf):
     from getml_community_spark.operators.gapfill import gapfill_interpolated
     from getml_community_spark.operators.rollup import rollup_from_raw
 
-    ev = _spread(_load(spark, sf, "events"))
+    ev = spread(_load(spark, sf, "events"))
     agg = rollup_from_raw(ev, "1h", source_col="user_id", ts_col="ts", value_col="value")
     dense = gapfill_interpolated(agg, 3600, value_cols=("rate",))
     # midpoint interpolation lands EXACTLY on .5e-6 quantization
@@ -324,7 +324,7 @@ def q_battery_1h(spark, sf):
     and no per-distinct-value buffers are built."""
     from getml_community_spark.operators.aggregates import grouped_battery
 
-    ev = _spread(_load(spark, sf, "events"))
+    ev = spread(_load(spark, sf, "events"))
     t = F.col("ts").cast("timestamp").cast("double")
     bucket = _hour_bucket("ts")
     out = grouped_battery(
@@ -360,7 +360,7 @@ def q_battery_full_1h(spark, sf):
     numerically-stable builtins, cross-checked in pytest with rtol."""
     from getml_community_spark.operators.aggregates import battery
 
-    ev = _spread(_load(spark, sf, "events"))
+    ev = spread(_load(spark, sf, "events"))
     t = F.col("ts").cast("timestamp").cast("double")
     bucket = _hour_bucket("ts")
     t_ref = bucket.cast("double") + F.lit(3600.0)
@@ -448,7 +448,7 @@ def q_gorilla_roundtrip_1m(spark, sf):
     )
     from getml_community_spark.operators.rollup import rollup_from_raw
 
-    # NO _spread here (measured 3.5 s -> 10.9 s with it): the first
+    # NO spread here (measured 3.5 s -> 10.9 s with it): the first
     # stage is a cheap codegen partial agg, and the extra round-robin
     # exchange ahead of the (source, minute) group shuffle only adds
     # volume. The heavy stages (encode/decode UDFs) sit AFTER the
@@ -471,7 +471,7 @@ def q_lag_rolling_1h(spark, sf):
     from getml_community_spark.operators.lag import lag_features, rolling_features
     from getml_community_spark.operators.rollup import rollup_from_raw
 
-    ev = _spread(_load(spark, sf, "events"))
+    ev = spread(_load(spark, sf, "events"))
     dense = gapfill(
         rollup_from_raw(ev, "1h", source_col="user_id", ts_col="ts", value_col="value"),
         3600,
@@ -524,9 +524,9 @@ def q_asof_upper_ts(spark, sf):
     into the events span (see _with_pop_ts) so the gate is non-vacuous."""
     from getml_community_spark.operators.asof_join import asof_match
 
-    orders = _with_pop_ts(_spread(_load(spark, sf, "orders")))
+    orders = _with_pop_ts(spread(_load(spark, sf, "orders")))
     events = (
-        _spread(_load(spark, sf, "events"))
+        spread(_load(spark, sf, "events"))
         .withColumnRenamed("user_id", "o_custkey")
         .withColumn(
             "valid_until",
@@ -557,9 +557,9 @@ def q_asof_categorical_dummy(spark, sf):
     (o_totalprice − 1000·value per match) aggregated over the window."""
     from getml_community_spark.operators.asof_join import asof_features
 
-    # no _spread: the as-of feature core spreads the population by its id
+    # no spread: the as-of feature core spreads the population by its id
     orders = _with_pop_ts(_load(spark, sf, "orders"))
-    events = _spread(_load(spark, sf, "events")).withColumnRenamed("user_id", "o_custkey")
+    events = spread(_load(spark, sf, "events")).withColumnRenamed("user_id", "o_custkey")
     dummy = asof_features(
         orders, events, on="o_custkey", population_id="o_orderkey",
         pop_ts="pop_ts", peri_ts="ts",
@@ -598,7 +598,7 @@ def q_word_features(spark, sf):
 
     docs = _load(spark, sf, "documents")
     top = [r["word"] for r in vocabulary(docs, "text", min_df=1, max_size=10).collect()]
-    tokens = _spread(docs).select(
+    tokens = spread(docs).select(
         "source",
         F.explode(F.array_distinct(words_arrow(F.col("text")))).alias("word"),
     )
@@ -618,7 +618,7 @@ def q_asof_orders_events(spark, sf):
     from getml_community_spark.operators.asof_join import asof_features
 
     orders = _with_pop_ts(_load(spark, sf, "orders"))
-    events = _spread(_load(spark, sf, "events")).withColumnRenamed("user_id", "o_custkey")
+    events = spread(_load(spark, sf, "events")).withColumnRenamed("user_id", "o_custkey")
     feats = asof_features(
         orders,
         events,
@@ -657,7 +657,7 @@ def q_asof_multikey(spark, sf):
         "k2", F.col("o_orderkey") % 3
     )
     events = (
-        _spread(_load(spark, sf, "events"))
+        spread(_load(spark, sf, "events"))
         .withColumnRenamed("user_id", "o_custkey")
         .withColumn("k2", F.col("event_id") % 3)
     )
@@ -737,7 +737,7 @@ def q_fastprop_features(spark, sf):
     from getml_community_spark.operators.fastprop import fastprop_features
 
     orders = _with_pop_ts(_load(spark, sf, "orders"))
-    events = _spread(_load(spark, sf, "events")).withColumnRenamed("user_id", "o_custkey")
+    events = spread(_load(spark, sf, "events")).withColumnRenamed("user_id", "o_custkey")
     out = fastprop_features(
         orders, events, on="o_custkey", population_id="o_orderkey",
         pop_ts="pop_ts", peri_ts="ts", value_cols=["value"],
@@ -882,7 +882,7 @@ def q_pricing_summary(spark, sf):
 
 def q_concat_union(spark, sf):
     """concat/append (§2.2, union by name — concat.py:24-36)."""
-    ev = _spread(_load(spark, sf, "events"))
+    ev = spread(_load(spark, sf, "events"))
     a = ev.where(F.col("value") > 0)
     b = ev.where(F.col("value") <= 0)
     return (
@@ -971,7 +971,7 @@ def q_category_trim(spark, sf):
     """CategoryTrimmer (§2.8): keep top-2 event types, rest → 'trimmed'."""
     from getml_community_spark.functions.preprocessors import category_trim
 
-    ev = _spread(_load(spark, sf, "events"))
+    ev = spread(_load(spark, sf, "events"))
     out, _ = category_trim(ev, "event_type", top_k=2)
     return (
         out.groupBy("event_type")
@@ -1100,7 +1100,7 @@ def q_multimodal_features(spark, sf):
         extract_image_features,
     )
 
-    docs = _spread(
+    docs = spread(
         _load(spark, sf, "documents").select(
             F.col("doc_id").cast("string").alias("media_id"),
             F.col("text").cast("binary").alias("payload"),
@@ -1148,7 +1148,7 @@ def q_bmp_decode(spark, sf):
             out.append(encode_bmp(px.reshape(8, 8, 3)))
         return pd.Series(out)
 
-    docs = _spread(
+    docs = spread(
         _load(spark, sf, "documents").select(
             F.col("doc_id").cast("string").alias("media_id"),
             F.col("n_chars").cast("long").alias("__seed"),
@@ -1196,7 +1196,7 @@ def q_png_decode(spark, sf):
             out.append(encode_png(px.reshape(8, 8, 3), filter_mode="cycle"))
         return pd.Series(out)
 
-    docs = _spread(
+    docs = spread(
         _load(spark, sf, "documents").select(
             F.col("doc_id").cast("string").alias("media_id"),
             F.col("n_chars").cast("long").alias("__seed"),
@@ -1244,7 +1244,7 @@ def q_jpeg_decode(spark, sf):
             out.append(encode_jpeg_gray(px, quality=90))
         return pd.Series(out)
 
-    docs = _spread(
+    docs = spread(
         _load(spark, sf, "documents").select(
             F.col("doc_id").cast("string").alias("media_id"),
             F.col("n_chars").cast("long").alias("__seed"),
@@ -1370,7 +1370,7 @@ def q_mjpeg_frames(spark, sf):
             out.append(encode_avi_mjpeg(frames, fps=10))
         return pd.Series(out)
 
-    docs = _spread(
+    docs = spread(
         _load(spark, sf, "documents").select(
             F.col("doc_id").cast("string").alias("media_id"),
             F.col("n_chars").cast("long").alias("__seed"),
@@ -1417,7 +1417,7 @@ def q_wav_features(spark, sf):
             out.append(encode_wav(samples, sample_rate=16000))
         return pd.Series(out)
 
-    docs = _spread(
+    docs = spread(
         _load(spark, sf, "documents").select(
             F.col("doc_id").cast("string").alias("media_id"),
             F.col("n_chars").cast("long").alias("__seed"),
@@ -1448,7 +1448,7 @@ def q_pack_stats(spark, sf):
     from getml_community_spark.operators.packing import pack_sequences
     from getml_community_spark.operators.tokenize import words_arrow
 
-    docs = _spread(_load(spark, sf, "documents"))
+    docs = spread(_load(spark, sf, "documents"))
     toks = docs.select(
         "doc_id",
         "source",
@@ -1570,7 +1570,7 @@ def q_seasonal_decompose(spark, sf):
     from getml_community_spark.operators.gapfill import gapfill
     from getml_community_spark.operators.rollup import rollup_from_raw
 
-    ev = _spread(_load(spark, sf, "events"))
+    ev = spread(_load(spark, sf, "events"))
     agg = rollup_from_raw(
         ev, "1h", source_col="user_id", ts_col="ts", value_col="value"
     )
@@ -1800,7 +1800,7 @@ def q_deseasonal_anomaly(spark, sf):
     from getml_community_spark.operators.gapfill import gapfill
     from getml_community_spark.operators.rollup import rollup_from_raw
 
-    ev = _spread(_load(spark, sf, "events"))
+    ev = spread(_load(spark, sf, "events"))
     agg = rollup_from_raw(
         ev, "1h", source_col="user_id", ts_col="ts", value_col="value"
     )
@@ -1865,7 +1865,7 @@ def q_pii_redact(spark, sf):
     default). The redacted text is compared via md5. Counts and
     redaction build from the operator module's PII_PATTERNS (single
     source of truth) in ONE projection — one scan, no join."""
-    docs = _spread(_load(spark, sf, "documents"))
+    docs = spread(_load(spark, sf, "documents"))
     inject = F.concat(
         F.col("text"),
         F.lit(" contact user"),
@@ -2018,10 +2018,8 @@ def q_token_neardup(spark, sf):
     from getml_community_spark.operators.dedup import token_minhash_pairs
     from getml_community_spark.operators.tokenize import md5_token_ids_arrow
 
-    # spread HERE, not just inside the operator: the exact-rescore
-    # branch re-derives shingles from this frame, and a single-file scan
-    # would run that (interpreted) pipeline on one core
-    docs = _spread(_load(spark, sf, "documents"))
+    # the operator does not spread its input: spread the md5 tokenizer
+    docs = spread(_load(spark, sf, "documents"))
     df = docs.select("doc_id", md5_token_ids_arrow(F.col("text")).alias("tokens"))
     # max_bucket_size=None: uncapped — the oracle is all-pairs
     pairs = token_minhash_pairs(
@@ -2042,7 +2040,7 @@ def q_token_chunks(spark, sf):
     replays the start arithmetic and list slicing in DuckDB."""
     from getml_community_spark.operators.packing import chunk_tokens
 
-    docs = _spread(_load(spark, sf, "documents"))
+    docs = spread(_load(spark, sf, "documents"))
     df = docs.select("doc_id", _md5_tokens_expr(F.col("text")).alias("tokens"))
     ch = chunk_tokens(df, size=64, stride=48, min_tokens=8)
     return ch.select(
@@ -2079,7 +2077,7 @@ def q_text_normalize(spark, sf):
     result makes the gate byte-exact without shipping full texts."""
     from getml_community_spark.operators.textnorm import normalize_text
 
-    docs = _spread(_load(spark, sf, "documents"))
+    docs = spread(_load(spark, sf, "documents"))
     # decomposed e+combining-acute, fi-ligature, superscript-2, a
     # BEL control char and a double space: all three cleanups fire
     suffix = " cafe\u0301 \ufb01 \u00b2 x\x07y  z"

@@ -14,6 +14,7 @@ partitioning/AQE/salting for scale.
 Layout
 ------
 session          SparkSession factory (AQE, Arrow, shuffle tuning, Iceberg-gated)
+                 + the one lineage cut (barrier) and narrow-input spread (spread)
 datagen          deterministic tokenized-corpus generator (FIXTURES.md §1)
 oracle           numpy implementation of the full aggregation battery (test oracle)
 checkpoint       snapshot-manifest table layer + per-partition lineage +

@@ -29,8 +29,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from ..session import barrier
-from .textstats import _spread
+from ..session import barrier, spread
 from .tokenize import SHINGLE, arrow_udf, md5_60, shingles_arrow, split_expr
 
 __all__ = [
@@ -52,12 +51,6 @@ __all__ = [
     "lsh_bucket_occupancy",
     "line_dedup",
 ]
-
-# 64-bit mixing constants for the hash families (public xxhash-style odd
-# multipliers; any fixed odd constants work).
-_MIX_A = 0x9E3779B97F4A7C15
-_MIX_B = 0xC2B2AE3D27D4EB4F
-
 
 def exact_dedup(
     df: DataFrame,
@@ -134,11 +127,6 @@ def shingles(text: Column, n: int = 5, charset: str = "ascii") -> Column:
             )
         ),
     )
-
-
-def _hash_family(col: Column, seed: int) -> Column:
-    """One member of a 64-bit hash family: xxhash64 with per-family salt."""
-    return F.xxhash64(col, F.lit(seed))
 
 
 def minhash_signature(shingle_col: Column, num_hashes: int = 128) -> Column:
@@ -257,9 +245,7 @@ def minhash_lsh_pairs(
     :func:`lsh_bucket_occupancy` to log what a cap would drop.
     """
     rows_per_band = num_hashes // bands
-    # The shingle pipeline is interpreted (higher-order array functions
-    # don't codegen): spread a narrow input across the cluster first.
-    df = _spread(df)
+    df = spread(df)
     # shingle_expr overrides the text-derived shingle set (e.g.
     # token_shingles over int-ID sequences) — the rest of the pipeline
     # is payload-agnostic. NULL text has NULL shingles: no signature,
@@ -394,41 +380,29 @@ def token_minhash_pairs(
     ``array_union`` — no text round-trip, so dedup runs directly on the
     training-ready token table. Columns: (id_a, id_b, est_jaccard,
     exact_jaccard)."""
-    # Shingle ONCE into a checkpointed (id, shingles) table reused by
-    # BOTH the signature pass and the exact rescore (the text path's r6
-    # shape): the old form computed the interpreted tokens→shingles
-    # pipeline separately for the LSH branch and the rescore branch
-    # (no exchange reuse across self-join aliases — CLAUDE.md), and any
-    # caller-supplied tokens projection (e.g. the md5 shim) with it.
-    sh = token_shingles(F.col(tokens_col), shingle_n).alias("__sh")
-    sh_tbl = barrier(df.select(F.col(id_col).alias("id"), sh), eager=True)
-    pairs = minhash_lsh_pairs(
-        sh_tbl,
-        None,
-        "id",
-        num_hashes,
-        bands,
-        shingle_n,
-        max_bucket_size,
-        shingle_expr=F.col("__sh"),
-    )
-    a = sh_tbl.select(F.col("id").alias("id_a"), F.col("__sh").alias("__sh_a"))
-    b = sh_tbl.select(F.col("id").alias("id_b"), F.col("__sh").alias("__sh_b"))
-    inter = F.size(F.array_intersect("__sh_a", "__sh_b"))
-    union = F.size(F.array_union("__sh_a", "__sh_b"))
-    joined = pairs.join(a, "id_a").join(b, "id_b")
-    # spread the small candidate frame before the per-pair set ops (AQE
-    # coalesces it to one partition otherwise — the verified-pairs fix)
-    joined = joined.repartition(df.sparkSession.sparkContext.defaultParallelism)
-    out = joined.select(
-        "id_a",
-        "id_b",
-        "est_jaccard",
-        (inter.cast("double") / union.cast("double")).alias("exact_jaccard"),
-    )
-    # lazy barrier, same reason as minhash_lsh_pairs_verified: callers
-    # filter on exact_jaccard, and filter pushdown would re-run the
-    # array set ops below the repartition on one partition
+    sh = token_shingles(F.col(tokens_col), shingle_n)
+    lsh = (num_hashes, bands, shingle_n, max_bucket_size)
+    return _verified_pairs(df, id_col, sh, ("id_a", "id_b", "est_jaccard"), "exact_jaccard", lsh)
+
+
+def _verified_pairs(df, id_col, shingle, keep, score, lsh) -> DataFrame:
+    """The LSH-then-verify core: shingle each doc ONCE into a
+    checkpointed (id, shingles) table feeding BOTH the signature pass and
+    the exact rescore (self-join aliases share no subtree), band it with
+    :func:`minhash_lsh_pairs` (``lsh`` = its num_hashes, bands, shingle_n,
+    max_bucket_size), rejoin the candidates' shingles and score their
+    EXACT Jaccard. Columns: ``keep`` (LSH columns), then ``score``."""
+    sh_tbl = barrier(df.select(F.col(id_col).alias("id"), shingle.alias("__sh")), eager=True)
+    cand = minhash_lsh_pairs(sh_tbl, None, "id", *lsh, shingle_expr=F.col("__sh")).select(*keep)
+    ta = sh_tbl.select(F.col("id").alias("id_a"), F.col("__sh").alias("__sh_a"))
+    tb = sh_tbl.select(F.col("id").alias("id_b"), F.col("__sh").alias("__sh_b"))
+    joined = spread(cand.join(ta, "id_a").join(tb, "id_b"))
+    inter = F.size(F.array_intersect("__sh_a", "__sh_b")).cast("double")
+    union = F.size(F.array_union("__sh_a", "__sh_b")).cast("double")
+    out = joined.select(*keep, F.when(union == 0, 0.0).otherwise(inter / union).alias(score))
+    # lazy barrier: a caller's filter on the score would otherwise be
+    # pushed below the spread and re-run the set ops on one partition
+    # (measured: +8 s in minhash_lsh_dedup); the frame is candidates-only
     return barrier(out, eager=False)
 
 
@@ -517,7 +491,7 @@ def duplicated_token_spans(
         toks_int = F.transform(toks, lambda t: F.xxhash64(t))
     else:
         toks_int = F.transform(toks, lambda t: t.cast("long"))
-    df = _spread(df)  # spread the (interpreted) tokenize
+    df = spread(df)  # spread the (interpreted) tokenize
     pos = (
         df.where(F.size(toks) >= k)
         .select(
@@ -593,37 +567,9 @@ def minhash_lsh_pairs_verified(
     probability a pair with true Jaccard ≥ 0.8 is never bucketed is
     (1-0.8⁴)³² ≈ 5e-8, so thresholding the exact score equals all-pairs
     Jaccard for practical purposes (this is the oracle-checkable form)."""
-    # Shingle each doc ONCE into a checkpointed (id, shingles) table and
-    # reuse it for BOTH the signature pass and the exact rescore — the
-    # old shape re-tokenized the raw text per candidate pair (a doc in k
-    # pairs shingled k+1 times; the token path, dedup.py:385, already
-    # worked this way). Same arrays → identical jaccard values.
-    df = _spread(df)  # spread the shingle pass
-    sh = shingles_arrow(F.col(text_col), shingle_n).alias("__sh")
-    sh_tbl = barrier(df.select(F.col(id_col).alias("id"), sh), eager=True)
-    cand = minhash_lsh_pairs(
-        sh_tbl, None, "id", num_hashes, bands, shingle_n, max_bucket_size,
-        shingle_expr=F.col("__sh"),
-    ).select("id_a", "id_b")
-    ta = sh_tbl.select(F.col("id").alias("id_a"), F.col("__sh").alias("__sh_a"))
-    tb = sh_tbl.select(F.col("id").alias("id_b"), F.col("__sh").alias("__sh_b"))
-    joined = cand.join(ta, "id_a").join(tb, "id_b")
-    # Spread the candidate pairs BEFORE the per-pair set ops: AQE
-    # coalesces the small candidate frame to one partition otherwise.
-    joined = joined.repartition(df.sparkSession.sparkContext.defaultParallelism)
-    inter = F.size(F.array_intersect("__sh_a", "__sh_b")).cast("double")
-    union = F.size(F.array_union("__sh_a", "__sh_b")).cast("double")
-    out = joined.select(
-        "id_a",
-        "id_b",
-        F.when(union == 0, 0.0).otherwise(inter / union).alias("jaccard"),
-    )
-    # lazy barrier: a caller's filter on `jaccard` would otherwise be
-    # pushed below the repartition, re-evaluating the interpreted
-    # double-tokenize once in the (single-partition) filter and again
-    # in the projection (measured: +8 s in minhash_lsh_dedup). The
-    # frame is candidates-only — tiny at any scale.
-    return barrier(out, eager=False)
+    sh = shingles_arrow(F.col(text_col), shingle_n)
+    lsh = (num_hashes, bands, shingle_n, max_bucket_size)
+    return _verified_pairs(spread(df), id_col, sh, ("id_a", "id_b"), "jaccard", lsh)
 
 
 def minhash_lsh_dedup(
@@ -753,9 +699,8 @@ def simhash_pairs(
     chunks (pigeonhole: hamming ≤ 3 ⇒ at least one of 4 chunks equal —
     EXACT recall for max_hamming ≤ 3; above 3 the blocking is a
     heuristic), then filter exact hamming distance ≤ max_hamming."""
-    # spread the fingerprint pass; NULL text has a NULL fingerprint and
-    # is never a candidate — drop it before banding
-    df = _spread(df).where(F.col(text_col).isNotNull())
+    # NULL text has a NULL fingerprint: never a candidate, drop it
+    df = spread(df).where(F.col(text_col).isNotNull())
     fp = simhash(F.col(text_col), token_hash=token_hash)
     base = df.select(F.col(id_col).alias("id"), fp.alias("fp"))
     chunks = base.select(
@@ -1023,10 +968,7 @@ def semdedup(
             for c, cc in enumerate(cent_cols)
         ]
     )
-    # the assignment expression is n_centroids interpreted higher-order
-    # cosines per row — spread narrow (single-file) inputs across the
-    # cluster first (metadata no-op when already parallel; CLAUDE.md)
-    df = _spread(df)
+    df = spread(df)
     assigned = df.select(
         F.col(id_col).alias("__id"),
         v.alias("__v"),

@@ -26,7 +26,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..session import barrier
+from ..session import barrier, spread
 
 __all__ = ["bigram_lm_score"]
 
@@ -62,7 +62,6 @@ def bigram_lm_score(
     """
     if k <= 0:
         raise ValueError("k must be > 0")
-    from .textstats import _spread
     from .tokenize import words_arrow
 
     toks = words_arrow(F.col(text_col))
@@ -70,7 +69,7 @@ def bigram_lm_score(
     # non-deterministic-marked so the size()>=2 filter cannot push below
     # it and re-evaluate it (guide §4.4 — the old JVM split ran twice
     # here, once under the pushed filter and once in the projection)
-    base = _spread(df).select(F.col(id_col).alias("id"), toks.alias("__ws")).where(
+    base = spread(df).select(F.col(id_col).alias("id"), toks.alias("__ws")).where(
         F.size("__ws") >= 2  # guard BEFORE sequence(): sequence(1, 0)
         # is a DESCENDING [1, 0] in Spark, not empty
     )

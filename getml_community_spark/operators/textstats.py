@@ -17,7 +17,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from ..session import barrier
+from ..session import barrier, spread
 from .tokenize import WORD, regex, shingles_arrow, split_expr, split_words, words_arrow
 
 __all__ = [
@@ -133,7 +133,7 @@ def vocabulary(
     the reference's textmining::Vocabulary (min document frequency +
     max size, Vocabulary.hpp:31-46). explode → two hash aggs; ordered
     by (df desc, word asc) for determinism."""
-    words = _spread(df).select(
+    words = spread(df).select(
         F.explode(F.array_distinct(words_arrow(F.col(text_col)))).alias("word")
     )
     return (
@@ -153,24 +153,6 @@ def _let(arr: Column, body) -> Column:
     re-split the document per shingle — 24x slower than this binding).
     """
     return F.element_at(F.transform(F.array(arr), body), 1)
-
-
-def _spread(df: DataFrame) -> DataFrame:
-    """Repartition a narrow input to the cluster's default parallelism.
-
-    The heavy expressions in this module (higher-order array lambdas,
-    n-gram transforms) are interpreted, not codegen, so a single-file
-    parquet scan would run them on ONE core (measured: 23 s for the
-    decontamination query at sf0.1 vs ~2 s spread). The contract file
-    spreads its single-file table scans with it for the same reason
-    (codec UDFs, percentile partial aggs). Metadata no-op when the input
-    already has enough partitions — the normal case at scale. Callers
-    must not depend on row order: the round-robin shuffle changes it.
-    """
-    target = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
-        return df.repartition(target)
-    return df
 
 
 # Gopher/MassiveText document-filter rules (Rae et al. 2021, §A1.1 —
@@ -224,7 +206,7 @@ def repetition_stats(
     table is reproducible cross-engine.
     """
     thresholds = REPETITION_THRESHOLDS
-    df = _spread(df)
+    df = spread(df)
     # tokenize INSIDE the gram kernel (guide §4.2): the old shape ran
     # the interpreted JVM split+filter, then shipped the token arrays
     # through Arrow into the kernel — the C-regex split in the same
@@ -341,7 +323,7 @@ def gopher_quality(
     - >= ``min_stop_hits`` of the 8 required stopwords (paper: 2)
     - duplicate-line fraction <= 0.30
     """
-    df = _spread(df)
+    df = spread(df)
     t = F.col(text_col)
     words = words_arrow(t)  # Arrow tokenizer, guide §4.2 (5x)
     lines = F.filter(
@@ -467,8 +449,8 @@ def ngram_contamination(
     aggregate on ``id_col``. Returns one row per input doc:
     (id, n_shingles, n_contaminated, contaminated).
     """
-    df = _spread(df)
-    benchmark = _spread(benchmark)
+    df = spread(df)
+    benchmark = spread(benchmark)
 
     def shingle_expr() -> Column:
         # tokenize + slide + join + distinct in ONE Arrow kernel (guide
@@ -534,7 +516,7 @@ def tfidf_topk(
     frequencies) + one broadcast of the single-row corpus count + one
     per-doc window for the top-k — no driver actions, no UDFs.
     """
-    df = _spread(df)
+    df = spread(df)
     words = df.select(
         F.col(id_col), F.explode(words_arrow(F.col(text_col))).alias("term")
     )
@@ -601,7 +583,7 @@ def text_stats(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     JVM-pipelined form now pays for itself: the Arrow stage needs the
     partitions to parallelize (measured 4.8 s single-partition vs 0.9 s
     spread at sf1-shape; no-op on multi-file inputs at scale)."""
-    df = _spread(df)
+    df = spread(df)
     t = F.col(text_col)
     stats = _let(
         words_arrow(t),
@@ -674,7 +656,7 @@ def bm25_scores(
             ),
         )
         base = barrier(
-            _spread(df)
+            spread(df)
             .select(F.col(id_col).alias("id"), row.alias("__s"))
             .select(
                 "id",

@@ -14,6 +14,10 @@ Late rows inside the watermark update their bucket before emission;
 rows later than that land in the batch re-roll path (gap-fill +
 recompute affected day partitions), same as the reference's
 fingerprint-invalidation story.
+
+A pre-1970 event time fails the query (:func:`_watermark`): Spark's
+first watermark is the epoch, so its late-row filter would silently
+drop the row. Pre-1970 data takes the batch path.
 """
 
 from __future__ import annotations
@@ -38,6 +42,16 @@ __all__ = [
     "stream_hist",
     "stream_distinct",
 ]
+
+
+def _watermark(stream: DataFrame, ts_col: str, watermark: str) -> DataFrame:
+    """``stream.withWatermark(ts_col, watermark)`` behind a guard that
+    fails the query on an event time before the epoch (the first
+    watermark), which the late-row filter would drop without a trace."""
+    ts = F.col(ts_col)
+    msg = F.concat(F.lit(f"{ts_col} before 1970 cannot be streamed: "), ts.cast("string"))
+    guarded = F.when(ts < F.timestamp_seconds(F.lit(0)), F.raise_error(msg)).otherwise(ts)
+    return stream.withColumn(ts_col, guarded).withWatermark(ts_col, watermark)
 
 
 def stream_exact_dedup(
@@ -66,7 +80,7 @@ def stream_exact_dedup(
         "__h2", F.xxhash64(F.lit(0x27D4EB4F), c)
     )
     return (
-        fp.withWatermark(ts_col, watermark)
+        _watermark(fp, ts_col, watermark)
         .dropDuplicatesWithinWatermark(["__h1", "__h2"])
         .drop("__h1", "__h2")
     )
@@ -91,7 +105,7 @@ def stream_tier(
     rows, keys, aggs, out = family.raw(stream, sec)
     w = F.window(F.col(ts_col), f"{sec} seconds")
     return (
-        rows.withWatermark(ts_col, watermark)
+        _watermark(rows, ts_col, watermark)
         .groupBy(F.col(source_col).alias("source"), w.alias("w"), *keys)
         .agg(*aggs)
         .select("source", F.col("w.start").alias("bucket_start"), *out)
@@ -214,7 +228,7 @@ def stream_sessions(
     sw = F.session_window(F.col(ts_col), f"{gap_seconds} seconds")
     epoch = lambda c: c.cast("timestamp").cast("long")  # noqa: E731
     return (
-        stream.withWatermark(ts_col, watermark)
+        _watermark(stream, ts_col, watermark)
         .groupBy(F.col(source_col).alias("source"), sw.alias("w"))
         .agg(
             F.min(epoch(F.col(ts_col))).alias("t_start"),
@@ -248,9 +262,8 @@ def stream_gorilla_segments(
     fires the points are sorted, encoded with the same bit-exact
     encode_segment as the batch path, and emitted once (append mode).
     Rows later than the watermark never reach the group and belong to
-    the batch re-roll path (RollupJob's input-fingerprint re-roll); so
-    does every pre-1970 row, since the first trigger's watermark is the
-    epoch itself.
+    the batch re-roll path (RollupJob's input-fingerprint re-roll); a
+    pre-1970 row fails the query (:func:`_watermark`).
 
     Output schema matches compress_rollup minus bytes_raw accounting
     nuances: (source, day, n_points, bytes_raw, bytes_compressed, data).
@@ -313,7 +326,7 @@ def stream_gorilla_segments(
         state.setTimeoutTimestamp(max(day_end_ms, state.getCurrentWatermarkMs() + 1))
 
     prepped = (
-        stream.withWatermark(ts_col, watermark)
+        _watermark(stream, ts_col, watermark)
         .withColumn("__epoch", F.col(ts_col).cast("timestamp").cast("long"))
         .withColumn("day", epoch_day(F.col("__epoch")))
         .withColumn("__val", F.col(value_col).cast("double"))
@@ -375,7 +388,7 @@ def _source_walk(
     # timestamp column would inherit the watermark tag and streaming
     # rejects two event-time columns per stream)
     prepped = (
-        stream.withWatermark(ts_col, watermark)
+        _watermark(stream, ts_col, watermark)
         .withColumn("__tsc", F.col(ts_col).cast("timestamp").cast("long"))
         .withColumn("__val", F.col(value_col).cast("double"))
         .select(F.col(source_col).cast("string").alias(source_col), "__tsc", "__val")

@@ -69,10 +69,7 @@ def test_stream_gorilla_segments_stateful_close(spark, tmp_path):
 
     d1_epochs = [day1 + i * 600 for i in range(100)]
     d1_vals = [100.0 + (i % 7) * 0.25 for i in range(100)]
-    # 1969-12-31T23:00Z: the stream's late-row filter drops it (event
-    # time below the first batch's watermark, 0) — it belongs to the
-    # batch path and must not leak into any segment
-    write_points("d1", [-3600] + d1_epochs, [7.5] + d1_vals)
+    write_points("d1", d1_epochs, d1_vals)
 
     sink = str(tmp_path / "segs_out")
 
@@ -122,7 +119,7 @@ def test_stream_gorilla_segments_stateful_close(spark, tmp_path):
     assert (vals == np.array(d1_vals)).all()
 
     # the stream keys segments by compress_rollup's floored day rule
-    # (1969-12-31 for the pre-epoch point), not by truncation toward 0
+    # (1969-12-31 for a pre-epoch epoch), not by truncation toward 0
     from getml_community_spark.functions.gorilla import epoch_day
 
     probe = spark.createDataFrame([(-3600,)], "e long")
@@ -132,6 +129,41 @@ def test_stream_gorilla_segments_stateful_close(spark, tmp_path):
     ).parquet(src_dir)
     plan = stream_gorilla_segments(stream)._jdf.queryExecution().analyzed().toString()
     assert "date_from_unix_date(cast(FLOOR(" in plan, plan
+
+
+def test_stream_rollup_rejects_pre_1970_event_time(spark, tmp_path):
+    """A pre-1970 event time fails the query: Spark's first watermark is
+    the epoch, so its late-row filter would drop the row from the closed
+    windows without a trace."""
+    from pyspark.errors import StreamingQueryException
+    from pyspark.sql import functions as F
+
+    from getml_community_spark.streaming.stream_rollup import stream_rollup
+
+    src_dir = str(tmp_path / "pts")
+    # 1969-12-31T23:00Z..23:01Z, then a row 3 hours later that closes
+    # their windows
+    epochs = [-3600, -3570, -3540, -3600 + 3 * 3600]
+    spark.createDataFrame(
+        [(e, 1.0) for e in epochs], "e long, n_tok double"
+    ).select(
+        F.lit("src-0").alias("source"),
+        F.timestamp_seconds(F.col("e")).alias("event_time"),
+        "n_tok",
+    ).coalesce(1).write.parquet(src_dir)
+    stream = spark.readStream.schema(
+        "source string, event_time timestamp, n_tok double"
+    ).parquet(src_dir)
+    q = (
+        stream_rollup(stream, "1m", watermark="10 minutes")
+        .writeStream.format("memory")
+        .queryName("pre_1970_rollup")
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    with pytest.raises(StreamingQueryException, match="USER_RAISED_EXCEPTION"):
+        q.awaitTermination(300)
 
 
 def test_streamed_tier_feeds_batch_cascade(spark, tmp_path):
