@@ -20,6 +20,7 @@ from __future__ import annotations
 
 import json
 import os
+import threading
 import time
 import uuid
 from dataclasses import dataclass, field
@@ -27,6 +28,22 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 
 __all__ = ["SnapshotTable", "LineageLog", "JobState"]
+
+
+def _nullable(t):
+    """``t`` with every field, element and value nullable: the schema a
+    Spark parquet write stores (and schema inference reads back)."""
+    from pyspark.sql.types import ArrayType, MapType, StructField, StructType
+
+    if isinstance(t, StructType):
+        return StructType(
+            [StructField(f.name, _nullable(f.dataType), True, f.metadata) for f in t]
+        )
+    if isinstance(t, ArrayType):
+        return ArrayType(_nullable(t.elementType), True)
+    if isinstance(t, MapType):
+        return MapType(_nullable(t.keyType), _nullable(t.valueType), True)
+    return t
 
 
 def _atomic_write_json(path: str, obj) -> None:
@@ -181,6 +198,9 @@ class SnapshotTable:
         if self.partition_by:
             writer = writer.partitionBy(*self.partition_by)
         writer.parquet(path)
+        # the written data schema, so read() plans the entry without a
+        # schema-inference job
+        schema = self._data_schema(df)
         new_entries = []
         if self.partition_by:
             # capture partition column types so read() can restore them
@@ -196,10 +216,11 @@ class SnapshotTable:
                         "path": sub,
                         "partition": self._parse_partition(sub, path),
                         "types": types,
+                        "schema": schema,
                     }
                 )
         else:
-            new_entries.append({"path": path, "partition": {}})
+            new_entries.append({"path": path, "partition": {}, "schema": schema})
         with self._writer_lock():
             cur = self.current()
             meta = None
@@ -212,6 +233,14 @@ class SnapshotTable:
                 meta["stream_batches"] = sb
             entries = (cur.entries if cur else []) + new_entries
             return self._commit(entries, meta)
+
+    def _data_schema(self, df: DataFrame) -> dict:
+        """JSON form of the schema ``df``'s parquet files hold: its
+        columns minus the partition columns, all nullable."""
+        from pyspark.sql.types import StructType
+
+        data = StructType([f for f in df.schema if f.name not in self.partition_by])
+        return _nullable(data).jsonValue()
 
     def _partition_dirs(self, base: str) -> list[str]:
         """Leaf partition directories under an append dir."""
@@ -311,15 +340,12 @@ class SnapshotTable:
 
         from pyspark.sql import functions as F
 
-        dfs, types = [], {}
-        for es in selected.values():
-            for e in es:
-                d = spark.read.parquet(e["path"])
-                types = e.get("types", types) or types
-                for k, v in e["partition"].items():
-                    d = d.withColumn(k, F.lit(v).cast(types.get(k, "string")))
-                dfs.append(d)
-        df = reduce(lambda a, b: a.unionByName(b), dfs)
+        olds = [e for es in selected.values() for e in es]
+        types = next((e["types"] for e in olds if e.get("types")), {})
+        df = reduce(
+            lambda a, b: a.unionByName(b), [self._entry_df(spark, e) for e in olds]
+        )
+        schema = self._data_schema(df)
 
         dir_id = uuid.uuid4().hex[:16]
         path = os.path.join(self.root, "data", dir_id)
@@ -335,12 +361,13 @@ class SnapshotTable:
                     "path": sub,
                     "partition": self._parse_partition(sub, path),
                     "types": types,
+                    "schema": schema,
                 }
                 for sub in self._partition_dirs(path)
             ]
         else:
             df.coalesce(1).write.mode("error").parquet(path)
-            new_entries = [{"path": path, "partition": {}}]
+            new_entries = [{"path": path, "partition": {}, "schema": schema}]
 
         # Commit under the writer lock, re-reading the CURRENT manifest:
         # the expensive rewrite above ran lock-free, so appends/deletes
@@ -445,10 +472,16 @@ class SnapshotTable:
     @staticmethod
     def _entry_df(spark: SparkSession, e: dict):
         """One manifest entry → DataFrame with its partition columns
-        restored as typed literals."""
+        restored as typed literals. An entry with a recorded ``schema``
+        is read with it (no schema-inference job); entries written
+        before schemas were recorded fall back to inference."""
         from pyspark.sql import functions as F
+        from pyspark.sql.types import StructType
 
-        d = spark.read.parquet(e["path"])
+        reader = spark.read
+        if "schema" in e:
+            reader = reader.schema(StructType.fromJson(e["schema"]))
+        d = reader.parquet(e["path"])
         types = e.get("types", {})
         for k, v in e["partition"].items():
             col = F.lit(v)
@@ -469,14 +502,7 @@ class SnapshotTable:
         from pyspark.sql import functions as F
 
         if not entries:
-            d = spark.read.parquet(fallback_entry["path"]).where(F.lit(False))
-            types = fallback_entry.get("types", {})
-            for k, v in fallback_entry["partition"].items():
-                col = F.lit(v)
-                if k in types:
-                    col = col.cast(types[k])
-                d = d.withColumn(k, col)
-            return d
+            return self._entry_df(spark, fallback_entry).where(F.lit(False))
         # allowMissingColumns: additive schema evolution (e.g. the
         # Gorilla chunk-index columns added to an existing segments
         # store) — entries written before the new columns read back with
@@ -617,6 +643,9 @@ class JobState:
     def __init__(self, root: str):
         self.root = root
         os.makedirs(root, exist_ok=True)
+        # mark() rewrites one shared file; RollupJob marks from one
+        # thread per tier family
+        self._lock = threading.Lock()
 
     def _path(self, spec_hash: str, input_snapshot: str) -> str:
         return os.path.join(self.root, f"state-{spec_hash}-{input_snapshot}.json")
@@ -631,11 +660,12 @@ class JobState:
     def mark(
         self, spec_hash: str, input_snapshot: str, units: list[tuple[str, str]]
     ) -> None:
-        done = self.completed(spec_hash, input_snapshot)
-        done.update(units)
-        _atomic_write_json(
-            self._path(spec_hash, input_snapshot), {"done": sorted(done)}
-        )
+        with self._lock:
+            done = self.completed(spec_hash, input_snapshot)
+            done.update(units)
+            _atomic_write_json(
+                self._path(spec_hash, input_snapshot), {"done": sorted(done)}
+            )
 
     # ---- per-day input fingerprints (late-data detection) ---------- #
     def _input_path(self, spec_hash: str) -> str:

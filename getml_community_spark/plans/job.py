@@ -17,16 +17,22 @@ and apply retention. Resume-safety comes from snapshot isolation:
 Scale notes: the per-day filter prunes the parquet scan to pending
 partitions (partition pruning — the semi-join prune of the reference's
 tsindex build, helpers/DataFrame.cpp:306-318); all pending days are
-processed in ONE Spark job per tier (no per-day driver loop); rows_in
-per day comes from the same shuffle as the rollup itself.
+processed together (no per-day driver loop). The tier families are
+independent mergeable states, so each rolls on its own driver thread
+(the core thread also writes the Gorilla segments) and their Spark jobs
+run side by side; every tier is materialised once, by its append, and
+its per-day ``rows_out`` is observed on that write (``df.observe``)
+instead of counted by a separate job.
 """
 
 from __future__ import annotations
 
 import time
+from concurrent.futures import ThreadPoolExecutor
 from typing import NamedTuple
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark import inheritable_thread_target
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from ..checkpoint import JobState, LineageLog, SnapshotTable
 from ..functions.gorilla import compress_rollup
@@ -53,6 +59,32 @@ class _Family(NamedTuple):
 def _days(table: SnapshotTable) -> set[str]:
     """Day partitions committed to ``table`` (manifest read, no scan)."""
     return {p.get("day") for p in table.partitions() if p.get("day")}
+
+
+def _append_observed(
+    table: SnapshotTable, df: DataFrame, days: list, sum_col: str | None = None
+) -> tuple[str, dict, float]:
+    """Append ``df`` to ``table`` and observe, on that same write, its
+    rows per ``day`` (and the per-day sum of ``sum_col``): no second
+    materialisation for the counts. Returns (snapshot id,
+    {day: (rows, sum)}, append wall seconds)."""
+    obs = Observation()
+    day = F.col("day")
+    metrics = [F.count_if(day == F.lit(d)).alias(f"n{i}") for i, d in enumerate(days)]
+    if sum_col is not None:
+        metrics += [
+            F.sum(F.when(day == F.lit(d), F.col(sum_col))).alias(f"s{i}")
+            for i, d in enumerate(days)
+        ]
+    t0 = time.perf_counter()
+    snap = table.append(df.observe(obs, *metrics))
+    wall = time.perf_counter() - t0
+    m = obs.get
+    return (
+        snap,
+        {d: (m[f"n{i}"], m.get(f"s{i}") or 0) for i, d in enumerate(days)},
+        wall,
+    )
 
 
 class RollupJob:
@@ -384,61 +416,95 @@ class RollupJob:
         pending: list,
         in_stats: dict,
         in_snap: str,
-        lineage_rows: list,
-        keep_base: bool = False,
-    ) -> tuple[DataFrame, dict, str]:
+        with_segments: bool = False,
+    ) -> tuple[list, list, dict]:
         """Roll one tier family over the pending days — the base tier from
-        raw (ONE Spark job for all pending days), then each coarser tier
-        cascaded from the tier below, kept to the pending days. Per tier:
-        cache → per-day row counts → append → lineage → mark, releasing
-        each tier's cache once the next one is appended (a long-lived
-        Spark driver otherwise accumulates block-manager storage across
-        run() calls). ``keep_base`` leaves the base tier cached for the
-        caller to release.
+        raw (all pending days together), then each coarser tier cascaded
+        from the tier below, kept to the pending days. Per tier: cache →
+        append, with its per-day row counts observed on that write →
+        lineage → mark, releasing each tier's cache once the next one is
+        appended (a long-lived Spark driver otherwise accumulates
+        block-manager storage across run() calls). ``with_segments``
+        (the core family) also Gorilla-compresses the cached base tier
+        into the segments table. run() calls this once per family, each
+        on its own driver thread.
 
         Lineage ``rows_in`` is the input rows per day for the base tier
         and the source tier's ``rows_out`` for a cascaded one;
-        ``wall_seconds`` is the tier's count + append wall. Returns the
-        base tier, its per-day row counts and its snapshot id."""
+        ``wall_seconds`` is the tier's append wall. Returns (tier lineage
+        rows, segments lineage rows, snapshot id per table name)."""
         spec_hash = self.spec.spec_hash()
         rows_in = {d: s[0] for d, s in in_stats.items()}
-        lower = base = None
-        for tier in self.spec.tiers:
-            if lower is None:
-                cur = self._from_raw(family, sel, tier).withColumn(
-                    "day", F.to_date("bucket_start")
+        rows, seg_rows, snaps = [], [], {}
+        held: list[DataFrame] = []  # cached tiers not yet released
+        try:
+            for tier in self.spec.tiers:
+                if held:
+                    cur = bucket_rollup(
+                        held[-1].drop("day"), family.family.merge, tier
+                    )
+                    cur = cur.withColumn("day", F.to_date("bucket_start")).where(
+                        F.col("day").isin(pending)
+                    )
+                else:
+                    cur = self._from_raw(family, sel, tier).withColumn(
+                        "day", F.to_date("bucket_start")
+                    )
+                held.append(cur.cache())
+                name = family.prefix + tier
+                snap, counts, wall = _append_observed(
+                    family.tables[tier], held[-1], pending
                 )
-            else:
-                cur = bucket_rollup(lower.drop("day"), family.family.merge, tier)
-                cur = cur.withColumn("day", F.to_date("bucket_start")).where(
-                    F.col("day").isin(pending)
-                )
-            cur = cur.cache()
-            t0 = time.perf_counter()
-            rows_out = {
-                str(r["day"]): r["rows"]
-                for r in cur.groupBy("day")
-                .agg(F.count(F.lit(1)).alias("rows"))
-                .collect()
-            }
-            snap = family.tables[tier].append(cur)
-            wall = time.perf_counter() - t0
-            name = family.prefix + tier
-            lineage_rows += [
-                self._lineage_row(
-                    name, d, snap, rows_in.get(d, 0), rows_out.get(d, 0), wall
-                )
-                for d in pending
-            ]
-            self.state.mark(spec_hash, in_snap, [(name, d) for d in pending])
-            if lower is None:
-                base = (cur, rows_out, snap)
-            elif lower is not base[0] or not keep_base:
-                lower.unpersist()
-            lower, rows_in = cur, rows_out
-        if lower is not base[0] or not keep_base:
-            lower.unpersist()
-        return base
+                snaps[name] = snap
+                rows_out = {d: n for d, (n, _) in counts.items()}
+                rows += [
+                    self._lineage_row(
+                        name, d, snap, rows_in.get(d, 0), rows_out[d], wall
+                    )
+                    for d in pending
+                ]
+                self.state.mark(spec_hash, in_snap, [(name, d) for d in pending])
+                if with_segments and len(held) == 1:
+                    seg_rows, snaps["segments"] = self._append_segments(
+                        held[0], pending, rows_out
+                    )
+                if len(held) > 1:
+                    held.pop(0).unpersist()
+                rows_in = rows_out
+        finally:
+            for df in held:
+                df.unpersist()
+        return rows, seg_rows, snaps
+
+    def _append_segments(
+        self, agg: DataFrame, pending: list, rows_in: dict
+    ) -> tuple[list, str]:
+        """Gorilla-compress the base tier ``agg`` and append the segments;
+        per-day segment counts and Σ bytes_compressed are observed on the
+        write. Returns (lineage rows, snapshot id)."""
+        spec = self.spec
+        segs = compress_rollup(
+            agg.drop("day"),
+            ts_col="bucket_start",
+            value_col=spec.compress_value,
+            source_col="source",
+            with_stats=spec.segment_stats,
+        )
+        snap, stats, wall = _append_observed(
+            self.segments, segs, pending, sum_col="bytes_compressed"
+        )
+        return [
+            self._lineage_row(
+                f"segments[{spec.compress_tier}]",
+                d,
+                snap,
+                rows_in.get(d, 0),
+                stats[d][0],
+                wall,
+                int(stats[d][1]),
+            )
+            for d in pending
+        ], snap
 
     def run(self, max_partitions: int | None = None) -> dict:
         """Process up to ``max_partitions`` pending input days (None =
@@ -552,56 +618,44 @@ class RollupJob:
             )
         summary["tokens_processed"] = int(sum(t for _, t in in_stats.values()))
 
-        # ---- every tier family: core first, then hist / dist ----
-        # the core base tier stays cached until its Gorilla segments
-        # are appended
-        lineage_rows: list = []
-        core, *aux = self._families
-        agg, base_rows, snap = self._roll_family(
-            core, sel, pending, in_stats, in_snap, lineage_rows, keep_base=True
+        # ---- every tier family, each on its own driver thread ----
+        # the families are independent mergeable states over the same
+        # pending rows, so their Spark jobs run side by side; each target
+        # is wrapped (per family: its own copy of the local properties)
+        # so every job keeps the caller's job group, properties and tags.
+        # A failing family re-raises once the others finish; the next
+        # run repairs the partial day through _reconcile_done.
+        core = self._families[0]
+        with ThreadPoolExecutor(len(self._families)) as pool:
+            futures = [
+                pool.submit(
+                    inheritable_thread_target(spark)(self._roll_family),
+                    family,
+                    sel,
+                    pending,
+                    in_stats,
+                    in_snap,
+                    with_segments=family is core,
+                )
+                for family in self._families
+            ]
+            results = [f.result() for f in futures]
+        # lineage in family order (core, hist, dist), segments last
+        self.lineage.append(
+            [r for rows, _, _ in results for r in rows]
+            + [r for _, seg_rows, _ in results for r in seg_rows]
         )
-        for family in aux:
-            self._roll_family(family, sel, pending, in_stats, in_snap, lineage_rows)
-
-        # ---- Gorilla compression of the configured tier ----
-        segs = compress_rollup(
-            agg.drop("day"),
-            ts_col="bucket_start",
-            value_col=spec.compress_value,
-            source_col="source",
-            with_stats=spec.segment_stats,
-        ).cache()
-        t_seg = time.perf_counter()
-        seg_stats = {
-            str(r["day"]): (r["n"], r["b"])
-            for r in segs.groupBy("day")
-            .agg(F.count(F.lit(1)).alias("n"), F.sum("bytes_compressed").alias("b"))
-            .collect()
-        }
-        ssnap = self.segments.append(segs)
-        t_seg = time.perf_counter() - t_seg
-        lineage_rows += [
-            self._lineage_row(
-                f"segments[{spec.compress_tier}]",
-                d,
-                ssnap,
-                base_rows.get(d, 0),
-                seg_stats.get(d, (0, 0))[0],
-                t_seg,
-                int(seg_stats.get(d, (0, 0))[1] or 0),
-            )
-            for d in pending
-        ]
-        self.lineage.append(lineage_rows)
-        segs.unpersist()
-        agg.unpersist()
         self.state.record_input(spec_hash, in_snap, fps)
 
         # ---- retention: metadata-only expiry per tier ----
         self.apply_retention()
 
         summary["wall_seconds"] = time.time() - t0
-        summary["snapshot_ids"] = {spec.tiers[0]: snap, "segments": ssnap}
+        snaps = results[0][2]
+        summary["snapshot_ids"] = {
+            spec.tiers[0]: snaps[spec.tiers[0]],
+            "segments": snaps["segments"],
+        }
         return summary
 
     # ------------------------------------------------------------ #

@@ -106,7 +106,7 @@ def test_lineage_reconciles(spark, corpus_path, all_families_job):
 
 def test_run_lineage_records_wall_seconds(all_families_job):
     """Every lineage row run() writes (each family's tiers and the
-    segments) carries the tier's measured count + append wall."""
+    segments) carries the tier's measured append wall."""
     lin = all_families_job.lineage.read_pandas()
     tiers = set(lin["tier"])
     assert {"1d", "hist_1d", "dist_1d"} <= tiers
@@ -987,3 +987,183 @@ def test_rollup_job_incremental_snapshot_input(spark, tmp_path):
     # third run with no new appends: fast path, nothing to do
     s3 = RollupJob(spark, RollupSpec(), ing_root, out).run()
     assert s3["days_processed"] == 0
+
+
+def test_read_plans_recorded_schema_without_jobs(spark, tmp_path):
+    """append() records each entry's data schema, so planning a read
+    starts no Spark job (no schema inference) and reads back the schema
+    inference would give; an entry without a recorded schema (written
+    before schemas were recorded) still reads through inference."""
+    import json
+    import os
+
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import StructType
+
+    t = SnapshotTable(str(tmp_path / "sch"), partition_by=["p"])
+    for lo in (0, 10):
+        t.append(
+            spark.range(lo, lo + 10)  # non-nullable id
+            .withColumn("arr", F.array(F.col("id").cast("int")))
+            .withColumn("m", F.create_map(F.lit("k"), F.col("id") * 0.5))
+            .withColumn("st", F.struct(F.col("id").alias("i")))
+            .withColumn("p", (F.col("id") % 2).cast("int"))
+        )
+    entries = t.current().entries
+    assert entries and all("schema" in e for e in entries)
+    for e in entries:
+        rec = spark.read.schema(StructType.fromJson(e["schema"])).parquet(e["path"])
+        assert rec.schema == spark.read.parquet(e["path"]).schema
+
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup())
+    df = t.read(spark)
+    assert set(tracker.getJobIdsForGroup()) == before
+    assert df.count() == 20
+
+    # a hand-written entry without "schema" (the pre-schema manifest
+    # shape) reads through inference
+    path = os.path.join(t.root, "data", "manual", "p=7")
+    spark.range(100, 103).withColumn(
+        "arr", F.array(F.col("id").cast("int"))
+    ).write.parquet(path)
+    manual = {"path": path, "partition": {"p": "7"}, "types": {"p": "int"}}
+    sid = t._commit(entries + [manual])
+    with open(os.path.join(t.root, "snapshots", f"{sid}.json")) as f:
+        assert "schema" not in json.load(f)["entries"][-1]
+    got = t.read(spark)
+    assert got.count() == 23
+    assert sorted(r.id for r in got.where(F.col("p") == 7).collect()) == [100, 101, 102]
+    assert got.where(F.col("p") == 7).where(F.col("m").isNotNull()).count() == 0
+
+
+def test_jobstate_mark_from_threads_loses_no_unit(tmp_path):
+    """mark() rewrites one shared file; concurrent marks keep every unit."""
+    import sys
+    import threading
+
+    from getml_community_spark.checkpoint import JobState
+
+    state = JobState(str(tmp_path / "state"))
+
+    def mark(k):
+        for d in range(40):
+            state.mark("spec", "snap", [(f"t{k}", f"d{d}")])
+
+    threads = [threading.Thread(target=mark, args=(k,)) for k in range(8)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=60)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(th.is_alive() for th in threads)
+    assert state.completed("spec", "snap") == {
+        (f"t{k}", f"d{d}") for k in range(8) for d in range(40)
+    }
+
+
+# Spark jobs of the one-day catch-up below when the families rolled one
+# after another and each tier's per-day counts were a separate collect
+SEQUENTIAL_CATCHUP_JOBS = 70
+
+
+@pytest.fixture(scope="module")
+def grouped_catchup(spark, tmp_path_factory):
+    """A build, then a one-day late catch-up with all three families run
+    under a job group: (jobs in the group, jobs started outside any)."""
+    from pyspark.sql import functions as F
+
+    from getml_community_spark.datagen import corpus_spark
+
+    root = tmp_path_factory.mktemp("grp")
+    ing = SnapshotTable(str(root / "in"), partition_by=["event_date"])
+    corpus = corpus_spark(spark, 3000, with_tokens=False).withColumn(
+        "event_date", F.to_date("event_time")
+    )
+    ing.append(corpus)
+    spec = RollupSpec(hist_bin_width=16.0, distinct_col="doc_id")
+    job = RollupJob(spark, spec, str(root / "in"), str(root / "out"))
+    job.run()
+    day = sorted(p["event_date"] for p in ing.partitions())[3]
+    ing.append(corpus.where(F.col("event_date") == F.lit(day)).limit(100))
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    before = set(tracker.getJobIdsForGroup())
+    sc.setJobGroup("catchup", "catchup")
+    try:
+        summary = job.run()
+    finally:
+        for key in ("jobGroup.id", "job.description", "job.interruptOnCancel"):
+            sc.setLocalProperty(f"spark.{key}", None)
+    assert summary["days_processed"] == 1
+    return (
+        len(tracker.getJobIdsForGroup("catchup")),
+        set(tracker.getJobIdsForGroup()) - before,
+    )
+
+
+def test_concurrent_families_keep_caller_job_group(grouped_catchup):
+    """Every job the family threads start carries the caller's group."""
+    jobs, ungrouped = grouped_catchup
+    assert jobs > 0
+    assert not ungrouped, ungrouped
+
+
+def test_catchup_job_count_cut(grouped_catchup):
+    """Observed per-day counts and the recorded manifest schema cut a
+    catch-up's jobs to at most two thirds of the sequential roll's."""
+    jobs, _ = grouped_catchup
+    assert jobs <= SEQUENTIAL_CATCHUP_JOBS * 2 / 3, jobs
+
+
+def test_family_failure_then_rerun_equals_uninterrupted(
+    spark, corpus_path, all_families_job, tmp_path
+):
+    """One family's append raising mid-run fails run() once the other
+    families finish; the next run() repairs the partial days and leaves
+    tables and lineage equal to an uninterrupted run's."""
+    ref = all_families_job
+    job = RollupJob(spark, ref.spec, corpus_path, str(tmp_path / "fail"))
+    table = job.hist_tables["1h"]
+    append = table.append
+    calls = []
+
+    def fail_once(df, *args, **kwargs):
+        calls.append(1)
+        if len(calls) == 1:
+            raise RuntimeError("injected append failure")
+        return append(df, *args, **kwargs)
+
+    table.append = fail_once
+    with pytest.raises(RuntimeError, match="injected"):
+        job.run()
+    # the other families finished before the failure surfaced: the
+    # store is left partial, with no lineage
+    assert job.segments.partitions() and job.dist_tables["1d"].partitions()
+    assert not job.hist_tables["1h"].partitions()
+    assert job.lineage.read_pandas().empty
+    job.run()
+
+    for name, tbl in ref._all_tables().items():
+        a = tbl.read(spark).toPandas()
+        b = job._all_tables()[name].read(spark).toPandas()
+        binary = (bytes, bytearray)  # HLL sketches, Gorilla blobs
+        for df in (a, b):
+            for c in df.columns:
+                if df[c].dtype == object:
+                    df[c] = df[c].map(
+                        lambda v: bytes(v).hex() if isinstance(v, binary) else v
+                    ).astype(str)
+        a = a.sort_values(list(a.columns)).reset_index(drop=True)
+        b = b.sort_values(list(b.columns)).reset_index(drop=True)
+        pd.testing.assert_frame_equal(a, b, obj=name)
+    volatile = ["wall_seconds", "committed_at", "snapshot_id"]
+    pd.testing.assert_frame_equal(
+        ref.lineage.read_pandas().drop(columns=volatile),
+        job.lineage.read_pandas().drop(columns=volatile),
+    )

@@ -19,6 +19,8 @@ from getml_community_spark.plans import RollupJob, RollupSpec
 
 from .conftest import assert_frames_equal_unordered
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 RUNNER = """
 import sys
 sys.path.insert(0, {repo!r})
@@ -45,7 +47,7 @@ def test_sigkill_mid_job_then_resume(spark, tmp_path):
 
     # crashed run: kill the subprocess while it is working
     crash_out = str(tmp_path / "crash")
-    code = RUNNER.format(repo="/root/repo", corpus=corpus, out=crash_out)
+    code = RUNNER.format(repo=REPO, corpus=corpus, out=crash_out)
     proc = subprocess.Popen(
         [sys.executable, "-c", code],
         stdout=subprocess.PIPE,

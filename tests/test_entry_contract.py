@@ -6,6 +6,7 @@ driver does."""
 from __future__ import annotations
 
 import math
+import os
 import sys
 
 import duckdb
@@ -15,7 +16,7 @@ import pytest
 
 from .conftest import assert_frames_equal_unordered
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import __spark_entry__ as entrymod  # noqa: E402
 
 SF = "/root/testdata/sf0.001"
